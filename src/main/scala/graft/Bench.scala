@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
@@ -19,13 +21,10 @@ import org.apache.spark.sql.SparkSession
   *
   * The headline per-query number (and the total) is the MIN across
   * runs: on a machine the bench does not own, median folds in whatever
-  * else the host was doing during 2-of-3 passes (the r7 artifact had
-  * 47x swings on IO-heavy queries from exactly that), while
-  * min-of-warm-runs is the reproducible cost of the plan itself.
-  *
-  * Two trust signals qualify the min (r8 analysis: contention arrives
-  * in multi-minute BURSTS that hit runs of consecutive queries — r8 saw
-  * q63..q67 lose ~100 s in one round and run clean in the other two):
+  * else the host was doing, while min-of-warm-runs is the reproducible
+  * cost of the plan itself. Two trust signals qualify the min
+  * (contention arrives in multi-minute bursts that hit runs of
+  * consecutive queries):
   *
   *  - CONSENSUS: after the round-robin, any query whose min is not
   *    corroborated by a second run within 1.5x gets up to
@@ -39,26 +38,72 @@ import org.apache.spark.sql.SparkSession
   *    Per-run gc seconds ship in `bench_stats.json` next to the walls.
   *
   * `spread_gt3` (max/min over ALL runs > 3x) stays as the raw
-  * contention tell, and `bench_stats.json` carries
-  * min/median/stdev/raw runs/gc per query so a plan regression stays
-  * separable from run-to-run noise.
+  * contention tell. `bench_stats.json` carries min/median/stdev/raw
+  * runs/gc per query, so a plan regression stays separable from noise,
+  * and what the min run cost Spark — `jobs`, `stages`, `tasks`, `task_s`
+  * (summed executor run time), `shuffle_bytes` (read + written),
+  * `input_bytes` — from the always-on [[Bench.RunStats]] listener. A
+  * wall far above task_s/cores is driver-bound (planning, manifest IO,
+  * job submission): the fix there is fewer jobs, not faster tasks.
   */
 object Bench {
+
+  /** Local property naming a job's timed run: `<query>#<run>`. */
+  val RunKey = "graft.bench.run"
+
+  /** Runs `f` with every job it submits tagged `tag`. */
+  def tagged[T](sc: SparkContext, tag: String)(f: => T): T = {
+    sc.setLocalProperty(RunKey, tag)
+    try f finally sc.setLocalProperty(RunKey, null)
+  }
+
+  /** Spark work of one run tag. */
+  final case class Counts(jobs: Long = 0, stages: Long = 0, tasks: Long = 0,
+                          taskMs: Long = 0, shuffleBytes: Long = 0,
+                          inputBytes: Long = 0)
+
+  /** Attributes jobs, stages and tasks to the [[RunKey]] of the thread
+    * that submitted the job; stages map to their job's tag at job
+    * start. Work submitted without a tag lands under "" rather than
+    * being dropped. Events arrive asynchronously: read `counts` after
+    * the listener bus has drained (`spark.stop()` drains it).
+    */
+  final class RunStats extends SparkListener {
+    private val stageTag = scala.collection.concurrent.TrieMap.empty[Int, String]
+    private val byTag = scala.collection.concurrent.TrieMap.empty[String, Counts]
+    // one bus thread delivers every event; immutable Counts published
+    // through the TrieMap keep concurrent readers consistent
+    private def add(tag: String)(f: Counts => Counts): Unit =
+      byTag(tag) = f(byTag.getOrElse(tag, Counts()))
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      val tag = Option(j.properties).flatMap(p => Option(p.getProperty(RunKey)))
+        .getOrElse("")
+      j.stageIds.foreach(stageTag(_) = tag)
+      add(tag)(c => c.copy(jobs = c.jobs + 1))
+    }
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      add(stageTag.getOrElse(s.stageInfo.stageId, ""))(c =>
+        c.copy(stages = c.stages + 1, tasks = c.tasks + s.stageInfo.numTasks))
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      Option(t.taskMetrics).foreach { m =>
+        add(stageTag.getOrElse(t.stageId, ""))(c => c.copy(
+          taskMs = c.taskMs + m.executorRunTime,
+          shuffleBytes = c.shuffleBytes + m.shuffleReadMetrics.totalBytesRead +
+            m.shuffleWriteMetrics.bytesWritten,
+          inputBytes = c.inputBytes + m.inputMetrics.bytesRead))
+      }
+
+    def counts: Map[String, Counts] = byTag.toMap
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val nRetries = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRIES", "3").toInt
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tuning.install(spark)
+    val spark = Session()
+    val runStats = new RunStats
+    spark.sparkContext.addSparkListener(runStats)
 
     // SPARK_GRAFT_BENCH_ONLY: comma-separated name-prefix filter for
     // focused investigations (e.g. regression re-runs of one query
@@ -110,13 +155,14 @@ object Bench {
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
       val g0 = gcMillis()
       val t0 = System.nanoTime()
-      val wall =
+      val wall = tagged(spark.sparkContext, s"$name#${runs(name).length}") {
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9 }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
         }
+      }
       runs(name) = runs(name) :+ (wall, (gcMillis() - g0) / 1e3)
     }
     for (round <- 1 to nRuns) {
@@ -162,6 +208,10 @@ object Bench {
       }
     }
 
+    // every job event is in once the bus has drained
+    spark.stop()
+    val counts = runStats.counts
+
     def median(v: Seq[Double]): Double = {
       val s = v.sorted
       val n = s.length
@@ -188,18 +238,23 @@ object Bench {
       val sd = if (ok) stdev(good) else -1.0
       (name, mn, med, sd, rs, ok)
     }
-    // The primary stdout line must stay COMPACT (the driver captures a
-    // bounded tail; r5/r6 inlined all per-query medians and the line
-    // outgrew the window → "parsed": null). Inline only the slowest 10
-    // queries; the complete per-query detail lives in bench_stats.json.
+    // The primary stdout line must stay COMPACT: the driver captures a
+    // bounded tail, and inlining every query's stats (r3, r5/r6) pushed
+    // the line's head past it and broke the parse. Inline only the
+    // slowest 10; the full per-query detail goes to a file + stderr.
     val qs = results.sortBy { case (_, mn, _, _, _, _) => -mn }.take(10)
       .map { case (k, mn, _, _, _, _) => "\"" + k + "\":" + f"$mn%.3f" }
       .mkString("{", ",", "}")
     val stats = results.map { case (k, mn, med, sd, rs, _) =>
       val raw = rs.map(r => f"$r%.3f").mkString("[", ",", "]")
       val gcs = runs(k).map(r => f"${r._2}%.3f").mkString("[", ",", "]")
+      // the min run's Spark work (the first run when none succeeded)
+      val best = rs.zipWithIndex.filter(_._1 > 0).minByOption(_._1).fold(0)(_._2)
+      val c = counts.getOrElse(s"$k#$best", Counts())
       "\"" + k + "\":" +
-        f"""{"min":$mn%.3f,"median":$med%.3f,"stdev":$sd%.3f,"runs":$raw,"gc":$gcs}"""
+        f"""{"min":$mn%.3f,"median":$med%.3f,"stdev":$sd%.3f,"runs":$raw,"gc":$gcs,""" +
+        f""""jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks},"task_s":${c.taskMs / 1e3}%.3f,""" +
+        f""""shuffle_bytes":${c.shuffleBytes},"input_bytes":${c.inputBytes}}"""
     }.mkString("{", ",", "}")
     val failed = results.collect { case (k, _, _, _, _, false) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
@@ -208,11 +263,6 @@ object Bench {
       ok && mn > 0 && rs.max / mn > 3.0 }
     val consensusLt2 = results.count { case (_, _, _, _, rs, ok) =>
       ok && consensus(rs) < 2 }
-    // The driver captures a bounded tail of stdout, so the single stdout
-    // line must stay COMPACT (a round-3 regression: inlining the
-    // per-query stats grew the line past the capture window and its head
-    // — the "{"metric":...' prefix — was truncated, breaking the parse).
-    // The full median/stdev/runs detail goes to a file + stderr instead.
     val statsJson =
       f"""{"metric":"queries_stats","n_runs":$nRuns,"sf":"$sfDir","queries_stats":$stats}"""
     // focused (BENCH_ONLY) runs must NOT clobber the committed
@@ -230,6 +280,5 @@ object Bench {
     // a regression gate should trip if EITHER stat moves.
     val medTotal = results.collect { case (_, _, med, _, _, true) => med }.sum
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","stat":"min_of_n","median_total":$medTotal%.3f,"n_queries":${results.length},"queries":$qs,"n_runs":$nRuns,"spread_gt3":$spreadGt3,"consensus_lt2":$consensusLt2,"failed":$failed,"sf":"$sfDir"}""")
-    spark.stop()
   }
 }

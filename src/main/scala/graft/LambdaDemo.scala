@@ -4,7 +4,6 @@ import graft.batch.BatchPipeline
 import graft.serving.{ArxForecaster, ServingJob}
 import graft.sources.{FileStreamSource, ViewStore}
 import graft.streaming.{Ingest, SpeedLayer}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
@@ -18,15 +17,7 @@ object LambdaDemo {
   def main(args: Array[String]): Unit = {
     val root = if (args.nonEmpty) args(0)
       else Files.createTempDirectory("graft_lambda_").toString
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tuning.install(spark)
+    val spark = Session()
     import spark.implicits._
 
     // ---- fixture streams (producer stand-ins, FIXTURES.md shapes);

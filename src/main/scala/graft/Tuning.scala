@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-level optimizer tuning, applied by every entry point (Verify,
-  * Bench, Explain, LambdaDemo, test sessions).
+/** Engine-level optimizer tuning. [[Session]] sets it at build time;
+  * `install` sets it on a session built some other way. The engine's
+  * own rules and strategies are not here: [[graft.plans.GraftExtensions]]
+  * is their only registration.
   *
   * `InferFiltersFromGenerate` is excluded: it clones a Generate's
   * generator expression into inferred `isnotnull` + `size > 0` filters,
@@ -23,40 +25,6 @@ object Tuning {
   val ExcludedRules =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
-  def install(spark: SparkSession): Unit = {
+  def install(spark: SparkSession): Unit =
     spark.conf.set("spark.sql.optimizer.excludedRules", ExcludedRules)
-    // engine rule: one-row aggregate join sides broadcast by
-    // construction (graft.plans.BroadcastOneRowAggregates). Sessions
-    // built with spark.sql.extensions=graft.plans.GraftExtensions get
-    // it at builder time; everyone else gets it here. Double
-    // registration is harmless — the rule only fills JoinHint.NONE.
-    if (!spark.experimental.extraOptimizations
-          .contains(graft.plans.BroadcastOneRowAggregates))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.BroadcastOneRowAggregates
-    // restore predicate pushdown through the custom join nodes (they
-    // are barriers to Catalyst's own PushPredicateThroughJoin); the
-    // extra batch runs to fixed point, and FileSourceStrategy turns
-    // the relocated filters into scan-level PushedFilters at planning
-    if (!spark.experimental.extraOptimizations
-          .contains(graft.plans.PushFiltersThroughGraftJoins))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.PushFiltersThroughGraftJoins
-    if (!spark.experimental.extraOptimizations
-          .contains(graft.plans.PruneColumnsThroughGraftJoins))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.PruneColumnsThroughGraftJoins
-    // planner strategies for the native as-of / interval-join nodes
-    if (!spark.experimental.extraStrategies
-          .contains(graft.plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
-    if (!spark.experimental.extraStrategies
-          .contains(graft.plans.IntervalJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.IntervalJoinStrategy
-  }
 }

@@ -23,12 +23,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * sides are buildable there, so a hint can never point at an
   * un-buildable side.
   *
-  * Registered engine-wide two ways: [[GraftExtensions]] is the
-  * canonical `spark.sql.extensions` entry point (builder-time), and
-  * `Tuning.install` appends the rule to
-  * `spark.experimental.extraOptimizations` for sessions built without
-  * it. Both may be active at once — the `JoinHint.NONE` guard makes
-  * the second application a no-op.
+  * Registered once, by [[GraftExtensions]] at session build time.
   */
 object BroadcastOneRowAggregates extends Rule[LogicalPlan] {
 
@@ -62,9 +57,12 @@ object BroadcastOneRowAggregates extends Rule[LogicalPlan] {
   }
 }
 
-/** Canonical extension entry point:
-  * `spark.sql.extensions=graft.plans.GraftExtensions` (or
-  * `builder.withExtensions(new GraftExtensions)`).
+/** The engine's only rule and strategy registration, applied at
+  * session build time (`graft.Session` does it for every entry point;
+  * elsewhere `spark.sql.extensions=graft.plans.GraftExtensions`). The
+  * optimizer rules join Spark's "Operator Optimization" batches, the
+  * strategies its planner; nothing is appended to
+  * `spark.experimental`, so each runs exactly once.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -75,9 +73,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPlannerStrategy(_ => IntervalJoinStrategy)
     // the SQL surface: ASOF JOIN statements parse to the native node
     // (GraftSqlParser recognizes the shape, ResolveGraftAsOfJoin types
-    // it); parser injection only takes effect at session BUILD time,
-    // so every entry point builds with .withExtensions(new
-    // GraftExtensions) — Tuning.install alone cannot add this tier
+    // it)
     e.injectParser((_, delegate) => new GraftSqlParser(delegate))
     e.injectResolutionRule(_ => ResolveGraftAsOfJoin)
     e.injectResolutionRule(_ => ResolveGraftTimeTravel)

@@ -2255,10 +2255,13 @@ class SnapshotStore(spark: SparkSession, val root: String) {
             else counted
           sizedDel.write
             .mode("overwrite").parquet(dataRoot(view).resolve(delDir).toString)
-          schemaCache.update(Seq(dataRoot(view).resolve(delDir).toString),
-            remaining.schema)
-          if (obs.get("n").asInstanceOf[Long] > 0L) Seq(delDir)
-          else {
+          // seed only a dir that survives (deleteWhere's order): a seed
+          // for the removed dir would outlive it in the cache
+          if (obs.get("n").asInstanceOf[Long] > 0L) {
+            schemaCache.update(Seq(dataRoot(view).resolve(delDir).toString),
+              remaining.schema)
+            Seq(delDir)
+          } else {
             Scratch.deleteRecursively(dataRoot(view).resolve(delDir).toFile)
             Nil
           }

@@ -5,17 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session: one per suite (lazy), UTC, small shuffle width. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Tuning.install(s)
-    s
-  }
+  lazy val spark: SparkSession = Session(4)
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 }

@@ -17,14 +17,7 @@ class BucketingSpec extends AnyFunSuite {
   // context but owns its SQLConf. The warehouse dir is a static conf
   // set for the whole test JVM in build.sbt.
   private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-      .newSession()
+    val s = graft.Session(4).newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s.conf.set("spark.sql.shuffle.partitions", "4")

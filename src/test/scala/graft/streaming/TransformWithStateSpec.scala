@@ -15,14 +15,7 @@ class TransformWithStateSpec extends AnyFunSuite {
   // isolated child session (see BucketingSpec): the RocksDB provider
   // conf must not leak into the other streaming suites' sessions
   private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-      .newSession()
+    val s = graft.Session(4).newSession()
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     s.conf.set("spark.sql.shuffle.partitions", "4")
