@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.NumericType
+import org.apache.spark.sql.types.{NumericType, StructType}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -27,7 +27,26 @@ import scala.jdk.CollectionConverters._
   *    next version, so two writers racing from the same base version
   *    produce one winner and one [[SnapshotConflict]] (link(2) fails on
   *    an existing target — rename would silently replace it) —
-  *    retry-able, exactly the OCC contract table formats give;
+  *    retry-able, exactly the OCC contract table formats give. The
+  *    loser does not always throw: the commit families publish through
+  *    ONE loop ([[publishAtHead]]), which re-publishes the written
+  *    data over the new head when the family's rebase rule proves the
+  *    interleaved commits disjoint (and none applied this commit's txn
+  *    or file fence — the batch-id fence behind exactly-once sinks):
+  *     - blind append, unpinned overwrite, fence-only publish
+  *       ([[commit]], [[commitClustered]], [[recordFileFences]]): any
+  *       interleaved shape;
+  *     - deletion-vector delete ([[deleteWhere]], [[deleteKeys]],
+  *       [[expireBefore]]): blind appends provably free of the vector's
+  *       keys, plus interleaved vector additions;
+  *     - rewrite delete, compaction, scoped optimize: blind appends
+  *       only; a full re-cluster also needs a metadata-clean base;
+  *     - [[replaceWhere]] (unpinned): blind appends whose stats miss
+  *       the replaced region;
+  *     - [[mergeInto]]: commits that left its read set, vectors and
+  *       metadata alone and added no dir that may hold a source key;
+  *     - a pinned commit (`expectedBase`) and the metadata-only ones
+  *       (column DDL, [[restore]], [[fastForward]]) never rebase;
   *  - [[vacuum]] deletes only data dirs no retained manifest references.
   *
   * On top of the commit log this adds the three capabilities that make
@@ -569,6 +588,68 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     */
   private val RebaseAttempts = 24
 
+  /** The ONE optimistic publish loop of every commit family:
+    * `publishAt(at)` publishes version `at + 1` over snapshot `at`,
+    * first at `base`. A lost version race ([[SnapshotConflict]])
+    * rethrows when the commit is `pinned` (strict version semantics)
+    * or after [[RebaseAttempts]] straight losses; otherwise the new
+    * head is guarded against this commit's `txns` / `files` fences
+    * ([[rebaseFenceGuard]]) and handed to the family's
+    * `rebase(from, head, e)`, which throws `e` to refuse, before the
+    * publish retries over the head. The happy path is one
+    * `publishAt(base)`: no extra manifest read, listing or job.
+    * Returns the committed version.
+    */
+  private def publishAtHead(view: String, base: Long,
+                            pinned: Boolean = false,
+                            txns: Set[Long] = Set.empty,
+                            files: Set[Long] = Set.empty)
+                           (rebase: (Long, Long, SnapshotConflict) => Unit)
+                           (publishAt: Long => Unit): Long = {
+    var curBase = base
+    var attempt = 0
+    while (true) {
+      try {
+        publishAt(curBase)
+        return curBase + 1
+      } catch {
+        case e: SnapshotConflict =>
+          attempt += 1
+          if (pinned || attempt >= RebaseAttempts) throw e
+          val head = versions(view).max
+          rebaseFenceGuard(view, head, txns, files)
+          rebase(curBase, head, e)
+          curBase = head
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** Rebase rule of head-INDEPENDENT commits (blind append, unpinned
+    * overwrite, fence-only publish): a retry from the head would write
+    * identical data and recompute only the manifest, so any interleaved
+    * shape is fine — only the fence guard can refuse.
+    */
+  private val anyShape: (Long, Long, SnapshotConflict) => Unit = (_, _, _) => ()
+
+  /** Rebase rule of the REWRITE families (copy-on-write delete,
+    * compaction, scoped optimize, full re-cluster): every interleaved
+    * commit must be a blind append — those serialize after the rewrite
+    * and ride into its carried set; a removal, vector change or
+    * metadata change would be undone by it.
+    */
+  private def blindAppendsOnly(view: String)
+                              (from: Long, head: Long, e: SnapshotConflict): Unit =
+    deleteRebaseGuard(view, interleavedDeltas(view, from, head), None,
+      allowDelAdds = false, e)
+
+  /** Refuse a stale `expectedBase` pin before any write. */
+  private def requirePin(view: String, expectedBase: Option[Long],
+                         base: Long): Unit =
+    expectedBase.filter(_ != base).foreach { e =>
+      throw new SnapshotConflict(s"$view: expected base v$e but table is at v$base")
+    }
+
   /** Classify the interleaved commits for a DELETE-side rebase: all
     * must be BLIND APPENDS (a delete computed at its base serializes
     * BEFORE concurrent appends under write-serializable isolation —
@@ -639,26 +720,33 @@ class SnapshotStore(spark: SparkSession, val root: String) {
              filesExtra: Set[Long] = Set.empty): Long = {
     val vs = versions(view)
     val base = if (vs.isEmpty) 0L else vs.max
-    expectedBase.filter(_ != base).foreach { e =>
-      throw new SnapshotConflict(s"$view: expected base v$e but table is at v$base")
-    }
+    requirePin(view, expectedBase, base)
     val dataDir = newDirName(base + 1, txn)
     writeData(view, df, dataDir, statsCols, bloomCols)
-    val myTxns = txn.toSet ++ txnsExtra
-    // Logical conflict detection at publish: a blind append / unpinned
-    // overwrite is head-INDEPENDENT — its written data dir does not
-    // depend on the snapshot it lands after, so a full retry-from-head
-    // would write identical data and recompute only this manifest.
-    // Losing the version race therefore RE-PUBLISHES the already-written
-    // immutable dir at the new head (one manifest read + one link(2),
-    // zero data IO, zero re-run) instead of throwing — Delta's "blind
-    // appends never conflict" rule. A PINNED commit (expectedBase) keeps
-    // strict version semantics and still throws; an interleaved commit
-    // that already applied this txn/file fence surfaces as a conflict so
-    // the exactly-once wrapper re-checks instead of double-applying.
-    var curBase = base
-    var attempt = 0
-    while (true) {
+    publishNewDirs(view, base, Seq(dataDir), df.schema, overwrite,
+      pinned = expectedBase.nonEmpty, txn.toSet ++ txnsExtra, filesExtra)
+  }
+
+  /** The publish half [[commit]] and [[commitClustered]] share: the
+    * already-written `newDirs` land as an append over the snapshot they
+    * publish on, or in place of it (`overwrite`, or a new view).
+    * Logical conflict detection at publish: a blind append / unpinned
+    * overwrite is head-INDEPENDENT — its written data does not depend
+    * on the snapshot it lands after, so a full retry-from-head would
+    * write identical data and recompute only this manifest. Losing the
+    * version race therefore RE-PUBLISHES the already-written immutable
+    * dirs at the new head (one manifest read + one link(2), zero data
+    * IO, zero re-run) instead of throwing — Delta's "blind appends never
+    * conflict" rule ([[anyShape]]). A `pinned` commit keeps strict
+    * version semantics and still throws; an interleaved commit that
+    * already applied one of `txns` / `files` surfaces as a conflict so
+    * the exactly-once wrapper re-checks instead of double-applying.
+    */
+  private def publishNewDirs(view: String, base: Long, newDirs: Seq[String],
+                             schema: StructType, overwrite: Boolean,
+                             pinned: Boolean, txns: Set[Long],
+                             files: Set[Long]): Long =
+    publishAtHead(view, base, pinned, txns, files)(anyShape) { at =>
       // an overwrite's written data defines the physical schema — the
       // dropped-column projection clears with the content it shadowed;
       // txn history is carried across ALL commit kinds — including
@@ -668,30 +756,17 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       // with it); an APPEND carries them — appended rows matching a
       // live deleted key stay suppressed at read (re-insert through
       // mergeInto, which subtracts re-inserted keys from the vector)
-      val wipe = overwrite || curBase == 0L
-      val dirs =
-        if (wipe) Seq(dataDir) else readManifest(view, curBase) :+ dataDir
+      val wipe = overwrite || at == 0L
+      val dirs = if (wipe) newDirs else readManifest(view, at) ++ newDirs
       val prevTxns =
-        if (curBase == 0L) Set.empty[Long] else manifestTxns(view, curBase)
-      val dels = if (wipe) Nil else manifestDels(view, curBase)
-      try {
-        publish(view, curBase + 1, dirs, prevTxns ++ myTxns, dels,
-          filesExtra = filesExtra,
-          drops = if (wipe) Some(Nil) else None)
-        seedSchemaCache(view, dirs, df.schema,
-          prev = if (wipe) None else Some(readManifest(view, curBase)))
-        return curBase + 1
-      } catch {
-        case e: SnapshotConflict =>
-          attempt += 1
-          if (expectedBase.nonEmpty || attempt >= RebaseAttempts) throw e
-          val head = versions(view).max
-          rebaseFenceGuard(view, head, myTxns, filesExtra)
-          curBase = head
-      }
+        if (at == 0L) Set.empty[Long] else manifestTxns(view, at)
+      publish(view, at + 1, dirs, prevTxns ++ txns,
+        if (wipe) Nil else manifestDels(view, at),
+        filesExtra = files,
+        drops = if (wipe) Some(Nil) else None)
+      seedSchemaCache(view, dirs, schema,
+        prev = if (wipe) None else Some(readManifest(view, at)))
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Pre-populate the merged-schema cache for a JUST-committed dir list
     * from what the commit already knows in the driver (the written df's
@@ -724,6 +799,17 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     evictSchemaCache(view, paths)
   }
 
+  /** Seed a rewrite's new dir list with the snapshot schema the rewrite
+    * knows in the driver — only when it published directly over its
+    * `base` (`at == base`): an interleaved append may carry a
+    * schema-evolved column that schema predates, and a stale seed would
+    * hide it, so a rebased publish leaves the read path to re-derive
+    * from footers.
+    */
+  private def seedUnraced(view: String, base: Long, at: Long,
+                          dirs: Seq[String], schema: StructType): Unit =
+    if (at == base) seedSchemaCache(view, dirs, schema, prev = None)
+
   /** Drop every cached dir-list schema of `view` EXCEPT the just-seeded
     * key — each commit supersedes its predecessors' lists, so without
     * eviction a long-running maintenance loop grows the cache O(commits)
@@ -747,13 +833,6 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     }
   }
 
-  /** Txn ids already folded into the CURRENT snapshot. Read from the
-    * manifest's persisted `txns` list — NOT derived from live dir names,
-    * which a compact()/overwrite commit replaces (that derivation was
-    * the round-6 hole: an OPTIMIZE landing between a batch commit and
-    * its foreachBatch retry erased the tag and the retry double-
-    * appended).
-    */
   /** The per-FILE idempotence fence COPY INTO records: a 64-bit
     * FNV-1a hash of the file's (absolute normalized path, size, mtime)
     * identity, carried in the manifest's OWN `files` field — so "was
@@ -776,12 +855,18 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     */
   def fileFence(path: String): Long = {
     val np = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-    val p = np.toString + "\u0000" + Files.size(np) + "\u0000" +
-      Files.getLastModifiedTime(np).toMillis
-    var h = 0xcbf29ce484222325L // FNV-1a offset basis
+    fnv1a(np.toString + "\u0000" + Files.size(np) + "\u0000" +
+      Files.getLastModifiedTime(np).toMillis)
+  }
+
+  /** 64-bit FNV-1a over the string's UTF-16 chars — the hash both file
+    * fences persist in manifests, so it must never change.
+    */
+  private def fnv1a(s: String): Long = {
+    var h = 0xcbf29ce484222325L // offset basis
     var i = 0
-    while (i < p.length) {
-      h ^= p.charAt(i).toLong
+    while (i < s.length) {
+      h ^= s.charAt(i).toLong
       h *= 0x100000001b3L
       i += 1
     }
@@ -817,30 +902,26 @@ class SnapshotStore(spark: SparkSession, val root: String) {
   def recordFileFences(view: String, fences: Set[Long]): Long = {
     val vs = versions(view)
     require(vs.nonEmpty, s"$view: no committed snapshot to fence")
-    // fence-only publish: content-free, so it rebases over ANY
-    // interleaved shape like [[fenceOnly]] — a migration run on a busy
-    // table (its primary audience) must not error on a lost race;
-    // fences already applied by an interleaved commit surface as a
-    // conflict so the caller's skip logic re-checks
-    var curBase = vs.max
-    var attempt = 0
-    while (true) {
-      try {
-        publish(view, curBase + 1, readManifest(view, curBase),
-          manifestTxns(view, curBase), manifestDels(view, curBase),
-          filesExtra = fences)
-        return curBase + 1
-      } catch {
-        case e: SnapshotConflict =>
-          attempt += 1
-          if (attempt >= RebaseAttempts) throw e
-          val head = versions(view).max
-          rebaseFenceGuard(view, head, Set.empty, fences)
-          curBase = head
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    // a migration run on a busy table (its primary audience) must not
+    // error on a lost race
+    publishFences(view, vs.max, Set.empty, fences)
   }
+
+  /** Publish a FENCE-ONLY version over `base`: same dirs and vectors,
+    * only `txns` / `files` folded in. Content-free, so losing the
+    * version race rebases over ANY interleaved shape (a retry from the
+    * head would publish the same carried state plus these fences);
+    * fences an interleaved commit already applied surface as a
+    * conflict so the caller's exactly-once / skip logic re-checks,
+    * never double-applies.
+    */
+  private def publishFences(view: String, base: Long, txns: Set[Long],
+                            files: Set[Long]): Long =
+    publishAtHead(view, base, txns = txns, files = files)(anyShape) { at =>
+      publish(view, at + 1, readManifest(view, at),
+        manifestTxns(view, at) ++ txns, manifestDels(view, at),
+        filesExtra = files)
+    }
 
   /** The PRE-namespacing file fence (a path-only FNV-1a recorded in
     * the shared txn set) — kept ONLY for the COPY INTO migration
@@ -850,18 +931,16 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * silently re-loading every file (the same one-restart compat the
     * sink's `legacyTxnFence` gives stream checkpoints).
     */
-  def fileFenceLegacy(path: String): Long = {
-    val p = java.nio.file.Paths.get(path).toAbsolutePath.normalize.toString
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < p.length) {
-      h ^= p.charAt(i).toLong
-      h *= 0x100000001b3L
-      i += 1
-    }
-    h
-  }
+  def fileFenceLegacy(path: String): Long =
+    fnv1a(java.nio.file.Paths.get(path).toAbsolutePath.normalize.toString)
 
+  /** Txn ids already folded into the CURRENT snapshot. Read from the
+    * manifest's persisted `txns` list — NOT derived from live dir names,
+    * which a compact()/overwrite commit replaces (that derivation was
+    * the round-6 hole: an OPTIMIZE landing between a batch commit and
+    * its foreachBatch retry erased the tag and the retry double-
+    * appended).
+    */
   def appliedTxns(view: String): Set[Long] = {
     val vs = versions(view)
     if (vs.isEmpty) Set.empty else manifestTxns(view, vs.max)
@@ -1411,32 +1490,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * txn there is nothing to record — return base, publish nothing.
     */
   private def fenceOnly(view: String, base: Long, txn: Option[Long]): Long =
-    txn match {
-      case None => base
-      case Some(t) =>
-        // a fence-only publish changes no content — losing the version
-        // race rebases over ANY interleaved shape (a retry-from-head
-        // would publish the same carried state + this txn), throwing
-        // only when the txn itself already landed (the wrapper must
-        // re-check, never double-apply)
-        var curBase = base
-        var attempt = 0
-        while (true) {
-          try {
-            publish(view, curBase + 1, readManifest(view, curBase),
-              manifestTxns(view, curBase) + t, manifestDels(view, curBase))
-            return curBase + 1
-          } catch {
-            case e: SnapshotConflict =>
-              attempt += 1
-              if (attempt >= RebaseAttempts) throw e
-              val head = versions(view).max
-              rebaseFenceGuard(view, head, Set(t), Set.empty)
-              curBase = head
-          }
-        }
-        throw new IllegalStateException("unreachable")
-    }
+    if (txn.isEmpty) base else publishFences(view, base, txn.toSet, Set.empty)
 
   /** DELETE FROM `view` WHERE `pred` — with ZERO data-file rewrite:
     * the matching rows' keys are written as a small parquet key list
@@ -1467,11 +1521,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     require(vs.nonEmpty, s"$view: nothing to delete from")
     val base = vs.max
     val prevDels = manifestDels(view, base)
-    prevDels.headOption.foreach { d =>
-      val existing = readDirs(Seq(d), view).columns.head
-      require(existing == keyCol,
-        s"$view: deletion vectors are keyed by `$existing`, got `$keyCol`")
-    }
+    requireVectorKey(view, prevDels, keyCol)
     // DV-vs-rewrite policy (Delta's): past `spark.graft.dv.rewriteMinBytes`
     // of table data (default 1 GB — below it any vector broadcasts and
     // the next OPTIMIZE materializes it for pennies), ONE grouped pass
@@ -1530,8 +1580,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       val hitDirs = probe.filter(_.getLong(2) > 0L).map(_.getString(0)).toSet
       val touched = dirs.filter(d => hitDirs.contains(dirBase(view, d)))
       if (matched >= frac * totalRows || matched >= minKeys)
-        return deleteRewrite(view, keyCol, base, dirs, prevDels, touched,
-          hit, txn)
+        return deleteRewrite(view, keyCol, base, prevDels, touched, hit, txn)
       probedMatched = matched
       matchedDirs = Some(touched)
     }
@@ -1575,34 +1624,44 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // with zero footer jobs
     schemaCache.update(Seq(dataRoot(view).resolve(delDir).toString),
       keys.schema)
-    // DV-delete rebase: interleaved BLIND APPENDS whose dirs provably
-    // hold none of this vector's keys are safe to land after (the
-    // delete serializes before them; the vector cannot touch their
-    // rows) — the already-written key list republishes at the head.
-    // Any other shape, or a possible key overlap, throws.
-    var curBase = base
-    var attempt = 0
-    while (true) {
-      try {
-        publish(view, curBase + 1, readManifest(view, curBase),
-          manifestTxns(view, curBase) ++ txn,
-          foldDels(view, curBase + 1,
-            manifestDels(view, curBase) :+ delDir))
-        return curBase + 1
-      } catch {
-        case e: SnapshotConflict =>
-          attempt += 1
-          if (attempt >= RebaseAttempts) throw e
-          val head = versions(view).max
-          txn.foreach(t => rebaseFenceGuard(view, head, Set(t), Set.empty))
-          deleteRebaseGuard(view, interleavedDeltas(view, curBase, head),
-            Some(keyCol -> readDirs(Seq(delDir), view)),
-            allowDelAdds = true, e)
-          curBase = head
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    publishVector(view, base, keyCol, Some(delDir), txn)
   }
+
+  /** ONE vector key column per view: a delete keyed by another column
+    * would make the read-side anti-join (on the vector union's first
+    * column) silently ignore one side's deletes.
+    */
+  private def requireVectorKey(view: String, dels: Seq[String],
+                               keyCol: String): Unit =
+    dels.headOption.foreach { d =>
+      val existing = readDirs(Seq(d), view).columns.head
+      require(existing == keyCol,
+        s"$view: deletion vectors are keyed by `$existing`, got `$keyCol`")
+    }
+
+  /** The deletion-vector publish [[deleteWhere]], [[deleteKeys]] and
+    * [[expireBefore]] share: the head's dirs minus `dropped`, the head's
+    * vector list plus the already-written `delDir` (folded past
+    * `spark.graft.dv.maxVectors`), `txn` recorded. DV-delete rebase:
+    * interleaved BLIND APPENDS whose dirs provably hold none of the
+    * vector's keys are safe to land after (the delete serializes before
+    * them; the vector cannot touch their rows), and interleaved vector
+    * ADDITIONS commute (this publish carries the head's list) — the
+    * written vector republishes at the head. Any other shape, or a
+    * possible key overlap, throws.
+    */
+  private def publishVector(view: String, base: Long, keyCol: String,
+                            delDir: Option[String], txn: Option[Long],
+                            dropped: Set[String] = Set.empty): Long =
+    publishAtHead(view, base, txns = txn.toSet) { (from, head, e) =>
+      deleteRebaseGuard(view, interleavedDeltas(view, from, head),
+        delDir.map(d => keyCol -> readDirs(Seq(d), view)),
+        allowDelAdds = true, e)
+    } { at =>
+      publish(view, at + 1, readManifest(view, at).filterNot(dropped),
+        manifestTxns(view, at) ++ txn,
+        foldDels(view, at + 1, manifestDels(view, at) ++ delDir))
+    }
 
   /** The copy-on-write half of [[deleteWhere]]'s DV-vs-rewrite policy:
     * dirs holding NO matched rows (known from the caller's probe) carry
@@ -1615,10 +1674,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * commit; no deletion vector is ever created for the wide delete.
     */
   private def deleteRewrite(view: String, keyCol: String, base: Long,
-                            dirs: Seq[String], prevDels: Seq[String],
-                            touched: Seq[String], hit: Column,
-                            txn: Option[Long]): Long = {
-    val untouched = dirs.filterNot(touched.toSet)
+                            prevDels: Seq[String], touched: Seq[String],
+                            hit: Column, txn: Option[Long]): Long = {
     val snapshotSchema = read(view, Some(base)).schema
     // aligned to the snapshot schema (same contract as mergeInto's
     // rewrite): the predicate may reference a schema-evolved column
@@ -1636,34 +1693,13 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // published, so their rows cannot be suppressed); anything that
     // removed dirs or changed vectors/metadata throws
     val touchedSet = touched.toSet
-    var curBase = base
-    var attempt = 0
-    while (true) {
-      val carried = readManifest(view, curBase).filterNot(touchedSet)
-      try {
-        publish(view, curBase + 1, carried :+ dataDir,
-          manifestTxns(view, curBase) ++ txn,
-          if (carried.isEmpty) Nil else prevDels)
-        // seed only when nothing interleaved (see mergeInto's note)
-        if (curBase == base) {
-          val newKey = (carried :+ dataDir)
-            .map(d => dataRoot(view).resolve(d).toString)
-          schemaCache.update(newKey, snapshotSchema)
-          evictSchemaCache(view, newKey)
-        }
-        return curBase + 1
-      } catch {
-        case e: SnapshotConflict =>
-          attempt += 1
-          if (attempt >= RebaseAttempts) throw e
-          val head = versions(view).max
-          txn.foreach(t => rebaseFenceGuard(view, head, Set(t), Set.empty))
-          deleteRebaseGuard(view, interleavedDeltas(view, curBase, head), None,
-            allowDelAdds = false, e)
-          curBase = head
-      }
+    publishAtHead(view, base, txns = txn.toSet)(blindAppendsOnly(view)) { at =>
+      val carried = readManifest(view, at).filterNot(touchedSet)
+      publish(view, at + 1, carried :+ dataDir,
+        manifestTxns(view, at) ++ txn,
+        if (carried.isEmpty) Nil else prevDels)
+      seedUnraced(view, base, at, carried :+ dataDir, snapshotSchema)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Carried-vector lifecycle: when a delete would carry more than
@@ -1737,11 +1773,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     require(vs.nonEmpty, s"$view: nothing to delete from")
     val base = vs.max
     val prevDels = manifestDels(view, base)
-    prevDels.headOption.foreach { d =>
-      val existing = readDirs(Seq(d), view).columns.head
-      require(existing == keyCol,
-        s"$view: deletion vectors are keyed by `$existing`, got `$keyCol`")
-    }
+    requireVectorKey(view, prevDels, keyCol)
     val obs = org.apache.spark.sql.Observation()
     val chk = keys.select(col(keyCol)).distinct()
       .observe(obs, count(lit(1)).as("n")).localCheckpoint()
@@ -1753,30 +1785,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       1L + n / (8L * 1024 * 1024)).toInt
     chk.coalesce(nFiles).write.mode("overwrite")
       .parquet(dataRoot(view).resolve(delDir).toString)
-    // same DV-delete rebase as deleteWhere: key-disjoint blind appends
-    // land before us without a retry, anything else throws
-    var curBase = base
-    var attempt = 0
-    while (true) {
-      try {
-        publish(view, curBase + 1, readManifest(view, curBase),
-          manifestTxns(view, curBase) ++ txn,
-          foldDels(view, curBase + 1,
-            manifestDels(view, curBase) :+ delDir))
-        return curBase + 1
-      } catch {
-        case e: SnapshotConflict =>
-          attempt += 1
-          if (attempt >= RebaseAttempts) throw e
-          val head = versions(view).max
-          txn.foreach(t => rebaseFenceGuard(view, head, Set(t), Set.empty))
-          deleteRebaseGuard(view, interleavedDeltas(view, curBase, head),
-            Some(keyCol -> readDirs(Seq(delDir), view)),
-            allowDelAdds = true, e)
-          curBase = head
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    publishVector(view, base, keyCol, Some(delDir), txn)
   }
 
   /** REPLACE WHERE — atomically swap the rows matching `pred` for the
@@ -1822,9 +1831,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // (the SQL tier's PRIMARY KEY probe): a commit landing between the
     // probe and this publish surfaces as a conflict, not a silently
     // un-probed swap
-    expectedBase.filter(_ != base).foreach { e =>
-      throw new SnapshotConflict(s"$view: expected base v$e but table is at v$base")
-    }
+    requirePin(view, expectedBase, base)
     val dirs = readManifest(view, base)
     val prevDels = manifestDels(view, base)
     val snapshotSchema = read(view, Some(base)).schema
@@ -1926,36 +1933,21 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // payload, breaking the statement's region-equals-payload
     // contract — Delta conflicts there too) — and, when a vector
     // subtraction ran, miss the resurrected keys as well.
-    var curBase = base
-    var attempt = 0
-    while (true) {
-      val carried = readManifest(view, curBase).filterNot(touched.toSet)
-      try {
-        val newDirs = (carried ++ keptDir) :+ dataDir
-        publish(view, curBase + 1, newDirs,
-          manifestTxns(view, curBase) ++ txn, newDels)
-        if (curBase == base) {
-          val newKey = newDirs.map(d => dataRoot(view).resolve(d).toString)
-          schemaCache.update(newKey, snapshotSchema)
-          evictSchemaCache(view, newKey)
-        }
-        return curBase + 1
-      } catch {
-        case e: SnapshotConflict =>
-          attempt += 1
-          if (attempt >= RebaseAttempts || expectedBase.nonEmpty) throw e
-          val head = versions(view).max
-          txn.foreach(t => rebaseFenceGuard(view, head, Set(t), Set.empty))
-          val deltas = interleavedDeltas(view, curBase, head)
-          deleteRebaseGuard(view, deltas,
-            resKeys.map(r => readDirs(prevDels, view).columns.head -> r),
-            allowDelAdds = false, e)
-          if (deltas.flatMap(_.added).exists(dirMayMatch(view, _, bounds)))
-            throw e
-          curBase = head
-      }
+    val touchedSet = touched.toSet
+    publishAtHead(view, base, pinned = expectedBase.nonEmpty,
+        txns = txn.toSet) { (from, head, e) =>
+      val deltas = interleavedDeltas(view, from, head)
+      deleteRebaseGuard(view, deltas,
+        resKeys.map(r => readDirs(prevDels, view).columns.head -> r),
+        allowDelAdds = false, e)
+      if (deltas.flatMap(_.added).exists(dirMayMatch(view, _, bounds)))
+        throw e
+    } { at =>
+      val newDirs = (readManifest(view, at).filterNot(touchedSet) ++ keptDir) :+
+        dataDir
+      publish(view, at + 1, newDirs, manifestTxns(view, at) ++ txn, newDels)
+      seedUnraced(view, base, at, newDirs, snapshotSchema)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Retention expiry — `DELETE WHERE c < cutoff` at PARTITION-DROP
@@ -1989,11 +1981,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     require(live.nonEmpty,
       s"$view: expiry would drop every dir — overwrite explicitly instead")
     val prevDels = manifestDels(view, base)
-    prevDels.headOption.foreach { d =>
-      val existing = readDirs(Seq(d), view).columns.head
-      require(existing == keyCol,
-        s"$view: deletion vectors are keyed by `$existing`, got `$keyCol`")
-    }
+    requireVectorKey(view, prevDels, keyCol)
     val residual = applyRenames(readDirs(live, view), view, base)
       .where(col(c) < lit(cutoff))
       .select(col(keyCol)).distinct()
@@ -2013,31 +2001,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // until the next sweep) when the residual vector provably cannot
     // touch them (stats probe on the appended dirs); interleaved DV
     // additions commute (the rebase carries the head's vector list).
-    val deadSet = dead.toSet
-    var curBase = base
-    var attempt = 0
-    while (true) {
-      val carried = readManifest(view, curBase).filterNot(deadSet)
-      try {
-        publish(view, curBase + 1, carried, manifestTxns(view, curBase) ++ txn,
-          foldDels(view, curBase + 1,
-            if (hasResidual) manifestDels(view, curBase) :+ delDir
-            else manifestDels(view, curBase)))
-        return curBase + 1
-      } catch {
-        case e: SnapshotConflict =>
-          attempt += 1
-          if (attempt >= RebaseAttempts) throw e
-          val head = versions(view).max
-          txn.foreach(t => rebaseFenceGuard(view, head, Set(t), Set.empty))
-          deleteRebaseGuard(view, interleavedDeltas(view, curBase, head),
-            if (hasResidual) Some(keyCol -> readDirs(Seq(delDir), view))
-            else None,
-            allowDelAdds = true, e)
-          curBase = head
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    publishVector(view, base, keyCol, Some(delDir).filter(_ => hasResidual),
+      txn, dropped = dead.toSet)
   }
 
   /** Idempotent [[deleteWhere]] keyed by `txnId` — the exactly-once
@@ -2082,24 +2047,21 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Project `df` to exactly `schema`'s columns, surfacing typed NULLs
-    * for columns `df` predates — what the whole-table mergeSchema read
-    * would yield. The schema-evolution alignment every dir-subset
-    * rewrite needs ([[mergeInto]], [[deleteRewrite]], the probed
-    * key-selection scan) before predicates or unions over the full
-    * snapshot width.
+  /** Project `df` to exactly `schema`'s columns, aligned by NAME and
+    * by TYPE — what the whole-table mergeSchema read would yield. The
+    * schema-evolution alignment every dir-subset rewrite needs
+    * ([[mergeInto]], [[deleteRewrite]], the probed key-selection scan)
+    * before predicates or unions over the full snapshot width: columns
+    * `df` predates land as typed NULLs, and a present column whose
+    * dataType differs casts to the schema's (a merge source built from
+    * SQL literals carries e.g. DECIMAL(3,1) where the table holds
+    * DOUBLE; written uncast, the dir's parquet type diverges and the
+    * merged read surfaces the UNSCALED value — 40.0 read as 400.0,
+    * found by the inline-subquery MERGE spec). Identity casts are
+    * elided by the optimizer, so the aligned projection costs nothing
+    * when types already agree.
     */
-  /** Align `df` to `schema` by NAME — and by TYPE: a present column
-    * whose dataType differs casts to the schema's (a merge source
-    * built from SQL literals carries e.g. DECIMAL(3,1) where the table
-    * holds DOUBLE; written uncast, the dir's parquet type diverges and
-    * the merged read surfaces the UNSCALED value — 40.0 read as 400.0,
-    * found by the inline-subquery MERGE spec). Missing columns land
-    * NULL. Identity casts are elided by the optimizer, so the aligned
-    * projection costs nothing when types already agree.
-    */
-  private def alignedTo(df: DataFrame,
-                        schema: org.apache.spark.sql.types.StructType): DataFrame =
+  private def alignedTo(df: DataFrame, schema: StructType): DataFrame =
     df.select(schema.map(f =>
       if (df.columns.contains(f.name)) {
         if (df.schema(f.name).dataType == f.dataType) col(f.name)
@@ -2288,48 +2250,28 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // must be ONE fixed set across attempts)
     lazy val probeKeys =
       source.select(col(keyCol)).distinct().localCheckpoint()
-    var curBase = base
-    var attempt = 0
-    while (true) {
+    publishAtHead(view, base, txns = txn.toSet) { (from, head, e) =>
+      val deltas = interleavedDeltas(view, from, head)
+      if (deltas.exists(d => d.metaChanged || d.delsChanged ||
+        (d.removed & touchedSet).nonEmpty)) throw e
+      val addedAll = deltas.flatMap(_.added).distinct
+      if (addedAll.nonEmpty) {
+        val (hit, _) = dirsHitByKeys(view, addedAll, keyCol, probeKeys)
+        if (hit.nonEmpty) throw e
+      }
+    } { at =>
       // carry-from-head: head dirs minus this merge's read set — an
       // interleaved rewrite of a CARRIED dir is honored automatically
       // (its replacement dirs are in the head list, its stale original
       // is not), and interleaved appends ride along untouched
-      val carried = readManifest(view, curBase).filterNot(touchedSet)
-      try {
-        publish(view, curBase + 1, carried :+ dataDir,
-          manifestTxns(view, curBase) ++ txn, newDels)
-        // untouched dirs hold column subsets of targetSchema and the
-        // rewritten dir was aligned to it — the new version's merged
-        // schema IS targetSchema, known in the driver. Seed only on
-        // the no-rebase path: an interleaved append may carry a
-        // schema-evolved column targetSchema predates, and a stale
-        // seed would hide it (the read path re-derives from footers).
-        if (curBase == base) {
-          val newKey = (carried :+ dataDir)
-            .map(d => dataRoot(view).resolve(d).toString)
-          schemaCache.update(newKey, targetSchema)
-          evictSchemaCache(view, newKey)
-        }
-        return curBase + 1
-      } catch {
-        case e: SnapshotConflict =>
-          attempt += 1
-          if (attempt >= RebaseAttempts) throw e
-          val head = versions(view).max
-          txn.foreach(t => rebaseFenceGuard(view, head, Set(t), Set.empty))
-          val deltas = interleavedDeltas(view, curBase, head)
-          if (deltas.exists(d => d.metaChanged || d.delsChanged ||
-            (d.removed & touchedSet).nonEmpty)) throw e
-          val addedAll = deltas.flatMap(_.added).distinct
-          if (addedAll.nonEmpty) {
-            val (hit, _) = dirsHitByKeys(view, addedAll, keyCol, probeKeys)
-            if (hit.nonEmpty) throw e
-          }
-          curBase = head
-      }
+      val carried = readManifest(view, at).filterNot(touchedSet)
+      publish(view, at + 1, carried :+ dataDir,
+        manifestTxns(view, at) ++ txn, newDels)
+      // untouched dirs hold column subsets of targetSchema and the
+      // rewritten dir was aligned to it — the new version's merged
+      // schema IS targetSchema, known in the driver
+      seedUnraced(view, base, at, carried :+ dataDir, targetSchema)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Idempotent [[mergeInto]] keyed by `txnId` — the exactly-once
@@ -2633,29 +2575,6 @@ class SnapshotStore(spark: SparkSession, val root: String) {
 
   // ------------------------------------------------------- maintenance
 
-  /** OPTIMIZE: rewrite the current snapshot into ~`targetFileBytes`
-    * files and commit the result as a new version — the small-file
-    * compaction every log-structured table needs once append commits
-    * accumulate (each append = at least one new file; a thousand
-    * micro-batch appends = a thousand tiny files and a planner that
-    * spends longer listing than reading).
-    *
-    * The rewrite plans `ceil(current bytes / targetFileBytes)` output
-    * files via `coalesce` (partition merge — no shuffle; compaction is
-    * IO-bound, re-hashing rows would double the cost). It commits with
-    * `expectedBase` pinned, so a concurrent writer landing mid-compact
-    * surfaces as a [[SnapshotConflict]] instead of silently dropping
-    * that writer's rows — rewriting data another commit superseded is
-    * exactly the lost-update race OCC exists to catch. Readers are
-    * never torn: old versions stay readable (time travel), and
-    * [[vacuum]] collects the superseded small files later.
-    *
-    * @return the new compacted version
-    */
-  /** Total parquet bytes of one manifest dir — the size signal
-    * [[compactSmall]] partitions on (public so callers can derive
-    * size-relative thresholds).
-    */
   /** Metadata-only row count: the sum of the per-dir counts recorded
     * at write time (`__rows` in the stats sidecar — observed in the
     * write job itself), O(dirs) driver file reads, ZERO Spark jobs.
@@ -2899,11 +2818,34 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       Files.move(ob, nb, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** Total parquet bytes of one manifest dir — the size signal
+    * [[compactSmall]] partitions on (public so callers can derive
+    * size-relative thresholds).
+    */
   def dirBytes(view: String, dirName: String): Long =
     listEntries(dirPath(view, dirName))
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .map(Files.size).sum
 
+  /** OPTIMIZE: rewrite the current snapshot into ~`targetFileBytes`
+    * files and commit the result as a new version — the small-file
+    * compaction every log-structured table needs once append commits
+    * accumulate (each append = at least one new file; a thousand
+    * micro-batch appends = a thousand tiny files and a planner that
+    * spends longer listing than reading).
+    *
+    * The rewrite plans `ceil(current bytes / targetFileBytes)` output
+    * files via `coalesce` (partition merge — no shuffle; compaction is
+    * IO-bound, re-hashing rows would double the cost). It commits with
+    * `expectedBase` pinned, so a concurrent writer landing mid-compact
+    * surfaces as a [[SnapshotConflict]] instead of silently dropping
+    * that writer's rows — rewriting data another commit superseded is
+    * exactly the lost-update race OCC exists to catch. Readers are
+    * never torn: old versions stay readable (time travel), and
+    * [[vacuum]] collects the superseded small files later.
+    *
+    * @return the new compacted version
+    */
   def compact(view: String, targetFileBytes: Long = 128L << 20,
               statsCols: Seq[String] = Nil): Long = {
     val vs = versions(view)
@@ -2957,25 +2899,10 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // pair: a maintenance loop must never cost a stream (or itself) a
     // re-run.
     val smallSet = small.toSet
-    var curBase = base
-    var attempt = 0
-    while (true) {
-      val carried = readManifest(view, curBase).filterNot(smallSet)
-      try {
-        publish(view, curBase + 1, carried :+ dataDir,
-          manifestTxns(view, curBase), dels)
-        return curBase + 1
-      } catch {
-        case e: SnapshotConflict =>
-          attempt += 1
-          if (attempt >= RebaseAttempts) throw e
-          val head = versions(view).max
-          deleteRebaseGuard(view, interleavedDeltas(view, curBase, head), None,
-            allowDelAdds = false, e)
-          curBase = head
-      }
+    publishAtHead(view, base)(blindAppendsOnly(view)) { at =>
+      publish(view, at + 1, readManifest(view, at).filterNot(smallSet) :+ dataDir,
+        manifestTxns(view, at), dels)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** OPTIMIZE … CLUSTER BY (a, b): rewrite the current snapshot into
@@ -3001,15 +2928,6 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       graft.operators.Layout.hilbertCode(col(aCol), col(bCol), bits),
       targetDirs, statsCols)
 
-  /** OPTIMIZE … CLUSTER BY (c1, …, cd): [[optimizeClustered]] on a
-    * d-DIMENSIONAL Hilbert key (2..6 cluster columns, `bits` bits
-    * each — [[graft.operators.Layout.hilbertCodeN]]) — what a real
-    * lakehouse CLUSTER BY takes. Each range dir is one connected curve
-    * segment, so its min/max envelope is tight on ALL d cluster
-    * columns and [[pruneDirsBox]] skips dirs for d-dimensional box
-    * queries. Same atomicity/OCC/null-routing contract as the 2-D
-    * form.
-    */
   /** PARTITION-SCOPED maintenance — `OPTIMIZE t WHERE <pred>`: rewrite
     * ONLY the dirs the predicate may touch (per-dir stats prune, the
     * same walk every scoped operation uses), carrying every other dir
@@ -3036,7 +2954,6 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val bounds = predBounds(pred)
     val touched = dirs.filter(dirMayMatch(view, _, bounds))
     if (touched.isEmpty) return base
-    val untouched = dirs.filterNot(touched.toSet)
     val snapshotSchema = read(view, Some(base)).schema
     val data = alignedTo(applyRenames(
       applyDels(readDirs(touched, view), view, prevDels), view, base),
@@ -3063,35 +2980,23 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // append-after-delete semantics). Removals/vector/metadata changes
     // throw.
     val touchedSet = touched.toSet
-    var curBase = base
-    var attempt = 0
-    while (true) {
-      val carried = readManifest(view, curBase).filterNot(touchedSet)
-      try {
-        publish(view, curBase + 1, carried ++ newDirs,
-          manifestTxns(view, curBase),
-          if (carried.isEmpty) Nil else prevDels)
-        // seed only when nothing interleaved (see mergeInto's note)
-        if (curBase == base) {
-          val newKey = (carried ++ newDirs)
-            .map(d => dataRoot(view).resolve(d).toString)
-          schemaCache.update(newKey, snapshotSchema)
-          evictSchemaCache(view, newKey)
-        }
-        return curBase + 1
-      } catch {
-        case e: SnapshotConflict =>
-          attempt += 1
-          if (attempt >= RebaseAttempts) throw e
-          val head = versions(view).max
-          deleteRebaseGuard(view, interleavedDeltas(view, curBase, head), None,
-            allowDelAdds = false, e)
-          curBase = head
-      }
+    publishAtHead(view, base)(blindAppendsOnly(view)) { at =>
+      val carried = readManifest(view, at).filterNot(touchedSet)
+      publish(view, at + 1, carried ++ newDirs, manifestTxns(view, at),
+        if (carried.isEmpty) Nil else prevDels)
+      seedUnraced(view, base, at, carried ++ newDirs, snapshotSchema)
     }
-    throw new IllegalStateException("unreachable")
   }
 
+  /** OPTIMIZE … CLUSTER BY (c1, …, cd): [[optimizeClustered]] on a
+    * d-DIMENSIONAL Hilbert key (2..6 cluster columns, `bits` bits
+    * each — [[graft.operators.Layout.hilbertCodeN]]) — what a real
+    * lakehouse CLUSTER BY takes. Each range dir is one connected curve
+    * segment, so its min/max envelope is tight on ALL d cluster
+    * columns and [[pruneDirsBox]] skips dirs for d-dimensional box
+    * queries. Same atomicity/OCC/null-routing contract as the 2-D
+    * form.
+    */
   def optimizeClusteredN(view: String, clusterCols: Seq[String],
                          bits: Int = 20, targetDirs: Int = 8,
                          statsCols: Seq[String] = Nil): Long =
@@ -3164,29 +3069,12 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       manifestRenames(view, base).isEmpty &&
       manifestWidens(view, base).isEmpty
     val baseDirs = readManifest(view, base).toSet
-    var curBase = base
-    var attempt = 0
-    while (true) {
-      val carried = readManifest(view, curBase).filterNot(baseDirs)
-      try {
-        // full rewrite from read(): dropped columns are physically gone
-        publish(view, curBase + 1, dirNames ++ carried,
-          manifestTxns(view, curBase), drops = Some(Nil))
-        // seed only when nothing interleaved (see mergeInto's note)
-        if (curBase == base)
-          seedSchemaCache(view, dirNames, cur.schema, prev = None)
-        return curBase + 1
-      } catch {
-        case e: SnapshotConflict =>
-          attempt += 1
-          if (attempt >= RebaseAttempts || !baseClean) throw e
-          val head = versions(view).max
-          deleteRebaseGuard(view, interleavedDeltas(view, curBase, head), None,
-            allowDelAdds = false, e)
-          curBase = head
-      }
+    publishAtHead(view, base, pinned = !baseClean)(blindAppendsOnly(view)) { at =>
+      val dirs = dirNames ++ readManifest(view, at).filterNot(baseDirs)
+      // full rewrite from read(): dropped columns are physically gone
+      publish(view, at + 1, dirs, manifestTxns(view, at), drops = Some(Nil))
+      seedUnraced(view, base, at, dirs, cur.schema)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Commit `df` CLUSTERED — the ingest-time half of CLUSTER BY: the
@@ -3216,44 +3104,15 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       else graft.operators.Layout.hilbertCodeN(clusterCols.map(col), bits)
     val vs = versions(view)
     val base = if (vs.isEmpty) 0L else vs.max
-    expectedBase.filter(_ != base).foreach { e =>
-      throw new SnapshotConflict(s"$view: expected base v$e but table is at v$base")
-    }
+    requirePin(view, expectedBase, base)
     val allStats = (statsCols ++ clusterCols).distinct
     val dirNames = writeClusteredDirs(view, df, code, targetDirs,
       allStats, base + 1, txn)
-    val myTxns = txn.toSet ++ txnsExtra
-    // same logical-conflict rebase as [[commit]]: the clustered dirs are
-    // head-independent (blind append / unpinned overwrite), so losing
-    // the version race re-publishes them at the new head — a streaming
-    // clustered sink never loses a micro-batch to a concurrent batch
-    // DML, and never re-runs the range write either
-    var curBase = base
-    var attempt = 0
-    while (true) {
-      val wipe = overwrite || curBase == 0L
-      val dirs =
-        if (wipe) dirNames else readManifest(view, curBase) ++ dirNames
-      val prevTxns =
-        if (curBase == 0L) Set.empty[Long] else manifestTxns(view, curBase)
-      val dels = if (wipe) Nil else manifestDels(view, curBase)
-      try {
-        publish(view, curBase + 1, dirs, prevTxns ++ myTxns, dels,
-          filesExtra = filesExtra,
-          drops = if (wipe) Some(Nil) else None)
-        seedSchemaCache(view, dirs, df.schema,
-          prev = if (wipe) None else Some(readManifest(view, curBase)))
-        return curBase + 1
-      } catch {
-        case e: SnapshotConflict =>
-          attempt += 1
-          if (expectedBase.nonEmpty || attempt >= RebaseAttempts) throw e
-          val head = versions(view).max
-          rebaseFenceGuard(view, head, myTxns, filesExtra)
-          curBase = head
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    // same logical-conflict rebase as [[commit]]: a streaming clustered
+    // sink never loses a micro-batch to a concurrent batch DML, and
+    // never re-runs the range write either
+    publishNewDirs(view, base, dirNames, df.schema, overwrite,
+      pinned = expectedBase.nonEmpty, txn.toSet ++ txnsExtra, filesExtra)
   }
 
   /** DESCRIBE HISTORY: one row per retained version — (version, n_dirs,

@@ -210,4 +210,28 @@ class FenceNamespaceSpec extends SparkSpec {
     st.replaceWhere("rw", col("k") >= 2, Seq((2L, 20.0)).toDF("k", "p"))
     assert(st.read("rw").count() == 2L)
   }
+
+  test("file fence hashes are pinned: manifests persist them, so the " +
+      "FNV-1a identity must never drift") {
+    val st = new SnapshotStore(spark, freshRoot())
+    // a fixed absolute path with a fixed size and mtime — the fence's
+    // whole (path, size, mtime) identity — hashed to literal constants
+    val dir = java.nio.file.Paths.get("/tmp/graft-fence-pin")
+    val file = dir.resolve("part-00000.parquet")
+    java.nio.file.Files.createDirectories(dir)
+    java.nio.file.Files.write(file, Array.fill[Byte](1234)(7))
+    java.nio.file.Files.setLastModifiedTime(file,
+      java.nio.file.attribute.FileTime.fromMillis(1700000000000L))
+    try {
+      assert(st.fileFence(file.toString) == 7137057238453350865L)
+      // the legacy fence hashes the path alone: no file needed
+      assert(st.fileFenceLegacy(file.toString) == -8937704186561964453L)
+      // the hashed identity is the NORMALIZED path
+      assert(st.fileFenceLegacy("/tmp/graft-fence-pin/x/../part-00000.parquet") ==
+        -8937704186561964453L)
+    } finally {
+      java.nio.file.Files.deleteIfExists(file)
+      java.nio.file.Files.deleteIfExists(dir)
+    }
+  }
 }

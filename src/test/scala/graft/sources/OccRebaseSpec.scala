@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Logical conflict detection (auto-rebase) at the OCC publish:
@@ -109,11 +110,12 @@ class OccRebaseSpec extends SparkSpec {
     assert(st.read("t").where(col("k") === 7).count() == 1L)
   }
 
-  // Deterministic raced merge: a gate UDF inside the merge SOURCE
-  // releases a concurrent append after the merge has read its base,
-  // then lets the merge proceed to publish — forcing the exact
-  // interleaving the classifier must judge.
-  private def racedMerge(st: SnapshotStore, appendRows: => Unit): Unit = {
+  // Deterministic race: `op` places the gate (an identity UDF on a
+  // Long column) in the frame it computes AFTER reading its base; the
+  // first row through releases `interleave` on another thread and
+  // waits for it to land, then lets `op` proceed to publish — forcing
+  // the exact interleaving the rebase guard must judge.
+  private def raced[T](interleave: => Unit)(op: (Column => Column) => T): T = {
     val gate = new java.util.concurrent.CountDownLatch(1)
     val appended = new java.util.concurrent.CountDownLatch(1)
     OccRebaseSpec.gate = gate
@@ -123,17 +125,31 @@ class OccRebaseSpec extends SparkSpec {
       OccRebaseSpec.appended.await(60, java.util.concurrent.TimeUnit.SECONDS)
       k
     }
-    val source = Seq(5L, 6L).toDF("k0")
-      .select(block(col("k0")).as("k"), lit(9.0).as("p"))
     val appender = new Thread(() => {
       gate.await(60, java.util.concurrent.TimeUnit.SECONDS)
-      appendRows
+      interleave
       appended.countDown()
     })
     appender.start()
-    try st.mergeInto("t", source, "k", statsCols = Seq("k"))
-    finally appender.join(60000)
+    try op(block(_))
+    finally {
+      appender.join(60000)
+      // an Error, not a RuntimeException: a conflict case's intercept
+      // must not swallow an unforced race
+      if (gate.getCount != 0)
+        throw new AssertionError("the gate never opened: race not forced")
+    }
   }
+
+  private def racedMerge(st: SnapshotStore, appendRows: => Unit): Unit =
+    raced(appendRows) { gated =>
+      st.mergeInto("t", Seq(5L, 6L).toDF("k0")
+        .select(gated(col("k0")).as("k"), lit(9.0).as("p")),
+        "k", statsCols = Seq("k"))
+    }
+
+  private def racedDelete(st: SnapshotStore, appendRows: => Unit): Unit =
+    raced(appendRows)(gated => st.deleteWhere("t", "k", gated(col("k")) < 5L))
 
   test("raced merge vs disjoint append: rebases, nothing re-runs, nothing lost") {
     val st = freshStore()
@@ -238,26 +254,6 @@ class OccRebaseSpec extends SparkSpec {
     assert(ks == ((0L until 400L).toSet -- deleted) + 1001L + 1003L)
   }
 
-  private def racedDelete(st: SnapshotStore, appendRows: => Unit): Unit = {
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val appended = new java.util.concurrent.CountDownLatch(1)
-    OccRebaseSpec.gate = gate
-    OccRebaseSpec.appended = appended
-    val block = udf { k: Long =>
-      OccRebaseSpec.gate.countDown()
-      OccRebaseSpec.appended.await(60, java.util.concurrent.TimeUnit.SECONDS)
-      k < 5L
-    }
-    val appender = new Thread(() => {
-      gate.await(60, java.util.concurrent.TimeUnit.SECONDS)
-      appendRows
-      appended.countDown()
-    })
-    appender.start()
-    try st.deleteWhere("t", "k", block(col("k")))
-    finally appender.join(60000)
-  }
-
   test("raced DV delete vs key-disjoint append: rebases, both effects land") {
     val st = freshStore()
     st.commit("t", (0L until 10L).map(k => (k, 1.0)).toDF("k", "p"),
@@ -299,6 +295,146 @@ class OccRebaseSpec extends SparkSpec {
     // the p-keyed delete won; the k-keyed one refused — no mixed set
     assert(st.manifestDels("t", st.versions("t").max).size == 1)
     assert(st.read("t").count() == 9L)
+  }
+
+  private def withConf[A](pairs: (String, String)*)(body: => A): A =
+    try { pairs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally pairs.foreach { case (k, _) => spark.conf.unset(k) }
+
+  // one data file, so the single gated scan task never starves the
+  // interleaved writer of executor slots
+  private def seedTen(st: SnapshotStore): Unit =
+    st.commit("t", (0L until 10L).map(k => (k, 1.0)).toDF("k", "p")
+      .coalesce(1), overwrite = true, statsCols = Seq("k"))
+
+  private def racedDeleteKeys(st: SnapshotStore, interleave: => Unit): Unit =
+    raced(interleave) { gated =>
+      st.deleteKeys("t", "k",
+        Seq(1L, 2L).toDF("k0").select(gated(col("k0")).as("k")))
+    }
+
+  test("raced deleteKeys vs key-disjoint append: rebases, both effects land") {
+    val st = freshStore()
+    seedTen(st)
+    racedDeleteKeys(st, st.commit("t", Seq((100L, 1.0)).toDF("k", "p"),
+      overwrite = false, statsCols = Seq("k")))
+    assert(st.versions("t").max == 3L)
+    // the append won v2; the vector republished over it at v3
+    assert(st.manifestDels("t", 2L).isEmpty && st.manifestDels("t", 3L).nonEmpty)
+    assert(st.read("t").select("k").as[Long].collect().toSet ==
+      (0L until 10L).toSet -- Set(1L, 2L) + 100L)
+  }
+
+  test("raced deleteKeys vs append of a vector key: conflict (lost-insert guard)") {
+    val st = freshStore()
+    seedTen(st)
+    intercept[RuntimeException] {
+      racedDeleteKeys(st, st.commit("t", Seq((2L, 9.0)).toDF("k", "p"),
+        overwrite = false, statsCols = Seq("k")))
+    }
+    assert(st.versions("t").max == 2L)
+    assert(st.manifestDels("t", 2L).isEmpty)
+    assert(st.read("t").count() == 11L)
+  }
+
+  private def escalated[A](body: => A): A =
+    withConf("spark.graft.dv.rewriteMinBytes" -> "0",
+             "spark.graft.dv.rewriteFraction" -> "0.3")(body)
+
+  test("raced copy-on-write delete vs blind append: rebases, no vector, both land") {
+    val st = freshStore()
+    seedTen(st)
+    val seedDir = st.manifestDirs("t").head
+    escalated {
+      racedDelete(st, st.commit("t", Seq((100L, 1.0)).toDF("k", "p"),
+        overwrite = false, statsCols = Seq("k")))
+    }
+    assert(st.versions("t").max == 3L)
+    assert(st.manifestDirs("t", Some(2L)).contains(seedDir), "v2 is the append")
+    assert(st.manifestDels("t", 3L).isEmpty, "the wide delete rewrites")
+    assert(!st.manifestDirs("t").contains(seedDir))
+    assert(st.read("t").select("k").as[Long].collect().toSet ==
+      (5L until 10L).toSet + 100L)
+  }
+
+  test("raced copy-on-write delete vs interleaved vector delete: conflict (lost delete)") {
+    val st = freshStore()
+    seedTen(st)
+    // the rewrite publishes its BASE's vector list, so the interleaved
+    // (narrow, DV-path) delete of k=9 would be dropped by a rebase
+    escalated {
+      intercept[RuntimeException] {
+        racedDelete(st, st.deleteWhere("t", "k", col("k") === 9L))
+      }
+    }
+    assert(st.versions("t").max == 2L)
+    assert(st.manifestDels("t", 2L).nonEmpty)
+    assert(st.read("t").select("k").as[Long].collect().toSet ==
+      (0L until 9L).toSet)
+  }
+
+  private def racedReplace(st: SnapshotStore, interleave: => Unit): Unit =
+    raced(interleave) { gated =>
+      st.replaceWhere("t", col("k") < 5L,
+        Seq(1L, 2L).toDF("k0").select(gated(col("k0")).as("k"),
+          lit(9.0).as("p")), statsCols = Seq("k"))
+    }
+
+  test("raced unpinned replaceWhere vs out-of-region append: rebases") {
+    val st = freshStore()
+    seedTen(st)
+    racedReplace(st, st.commit("t", Seq((100L, 1.0)).toDF("k", "p"),
+      overwrite = false, statsCols = Seq("k")))
+    assert(st.versions("t").max == 3L)
+    assert(st.read("t", Some(2L)).count() == 11L, "v2 is the append")
+    assert(st.read("t").as[(Long, Double)].collect().toMap ==
+      (Map(1L -> 9.0, 2L -> 9.0, 100L -> 1.0) ++
+        (5L until 10L).map(_ -> 1.0)))
+  }
+
+  test("raced unpinned replaceWhere vs in-region append: conflict (region miss unproven)") {
+    val st = freshStore()
+    seedTen(st)
+    // k=3 lands INSIDE the replaced region: it would survive beside the
+    // payload, breaking the region-equals-payload contract
+    intercept[RuntimeException] {
+      racedReplace(st, st.commit("t", Seq((3L, 7.0)).toDF("k", "p"),
+        overwrite = false, statsCols = Seq("k")))
+    }
+    assert(st.versions("t").max == 2L)
+    assert(st.read("t").where(col("p") === 9.0).isEmpty)
+    assert(st.read("t").count() == 11L)
+  }
+
+  private def racedEmptyDelete(st: SnapshotStore, interleave: => Unit): Unit =
+    raced(interleave) { gated =>
+      st.deleteWhere("t", "k", gated(col("k")) < 0L, txn = Some(7L))
+    }
+
+  test("raced zero-match delete under a txn: the fence-only publish rebases") {
+    val st = freshStore()
+    seedTen(st)
+    racedEmptyDelete(st, st.commit("t", Seq((3L, 2.0)).toDF("k", "p"),
+      overwrite = false, statsCols = Seq("k")))
+    // content-free: it rebases even over an append inside the table's
+    // key range, and records its fence at the head
+    assert(st.versions("t").max == 3L)
+    assert(st.read("t", Some(2L)).count() == 11L, "v2 is the append")
+    assert(st.appliedTxns("t") == Set(7L))
+    assert(st.manifestDels("t", 3L).isEmpty)
+    assert(st.read("t").count() == 11L)
+  }
+
+  test("raced zero-match delete vs the same txn landing first: conflict, no double fence") {
+    val st = freshStore()
+    seedTen(st)
+    intercept[RuntimeException] {
+      racedEmptyDelete(st, st.appendOnce("t",
+        Seq((100L, 1.0)).toDF("k", "p"), txnId = 7L))
+    }
+    assert(st.versions("t").max == 2L)
+    assert(st.appliedTxns("t") == Set(7L))
+    assert(st.deleteWhereOnce("t", "k", col("k") < 0L, txnId = 7L).isEmpty)
   }
 
   test("retention expiry vs stream appends: expire-then-append, zero conflicts") {
