@@ -850,41 +850,13 @@ object GraftSqlParser {
     ("""(?is)^\s*ANALYZE\s+TABLE\s+(""" + Id +
       """)\s+COMPUTE\s+STATISTICS\s+""" +
       """FOR\s+(?:(ALL)\s+COLUMNS|COLUMNS\s+(.+?))\s*;?\s*$""").r
-  // the COLUMN-LEVEL merge shape real migrations write: WHEN MATCHED
-  // THEN UPDATE SET c = expr[, …] and/or WHEN NOT MATCHED THEN INSERT
-  // (cols) VALUES (exprs) — compiled to the same keyed mergeInto with
-  // a PROJECTED source (matched rows = old target row with the SET
-  // expressions applied over the joined (target, source) pair;
-  // unmatched rows = the VALUES projection, unnamed columns NULL).
-  // Aliases are captured so expressions can qualify either side.
-  // (?!\*) keeps the upsert-all form on its own dedicated path.
-  private val MergeColsRe =
-    ("""(?is)^\s*MERGE\s+INTO\s+(""" + Id +
-      """)(?:\s+(?:AS\s+)?(?!USING\b)(\w+))?\s+""" +
-      """USING\s+(""" + Id + """)(?:\s+(?:AS\s+)?(?!ON\b)(\w+))?\s+""" +
-      """ON\s+([\w.]+)\s*=\s*([\w.]+)\s+""" +
-      """(?:WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+(?!\*)(.+?)\s*)??""" +
-      """(?:WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s*\(([^)]*)\)\s*""" +
-      """VALUES\s*\((.+)\)\s*)?;?\s*$""").r
-  // the upsert-all MERGE shape (update/insert every column by name) —
-  // the form the store's keyed mergeInto implements; an optional
-  // matched-DELETE clause maps to mergeInto's tombstone column
-  private val MergeRe =
-    ("""(?is)^\s*MERGE\s+INTO\s+(""" + Id +
-      """)(?:\s+AS\s+\w+|\s+(?!USING)\w+)?\s+""" +
-      """USING\s+(""" + Id + """)(?:\s+AS\s+\w+|\s+(?!ON)\w+)?\s+""" +
-      """ON\s+([\w.]+)\s*=\s*([\w.]+)\s+""" +
-      """(?:WHEN\s+MATCHED\s+AND\s+([\w.]+)\s+THEN\s+DELETE\s+)?""" +
-      """WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+\*\s+""" +
-      """WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*\s*;?\s*$""").r
-
-  // the GENERAL multi-clause conditional MERGE (SQL:2003 / Delta
-  // semantics): any number of `WHEN [NOT] MATCHED [AND <cond>] THEN
-  // <action>` clauses, first-match-wins precedence per row. Claimed
-  // LAST among the merge forms, so the two dedicated shapes above keep
-  // their exact paths; the head captures through ON and the clause
-  // tail is split by [[splitWhenClauses]] (quote/paren-aware — a WHEN
-  // inside a condition's parens or a string literal never splits).
+  // MERGE INTO (SQL:2003 / Delta semantics), the one merge statement:
+  // any number of `WHEN [NOT] MATCHED [AND <cond>] THEN <action>`
+  // clauses, first-match-wins precedence per row — the upsert-all pair
+  // and the column-level SET/VALUES forms are clause lists like any
+  // other. The head captures through ON; the clause tail is split by
+  // [[splitWhenClauses]] (quote/paren-aware — a WHEN inside a
+  // condition's parens or a string literal never splits).
   private val MergeWhenRe =
     ("""(?is)^\s*MERGE\s+INTO\s+(""" + Id +
       """)(?:\s+(?:AS\s+)?(?!USING\b)(\w+))?\s+""" +
@@ -902,8 +874,8 @@ object GraftSqlParser {
   /** The subquery-source MERGE rewrite: extract the balanced
     * `USING (SELECT …)` body (quote/comment-mask walk — parens inside
     * literals never count) and substitute the placeholder name
-    * `__graft_merge_src`, so every merge FORM parses unchanged; the
-    * commands receive the subquery SQL and materialize it once at run
+    * `__graft_merge_src`, so the merge statement parses unchanged; the
+    * command receives the subquery SQL and materializes it once at run
     * time. None when the statement has no paren source (or the body
     * is not a SELECT — nothing else is legal there).
     */
@@ -1196,39 +1168,21 @@ object GraftSqlParser {
           pred.getOrElse("true")): LogicalPlan
     }).orElse {
       // an inline `USING (SELECT …)` source hoists to a placeholder
-      // NAME first, so every merge form below parses unchanged; the
-      // commands receive the subquery SQL and materialize it at run
+      // NAME first, so the merge statement below parses unchanged; the
+      // command receives the subquery SQL and materializes it at run
       // time. Statements whose target is not registered fall through
       // with the ORIGINAL text.
       val (mText, mSrcSql) = hoistMergeSource(sqlText)
         .map { case (t, s) => (t, Some(s)) }.getOrElse((sqlText, None))
-      MergeRe.findFirstMatchIn(mText).collect {
-        case m if claimed(m) =>
-          GraftMergeCommand(nm(m), nm(m, 2),
-            Seq(m.group(3), m.group(4)).map(c => c.split('.').last),
-            Option(m.group(5)).map(_.split('.').last),
-            srcSql = mSrcSql, srcRaw = m.group(2)): LogicalPlan
-      }.orElse(MergeColsRe.findFirstMatchIn(mText).collect {
-        case m if claimed(m) &&
-            (m.group(7) != null || m.group(8) != null) =>
-          GraftMergeColumnsCommand(nm(m), Option(m.group(2)),
-            nm(m, 3), Option(m.group(4)),
-            Seq(m.group(5), m.group(6)),
-            setSql = Option(m.group(7)),
-            insertCols = Option(m.group(8)).map(c =>
-              c.split(",").toSeq.map(t => cleanIdent(t.trim))
-                .filter(_.nonEmpty)),
-            insertValsSql = Option(m.group(9)),
-            srcSql = mSrcSql, srcRaw = m.group(3)): LogicalPlan
-      }).orElse(MergeWhenRe.findFirstMatchIn(mText).collect {
+      MergeWhenRe.findFirstMatchIn(mText).collect {
         case m if claimed(m) =>
           val tag = s"MERGE INTO ${nm(m)}"
-          GraftMergeWhenCommand(nm(m), Option(m.group(2)),
+          GraftMergeCommand(nm(m), Option(m.group(2)),
             nm(m, 3), Option(m.group(4)),
             Seq(m.group(5), m.group(6)),
             splitWhenClauses(m.group(7)).map(parseWhenClause(tag, _)),
             srcSql = mSrcSql, srcRaw = m.group(3)): LogicalPlan
-      })
+      }
     }.orElse(CloneRe.findFirstMatchIn(sqlText).collect {
       // claimed on the SOURCE being registered — a CLONE of anything
       // else falls through to whatever the stock parser says
@@ -1368,24 +1322,92 @@ object GraftSqlParser {
     (checksFor.fold(src)(withCheckGuards(_, src)), obs)
   }
 
-  /** The opt-in PRIMARY KEY intra-batch probe shared by the three
-    * INSERT forms: materialize the payload once (localCheckpoint) and
-    * refuse a repeated key BEFORE any write, naming it. Returns the
-    * checkpointed payload for the caller's further probes/commit.
+  /** Opt-in PRIMARY KEY enforcement (`spark.graft.sql.enforcePrimaryKey`)
+    * shared by the INSERT family, run BEFORE any write on a keyed
+    * table: the payload materializes once (localCheckpoint) and refuses
+    * a repeated key, naming it; with `survivors` — the rows of the
+    * snapshot the payload lands beside — a semi-probe refuses a key
+    * that already exists among them (key-only column pruning on the
+    * target scan; the payload side is small and broadcasts). Without
+    * `survivors` the payload replaces every row and only probes itself.
+    * Returns the payload to commit and the version the existing-key
+    * probe read: the commit pins it (expectedBase), so a concurrent
+    * insert landing between probe and publish surfaces as a
+    * SnapshotConflict instead of a duplicate slipping past.
     */
-  private[plans] def checkpointUniqueKeys(tag: String,
-      src: org.apache.spark.sql.DataFrame, k: String)
-      : org.apache.spark.sql.DataFrame = {
+  private[plans] def enforcePrimaryKey(spark: org.apache.spark.sql.SparkSession,
+      tag: String, name: String, store: graft.sources.SnapshotStore,
+      view: String, src: org.apache.spark.sql.DataFrame,
+      survivors: Option[org.apache.spark.sql.Column], where: String = "")
+      : (org.apache.spark.sql.DataFrame, Option[Long]) = {
     import org.apache.spark.sql.functions.{col, count, lit}
-    val chk = src.localCheckpoint()
-    chk.groupBy(col(k)).agg(count(lit(1)).as("_graft_n"))
-      .where(col("_graft_n") > 1)
-      .select(col(k).cast("string")).limit(1).collect()
-      .headOption.foreach(r => throw new IllegalArgumentException(
-        s"$tag: the payload repeats PRIMARY KEY `$k` = ${r.getString(0)} " +
-          "— deduplicate it, or disable spark.graft.sql.enforcePrimaryKey"))
-    chk
+    GraftTableRegistry.lookupKey(name).filter(_ =>
+      spark.conf.getOption("spark.graft.sql.enforcePrimaryKey")
+        .exists(_.toBoolean)) match {
+      case None => (src, None)
+      case Some(k) =>
+        val probedBase = survivors.map(_ =>
+          store.versions(view).lastOption.getOrElse(0L))
+        val chk = src.localCheckpoint()
+        chk.groupBy(col(k)).agg(count(lit(1)).as("_graft_n"))
+          .where(col("_graft_n") > 1)
+          .select(col(k).cast("string")).limit(1).collect()
+          .headOption.foreach(r => throw new IllegalArgumentException(
+            s"$tag: the payload repeats PRIMARY KEY `$k` = ${r.getString(0)} " +
+              "— deduplicate it, or disable spark.graft.sql.enforcePrimaryKey"))
+        survivors.foreach { rows =>
+          store.read(view).where(rows).select(col(k))
+            .join(chk.select(col(k)).distinct(), Seq(k), "left_semi")
+            .select(col(k).cast("string")).limit(1).collect()
+            .headOption.foreach(r => throw new IllegalArgumentException(
+              s"$tag: PRIMARY KEY `$k` = ${r.getString(0)} already " +
+                s"exists$where — MERGE INTO to upsert, or disable " +
+                "spark.graft.sql.enforcePrimaryKey"))
+        }
+        (chk, probedBase)
+    }
   }
+
+  /** Commit in the table's declared layout: a CLUSTER BY table through
+    * the Hilbert range-dir writer (multi-column skipping is its default
+    * layout, not a maintenance action), any other as a plain commit;
+    * the registered key is recorded as stats either way.
+    */
+  private[plans] def commitLaidOut(name: String,
+      store: graft.sources.SnapshotStore, view: String,
+      df: org.apache.spark.sql.DataFrame, overwrite: Boolean,
+      expectedBase: Option[Long] = None,
+      filesExtra: Set[Long] = Set.empty): Long = {
+    val cluster = GraftTableRegistry.lookupCluster(name)
+    val key = GraftTableRegistry.lookupKey(name).toSeq
+    if (cluster.nonEmpty)
+      store.commitClustered(view, df, cluster, overwrite = overwrite,
+        statsCols = key, expectedBase = expectedBase, filesExtra = filesExtra)
+    else store.commit(view, df, overwrite = overwrite,
+      expectedBase = expectedBase, statsCols = key, filesExtra = filesExtra)
+  }
+
+  /** The snapshot rows a DELETE/UPDATE predicate matches. A SUBQUERY
+    * predicate cannot evaluate per-row against a dir scan (`expr()` has
+    * no relation context), so it resolves through the full session SQL
+    * over a temp view of the snapshot, aliased back to the TABLE's name
+    * so correlated references (`WHERE EXISTS (… WHERE o.g = t.g)`) keep
+    * resolving; the view drops once `body` returns, so `body` must
+    * finish with the rows (materialize or commit them).
+    */
+  private[plans] def withMatchedRows[T](spark: org.apache.spark.sql.SparkSession,
+      store: graft.sources.SnapshotStore, view: String, name: String,
+      predicateSql: String)(body: org.apache.spark.sql.DataFrame => T): T =
+    if (!hasSubquery(predicateSql))
+      body(store.read(view).where(org.apache.spark.sql.functions.expr(predicateSql)))
+    else {
+      val tmp = "graft_dml_" +
+        java.util.UUID.randomUUID().toString.replace("-", "")
+      store.read(view).createOrReplaceTempView(tmp)
+      try body(spark.sql(s"SELECT * FROM $tmp AS " +
+        s"`${name.split('.').last}` WHERE $predicateSql"))
+      finally spark.catalog.dropTempView(tmp)
+    }
 
   private[plans] def parseAsOf(sqlText: String,
                                delegate: ParserInterface): Option[LogicalPlan] =
@@ -1634,24 +1656,15 @@ case class GraftDeleteCommand(name: String, predicateSql: String)
     val (store, view) = GraftTableRegistry.required("DELETE FROM", name)
     MaterializedView.requireWritable("DELETE FROM", name)
     val keyCol = GraftTableRegistry.requiredKey("DELETE FROM", name)
-    // a SUBQUERY predicate (`WHERE k IN (SELECT …)`) cannot evaluate
-    // per-row against a dir scan — resolve it through the full session
-    // SQL over the snapshot and delete by the matched KEY SET
-    // (deleteKeys: one deletion-vector commit, the list never touches
-    // the driver)
-    if (GraftSqlParser.hasSubquery(predicateSql)) {
-      val tmp = "graft_dml_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      store.read(view).createOrReplaceTempView(tmp)
-      try {
-        // aliased back to the TABLE's name so correlated references
-        // (`WHERE EXISTS (… WHERE other.g = t.g)`) keep resolving
-        val keys = spark.sql(s"SELECT `$keyCol` FROM $tmp AS " +
-          s"`${name.split('.').last}` WHERE $predicateSql")
-        Seq(org.apache.spark.sql.Row(name,
-          store.deleteKeys(view, keyCol, keys)))
-      } finally spark.catalog.dropTempView(tmp)
-    } else
+    // a SUBQUERY predicate (`WHERE k IN (SELECT …)`) deletes by the
+    // matched KEY SET (deleteKeys: one deletion-vector commit, the list
+    // never touches the driver)
+    if (GraftSqlParser.hasSubquery(predicateSql))
+      GraftSqlParser.withMatchedRows(spark, store, view, name, predicateSql) {
+        rows => Seq(org.apache.spark.sql.Row(name, store.deleteKeys(view,
+          keyCol, rows.select(org.apache.spark.sql.functions.col(keyCol)))))
+      }
+    else
       Seq(org.apache.spark.sql.Row(name,
         store.deleteWhere(view, keyCol,
           org.apache.spark.sql.functions.expr(predicateSql))))
@@ -1720,41 +1733,10 @@ case class GraftInsertCommand(name: String, querySql: String,
       else lit(null).cast(f.dataType).as(f.name)
     }: _*))
     val src = GraftSqlParser.withCheckGuards(name, expanded)
-    // opt-in PRIMARY KEY enforcement (see the class scaladoc): the
-    // payload materializes once and BOTH probes run before any write.
-    // The commit pins the version the existing-key probe read
-    // (expectedBase) — a concurrent insert landing between probe and
-    // write surfaces as a SnapshotConflict instead of a silent
-    // duplicate slipping past enforcement.
-    val enforcedKey = GraftTableRegistry.lookupKey(name).filter(_ =>
-      spark.conf.getOption("spark.graft.sql.enforcePrimaryKey")
-        .exists(_.toBoolean))
-    val probedBase = enforcedKey.map(_ =>
-      store.versions(view).lastOption.getOrElse(0L))
-    val payload = enforcedKey.fold(src) { k =>
-      val chk = GraftSqlParser.checkpointUniqueKeys(s"INSERT INTO $name",
-        src, k)
-      store.read(view).select(col(k))
-        .join(chk.select(col(k)).distinct(), Seq(k), "left_semi")
-        .select(col(k).cast("string")).limit(1).collect()
-        .headOption.foreach(r => throw new IllegalArgumentException(
-          s"INSERT INTO $name: PRIMARY KEY `$k` = ${r.getString(0)} " +
-            "already exists — MERGE INTO to upsert, or disable " +
-            "spark.graft.sql.enforcePrimaryKey"))
-      chk
-    }
-    // a DDL-declared CLUSTER BY routes the append through the Hilbert
-    // range-dir writer — multi-column skipping is this table's default
-    // layout, not a maintenance action
-    val cluster = GraftTableRegistry.lookupCluster(name)
-    val v =
-      if (cluster.nonEmpty)
-        store.commitClustered(view, payload, cluster, overwrite = false,
-          statsCols = GraftTableRegistry.lookupKey(name).toSeq,
-          expectedBase = probedBase)
-      else store.commit(view, payload, overwrite = false,
-        statsCols = GraftTableRegistry.lookupKey(name).toSeq,
-        expectedBase = probedBase)
+    val (payload, probedBase) = GraftSqlParser.enforcePrimaryKey(spark,
+      s"INSERT INTO $name", name, store, view, src, survivors = Some(lit(true)))
+    val v = GraftSqlParser.commitLaidOut(name, store, view, payload,
+      overwrite = false, expectedBase = probedBase)
     Seq(org.apache.spark.sql.Row(name, v, obs.get("n").asInstanceOf[Long]))
   }
 }
@@ -1783,19 +1765,10 @@ case class GraftInsertOverwriteCommand(name: String, querySql: String)
     val target = store.read(view).schema
     val (src, obs) = GraftSqlParser.alignInsertPayload(spark,
       s"INSERT OVERWRITE $name", target, querySql, checksFor = Some(name))
-    import org.apache.spark.sql.functions.{col, count, lit}
-    val enforcedKey = GraftTableRegistry.lookupKey(name).filter(_ =>
-      spark.conf.getOption("spark.graft.sql.enforcePrimaryKey")
-        .exists(_.toBoolean))
-    val payload = enforcedKey.fold(src)(k =>
-      GraftSqlParser.checkpointUniqueKeys(s"INSERT OVERWRITE $name", src, k))
-    val cluster = GraftTableRegistry.lookupCluster(name)
-    val v =
-      if (cluster.nonEmpty)
-        store.commitClustered(view, payload, cluster, overwrite = true,
-          statsCols = GraftTableRegistry.lookupKey(name).toSeq)
-      else store.commit(view, payload, overwrite = true,
-        statsCols = (GraftTableRegistry.lookupKey(name).toSeq ++ cluster).distinct)
+    val (payload, _) = GraftSqlParser.enforcePrimaryKey(spark,
+      s"INSERT OVERWRITE $name", name, store, view, src, survivors = None)
+    val v = GraftSqlParser.commitLaidOut(name, store, view, payload,
+      overwrite = true)
     Seq(org.apache.spark.sql.Row(name, v, obs.get("n").asInstanceOf[Long]))
   }
 }
@@ -1827,29 +1800,14 @@ case class GraftReplaceWhereCommand(name: String, predicateSql: String,
     val target = store.read(view).schema
     val (src, obs) = GraftSqlParser.alignInsertPayload(spark, tag,
       target, querySql, checksFor = Some(name))
-    import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit}
+    import org.apache.spark.sql.functions.{coalesce, expr, lit}
     val pred = expr(predicateSql)
-    val enforcedKey = GraftTableRegistry.lookupKey(name).filter(_ =>
-      spark.conf.getOption("spark.graft.sql.enforcePrimaryKey")
-        .exists(_.toBoolean))
-    // the commit pins the version the surviving-rows probe read
-    // (expectedBase): a concurrent insert landing between probe and
-    // publish surfaces as a SnapshotConflict instead of a duplicate
-    // key slipping past enforcement (the same pin INSERT INTO has)
-    val probedBase = enforcedKey.map(_ =>
-      store.versions(view).lastOption.getOrElse(0L))
-    val payload = enforcedKey.fold(src) { k =>
-      val chk = GraftSqlParser.checkpointUniqueKeys(tag, src, k)
-      store.read(view).where(!coalesce(pred.cast("boolean"), lit(false)))
-        .select(col(k))
-        .join(chk.select(col(k)).distinct(), Seq(k), "left_semi")
-        .select(col(k).cast("string")).limit(1).collect()
-        .headOption.foreach(r => throw new IllegalArgumentException(
-          s"$tag: PRIMARY KEY `$k` = ${r.getString(0)} already exists " +
-            "outside the replaced region — MERGE INTO to upsert, or " +
-            "disable spark.graft.sql.enforcePrimaryKey"))
-      chk
-    }
+    // the surviving rows (`NOT pred`) are the ones a payload key can
+    // collide with — the replaced region cannot conflict
+    val (payload, probedBase) = GraftSqlParser.enforcePrimaryKey(spark, tag,
+      name, store, view, src,
+      survivors = Some(!coalesce(pred.cast("boolean"), lit(false))),
+      where = " outside the replaced region")
     val v = store.replaceWhere(view, pred, payload,
       statsCols = (GraftTableRegistry.lookupKey(name).toSeq ++
         GraftTableRegistry.lookupCluster(name)).distinct,
@@ -2004,35 +1962,13 @@ case class GraftCopyIntoCommand(name: String, fromPath: String,
     val obs = org.apache.spark.sql.Observation()
     val guarded = GraftSqlParser.withCheckGuards(name,
       aligned.observe(obs, count(lit(1)).as("n")))
-    // opt-in PRIMARY KEY enforcement — the same two probes every
-    // INSERT form runs (intra-batch dup + existing-key semi-probe),
-    // commit pinned to the probed version so a concurrent insert
-    // surfaces as a SnapshotConflict instead of slipping past
-    val enforcedKey = GraftTableRegistry.lookupKey(name).filter(_ =>
-      spark.conf.getOption("spark.graft.sql.enforcePrimaryKey")
-        .exists(_.toBoolean))
-    val probedBase = enforcedKey.map(_ =>
-      store.versions(view).lastOption.getOrElse(0L))
-    val payload = enforcedKey.fold(guarded) { k =>
-      val chk = GraftSqlParser.checkpointUniqueKeys(tag, guarded, k)
-      store.read(view).select(col(k))
-        .join(chk.select(col(k)).distinct(), Seq(k), "left_semi")
-        .select(col(k).cast("string")).limit(1).collect()
-        .headOption.foreach(r => throw new IllegalArgumentException(
-          s"$tag: PRIMARY KEY `$k` = ${r.getString(0)} already exists " +
-            "— MERGE INTO to upsert, or disable " +
-            "spark.graft.sql.enforcePrimaryKey"))
-      chk
-    }
-    val fences = fresh.map(store.fileFence).toSet ++ migrated
-    val cluster = GraftTableRegistry.lookupCluster(name)
-    val key = GraftTableRegistry.lookupKey(name).toSeq
-    val v =
-      if (cluster.nonEmpty)
-        store.commitClustered(view, payload, cluster, overwrite = false,
-          statsCols = key, filesExtra = fences, expectedBase = probedBase)
-      else store.commit(view, payload, overwrite = false,
-        statsCols = key, filesExtra = fences, expectedBase = probedBase)
+    // opt-in PRIMARY KEY enforcement — the same probes every INSERT
+    // form runs
+    val (payload, probedBase) = GraftSqlParser.enforcePrimaryKey(spark, tag,
+      name, store, view, guarded, survivors = Some(lit(true)))
+    val v = GraftSqlParser.commitLaidOut(name, store, view, payload,
+      overwrite = false, expectedBase = probedBase,
+      filesExtra = fresh.map(store.fileFence).toSet ++ migrated)
     Seq(org.apache.spark.sql.Row(name, v, fresh.size.toLong,
       obs.get("n").asInstanceOf[Long], skipped))
   }
@@ -2072,25 +2008,10 @@ case class GraftUpdateCommand(name: String, setSql: String, predicateSql: String
     // SIMULTANEOUS assignment (the SQL contract): every SET expression
     // evaluates against the OLD row in one projection — `SET a = b,
     // b = a` swaps, it does not copy (sequential withColumns would
-    // read the already-updated column). A subquery predicate resolves
-    // through the full session SQL over the snapshot (expr() has no
-    // relation context); the checkpoint below materializes the result,
-    // so the temp view can drop right after.
-    val subTmp =
-      if (GraftSqlParser.hasSubquery(predicateSql))
-        Some("graft_dml_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""))
-      else None
-    val base = subTmp match {
-      case Some(tmp) =>
-        store.read(view).createOrReplaceTempView(tmp)
-        // aliased back to the TABLE's name so correlated references
-        // keep resolving (same contract as DELETE's subquery route)
-        spark.sql(s"SELECT * FROM $tmp AS `${name.split('.').last}` " +
-          s"WHERE $predicateSql")
-      case None => store.read(view).where(expr(predicateSql))
-    }
-    try {
+    // read the already-updated column). The checkpoint below
+    // materializes the matched rows before a subquery predicate's temp
+    // view drops.
+    GraftSqlParser.withMatchedRows(spark, store, view, name, predicateSql) { base =>
       val byName = assignments.map { case (c, e) => c.toLowerCase -> e }.toMap
       require(byName.size == assignments.size,
         s"UPDATE $name: duplicate SET column")
@@ -2116,192 +2037,7 @@ case class GraftUpdateCommand(name: String, setSql: String, predicateSql: String
         else store.mergeInto(view, updated, keyCol,
           statsCols = Seq(keyCol))
       Seq(org.apache.spark.sql.Row(name, v, n))
-    } finally subTmp.foreach(spark.catalog.dropTempView)
-  }
-}
-
-/** `MERGE INTO <t> USING <src> ON t.k = s.k [WHEN MATCHED AND <del>
-  * THEN DELETE] WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
-  * INSERT *` — the upsert-all MERGE shape (the one the store's keyed
-  * [[graft.sources.SnapshotStore.mergeInto]] implements: matched rows
-  * replaced whole, unmatched inserted, copy-on-write with file
-  * skipping). `src` is a registered view or any session-visible table
-  * or temp view; both ON sides must name the registered key column.
-  * Returns (table, version).
-  */
-case class GraftMergeCommand(name: String, srcName: String,
-                             onCols: Seq[String], deleteCol: Option[String],
-                             srcSql: Option[String] = None,
-                             srcRaw: String = "")
-    extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
-  override def output: Seq[Attribute] = Seq(
-    AttributeReference("table", org.apache.spark.sql.types.StringType)(),
-    AttributeReference("version", org.apache.spark.sql.types.LongType)())
-  override def run(spark: org.apache.spark.sql.SparkSession)
-      : Seq[org.apache.spark.sql.Row] = {
-    val (store, view) = GraftTableRegistry.required("MERGE INTO", name)
-    MaterializedView.requireWritable("MERGE INTO", name)
-    val keyCol = GraftTableRegistry.requiredKey("MERGE INTO", name)
-    require(onCols.forall(_.equalsIgnoreCase(keyCol)),
-      s"MERGE INTO $name: ON must equate the registered key `$keyCol` " +
-        s"on both sides, got ${onCols.mkString(" = ")}")
-    // an expensive source QUERY/VIEW materializes once (localCheckpoint,
-    // the GraftUpdateCommand pattern) and feeds both the cardinality
-    // probe and the merge — PROJECTED first to exactly the columns the
-    // upsert-all merge consumes (target columns + the tombstone flag),
-    // so a wide source never checkpoints full-width; a registered
-    // store view is a cheap manifest-pinned scan and stays lazy
-    val needed = store.read(view).columns.toSeq ++ deleteCol
-    val source = srcSql match {
-      // inline `USING (SELECT …)` source: runs through the full
-      // session SQL, projected to the consumed columns, materialized
-      // once for the probe + merge
-      case Some(q) => spark.sql(q)
-        .select(needed.map(org.apache.spark.sql.functions.col): _*)
-        .localCheckpoint()
-      case None => GraftTableRegistry.lookup(srcName)
-        .map { case (s2, v2) => s2.read(v2) }
-        .getOrElse {
-          // a NON-graft source resolves by its ORIGINAL spelling — the
-          // canonical name collapses quoted multi-part structure
-          // (`my db`.src -> "my db.src"), which spark.table would
-          // misread as one identifier
-          spark.table(if (srcRaw.nonEmpty) srcRaw
-            else GraftSqlParser.quoteIdent(srcName))
-            .select(needed.map(org.apache.spark.sql.functions.col): _*)
-            .localCheckpoint()
-        }
     }
-    GraftMergeCommand.requireUniqueSourceKeys(s"MERGE INTO $name",
-      source, keyCol)
-    // SQL MERGE semantics for the delete clause: `WHEN MATCHED AND d
-    // THEN DELETE` applies to MATCHED rows only — an unmatched source
-    // row with d=true still INSERTs (the store's mergeInto treats d as
-    // a CDC tombstone and would silently drop it). Scope the flag to
-    // matched keys with one semi-probe against the target's key set —
-    // only when a delete clause is present; key-only column pruning
-    // keeps the probe one narrow scan.
-    val scoped = deleteCol.fold(source) { d =>
-      import org.apache.spark.sql.functions.{coalesce, col, lit}
-      val tKeys = store.read(view).select(col(keyCol)).distinct()
-        .withColumn("_graft_matched", lit(true))
-      source.join(tKeys, Seq(keyCol), "left")
-        .withColumn(d, col(d).cast("boolean") &&
-          coalesce(col("_graft_matched"), lit(false)))
-        .drop("_graft_matched")
-    }
-    // CHECK guards skip tombstone rows — a deleted row's source values
-    // never land
-    val guarded = deleteCol.fold(
-      GraftSqlParser.withCheckGuards(name, scoped)) { d =>
-      import org.apache.spark.sql.functions.{coalesce, col, lit}
-      GraftSqlParser.withCheckGuards(name, scoped,
-        exempt = coalesce(col(d).cast("boolean"), lit(false)))
-    }
-    Seq(org.apache.spark.sql.Row(name,
-      store.mergeInto(view, guarded, keyCol, deleteCol = deleteCol,
-        statsCols = Seq(keyCol))))
-  }
-}
-
-/** The column-level MERGE forms: `WHEN MATCHED THEN UPDATE SET c =
-  * expr[, …]` and/or `WHEN NOT MATCHED THEN INSERT (cols) VALUES
-  * (exprs)` — compiled to the SAME keyed
-  * [[graft.sources.SnapshotStore.mergeInto]] with a PROJECTED source:
-  * one left join of the source onto the target (so SET/VALUES
-  * expressions can reference BOTH sides by alias), then per target
-  * column `when(matched, setExpr | old target value).otherwise(
-  * insertExpr | NULL)`. SET assignments are SIMULTANEOUS (one
-  * projection over the old row, like UPDATE). An update-only merge
-  * scopes to matched source rows, an insert-only merge to unmatched —
-  * the other side of the table is untouched either way (mergeInto's
-  * copy-on-write only rewrites key-overlapping dirs). Duplicate source
-  * keys refuse up front (the SQL MERGE cardinality rule).
-  */
-case class GraftMergeColumnsCommand(name: String, tAliasOpt: Option[String],
-                                    srcName: String, sAliasOpt: Option[String],
-                                    onCols: Seq[String],
-                                    setSql: Option[String],
-                                    insertCols: Option[Seq[String]],
-                                    insertValsSql: Option[String],
-                                    srcSql: Option[String] = None,
-                                    srcRaw: String = "")
-    extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
-  override def output: Seq[Attribute] = Seq(
-    AttributeReference("table", org.apache.spark.sql.types.StringType)(),
-    AttributeReference("version", org.apache.spark.sql.types.LongType)())
-  override def run(spark: org.apache.spark.sql.SparkSession)
-      : Seq[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.functions.{col, expr, lit, when}
-    val tag = s"MERGE INTO $name"
-    val (store, view) = GraftTableRegistry.required("MERGE INTO", name)
-    MaterializedView.requireWritable("MERGE INTO", name)
-    val keyCol = GraftTableRegistry.requiredKey("MERGE INTO", name)
-    require(onCols.map(_.split('.').last).forall(_.equalsIgnoreCase(keyCol)),
-      s"$tag: ON must equate the registered key `$keyCol` on both " +
-        s"sides, got ${onCols.mkString(" = ")}")
-    val target = store.read(view)
-    val targetSchema = target.schema
-    // same once-materialized source contract as GraftMergeCommand; an
-    // inline subquery source must carry an alias — its expressions
-    // have no other way to reference it (Delta's rule too)
-    require(srcSql.isEmpty || sAliasOpt.nonEmpty,
-      s"$tag: a subquery source needs an alias — USING (SELECT …) AS s")
-    val source = srcSql.map(q => spark.sql(q).localCheckpoint())
-      .getOrElse(GraftTableRegistry.lookup(srcName)
-        .map { case (s2, v2) => s2.read(v2) }
-        .getOrElse(spark.table(if (srcRaw.nonEmpty) srcRaw
-          else GraftSqlParser.quoteIdent(srcName)).localCheckpoint()))
-    GraftMergeCommand.requireUniqueSourceKeys(tag, source, keyCol)
-    val ta = tAliasOpt.getOrElse(name.split('.').last)
-    val sa = sAliasOpt.getOrElse(srcName.split('.').last)
-    require(!ta.equalsIgnoreCase(sa),
-      s"$tag: target and source aliases collide (`$ta`) — alias one side")
-    val setPairs = setSql.toSeq.flatMap(GraftSqlParser.splitTopLevel).map { a =>
-      val eq = a.indexOf('=')
-      require(eq > 0, s"$tag: bad assignment `$a`")
-      a.take(eq).trim.split('.').last.toLowerCase -> a.drop(eq + 1).trim
-    }
-    val sets = setPairs.toMap
-    require(sets.size == setPairs.size, s"$tag: duplicate SET column")
-    require(!sets.contains(keyCol.toLowerCase),
-      s"$tag: a keyed merge cannot reassign the key `$keyCol`")
-    val insMap: Map[String, String] = (insertCols, insertValsSql) match {
-      case (Some(cs), Some(vs)) =>
-        val es = GraftSqlParser.splitTopLevel(vs)
-        require(cs.size == es.size,
-          s"$tag: INSERT names ${cs.size} columns but VALUES has ${es.size}")
-        val m = cs.map(_.split('.').last.toLowerCase).zip(es).toMap
-        require(m.size == cs.size, s"$tag: duplicate INSERT column")
-        require(m.contains(keyCol.toLowerCase),
-          s"$tag: the INSERT column list must include the key `$keyCol`")
-        m
-      case _ => Map.empty
-    }
-    val tcols = targetSchema.map(_.name)
-    (sets.keySet ++ insMap.keySet).foreach { c =>
-      require(tcols.exists(_.toLowerCase == c),
-        s"$tag: `$c` is not a target column " +
-          tcols.mkString("(", ", ", ")"))
-    }
-    val joined = source.as(sa).join(target.as(ta),
-      col(s"$sa.$keyCol") === col(s"$ta.$keyCol"), "left")
-    val matched = col(s"$ta.$keyCol").isNotNull
-    val scoped =
-      if (setSql.isEmpty) joined.where(!matched) // insert-only
-      else if (insMap.isEmpty) joined.where(matched) // update-only
-      else joined
-    val projected = scoped.select(tcols.map { c =>
-      val dt = targetSchema(c).dataType
-      val upd = sets.get(c.toLowerCase)
-        .map(e => expr(e).cast(dt)).getOrElse(col(s"$ta.$c"))
-      val ins = insMap.get(c.toLowerCase)
-        .map(e => expr(e).cast(dt)).getOrElse(lit(null).cast(dt))
-      when(matched, upd).otherwise(ins).as(c)
-    }: _*)
-    Seq(org.apache.spark.sql.Row(name,
-      store.mergeInto(view, GraftSqlParser.withCheckGuards(name, projected),
-        keyCol, statsCols = Seq(keyCol))))
   }
 }
 
@@ -2318,26 +2054,39 @@ final case class MergeInsertVals(cols: Seq[String], valsSql: String)
 final case class MergeClause(matched: Boolean, cond: Option[String],
                              action: MergeAction)
 
-/** The GENERAL conditional MERGE: any clause list, compiled to ONE
-  * projected-source keyed [[graft.sources.SnapshotStore.mergeInto]] —
-  * one left join of the source onto the target (conditions and SET/
-  * VALUES expressions can reference both sides by alias), then per
-  * target column a FIRST-MATCH-WINS `when` chain in clause order (the
-  * SQL:2003 / Delta precedence rule: a row matching two clauses takes
-  * the first). Matched rows firing a DELETE clause carry a tombstone
-  * column mergeInto drops; rows firing NO clause are filtered OUT of
-  * the source, so the target rows they shadow carry through the
-  * copy-on-write rewrite untouched. SET assignments are SIMULTANEOUS
-  * within a clause (one projection over the old row). Duplicate source
-  * keys refuse up front (the MERGE cardinality rule); only
-  * key-overlapping dirs rewrite.
+/** `MERGE INTO <t> [AS a] USING <src> [AS b] ON a.k = b.k <clauses>` —
+  * SQL:2003 / Delta MERGE: any list of `WHEN [NOT] MATCHED [AND cond]
+  * THEN action` clauses, compiled to ONE keyed
+  * [[graft.sources.SnapshotStore.mergeInto]] (copy-on-write of only
+  * the key-overlapping dirs, one atomic commit). Per source row the
+  * FIRST clause whose condition holds fires (the SQL precedence rule);
+  * rows firing a DELETE carry a tombstone column mergeInto drops, rows
+  * firing no clause are filtered out of the source, so the target rows
+  * they shadow carry through untouched. SET assignments are
+  * SIMULTANEOUS within a clause (one projection over the old row).
+  * Duplicate source keys refuse up front (the cardinality rule).
+  *
+  * The plan follows from the clauses:
+  *  - when the first matched clause is an unconditional `UPDATE SET *`
+  *    and the first unmatched one an unconditional `INSERT *`, the
+  *    outcome does not depend on the match: the source goes straight
+  *    to mergeInto (the upsert the speed-layer sinks perform);
+  *  - otherwise the source left-joins the target, narrowed to its
+  *    distinct key column unless some condition, SET or VALUES
+  *    expression (or a SET leaving a column unassigned) reads a target
+  *    column — DELETE values and fall-through rows never do.
+  *
+  * `src` is a registered view (read lazily, manifest-pinned), any
+  * session table or temp view, or an inline `USING (SELECT …)`; the
+  * last two materialize once, projected to the columns the clauses
+  * read. Returns (table, version).
   */
-case class GraftMergeWhenCommand(name: String, tAliasOpt: Option[String],
-                                 srcName: String, sAliasOpt: Option[String],
-                                 onCols: Seq[String],
-                                 clauses: Seq[MergeClause],
-                                 srcSql: Option[String] = None,
-                                 srcRaw: String = "")
+case class GraftMergeCommand(name: String, tAliasOpt: Option[String],
+                             srcName: String, sAliasOpt: Option[String],
+                             onCols: Seq[String],
+                             clauses: Seq[MergeClause],
+                             srcSql: Option[String] = None,
+                             srcRaw: String = "")
     extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
   override def output: Seq[Attribute] = Seq(
     AttributeReference("table", org.apache.spark.sql.types.StringType)(),
@@ -2345,6 +2094,8 @@ case class GraftMergeWhenCommand(name: String, tAliasOpt: Option[String],
   override def run(spark: org.apache.spark.sql.SparkSession)
       : Seq[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
+    import org.apache.spark.sql.catalyst.analysis.{Star, UnresolvedAttribute}
+    import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
     val tag = s"MERGE INTO $name"
     val (store, view) = GraftTableRegistry.required("MERGE INTO", name)
     MaterializedView.requireWritable("MERGE INTO", name)
@@ -2356,34 +2107,7 @@ case class GraftMergeWhenCommand(name: String, tAliasOpt: Option[String],
     val target = store.read(view)
     val targetSchema = target.schema
     val tcols = targetSchema.map(_.name)
-    // an expensive source QUERY/VIEW materializes once and feeds both
-    // the cardinality probe and the merge; a registered store view is
-    // a cheap manifest-pinned scan and stays lazy. An inline subquery
-    // source must carry an alias — its expressions have no other way
-    // to reference it (Delta's rule too).
-    require(srcSql.isEmpty || sAliasOpt.nonEmpty,
-      s"$tag: a subquery source needs an alias — USING (SELECT …) AS s")
-    val source = srcSql.map(q => spark.sql(q).localCheckpoint())
-      .getOrElse(GraftTableRegistry.lookup(srcName)
-        .map { case (s2, v2) => s2.read(v2) }
-        .getOrElse(spark.table(if (srcRaw.nonEmpty) srcRaw
-          else GraftSqlParser.quoteIdent(srcName)).localCheckpoint()))
-    GraftMergeCommand.requireUniqueSourceKeys(tag, source, keyCol)
-    val ta = tAliasOpt.getOrElse(name.split('.').last)
-    val sa = sAliasOpt.getOrElse(srcName.split('.').last)
-    require(!ta.equalsIgnoreCase(sa),
-      s"$tag: target and source aliases collide (`$ta`) — alias one side")
-    require(!tcols.exists(_.equalsIgnoreCase("_graft_del")),
-      s"$tag: `_graft_del` is reserved")
-    // per-clause validation + parsed SET/INSERT maps (unqualified
-    // lowercase column -> expression text), in clause order
-    val starAll = clauses.exists(c =>
-      c.action == MergeUpdateAll || c.action == MergeInsertAll)
-    if (starAll) tcols.foreach { c =>
-      require(source.columns.exists(_.equalsIgnoreCase(c)),
-        s"$tag: UPDATE/INSERT * needs source column `$c` " +
-          source.columns.mkString("(", ", ", ")"))
-    }
+    def isTcol(c: String) = tcols.exists(_.equalsIgnoreCase(c))
     def parseSets(setSql: String): Map[String, String] = {
       val pairs = GraftSqlParser.splitTopLevel(setSql).map { a =>
         val eq = a.indexOf('=')
@@ -2394,8 +2118,6 @@ case class GraftMergeWhenCommand(name: String, tAliasOpt: Option[String],
       require(m.size == pairs.size, s"$tag: duplicate SET column")
       require(!m.contains(keyCol.toLowerCase),
         s"$tag: a keyed merge cannot reassign the key `$keyCol`")
-      m.keySet.foreach(c => require(tcols.exists(_.toLowerCase == c),
-        s"$tag: `$c` is not a target column " + tcols.mkString("(", ", ", ")")))
       m
     }
     def parseIns(cols: Seq[String], valsSql: String): Map[String, String] = {
@@ -2406,15 +2128,73 @@ case class GraftMergeWhenCommand(name: String, tAliasOpt: Option[String],
       require(m.size == cols.size, s"$tag: duplicate INSERT column")
       require(m.contains(keyCol.toLowerCase),
         s"$tag: the INSERT column list must include the key `$keyCol`")
-      m.keySet.foreach(c => require(tcols.exists(_.toLowerCase == c),
-        s"$tag: `$c` is not a target column " + tcols.mkString("(", ", ", ")")))
       m
     }
+    // per-clause SET/INSERT maps (unqualified lowercase column ->
+    // expression text), in clause order
     val parsed: Seq[(MergeClause, Map[String, String])] = clauses.map {
       case c @ MergeClause(_, _, MergeUpdateSet(s)) => c -> parseSets(s)
       case c @ MergeClause(_, _, MergeInsertVals(cs, vs)) => c -> parseIns(cs, vs)
       case c => c -> Map.empty[String, String]
     }
+    parsed.flatMap(_._2.keySet).foreach(c => require(isTcol(c),
+      s"$tag: `$c` is not a target column " + tcols.mkString("(", ", ", ")")))
+    // an inline subquery source has no name of its own: it needs an
+    // alias as soon as a clause carries an expression (Delta's rule too)
+    val exprSql = clauses.flatMap(_.cond) ++ parsed.flatMap(_._2.values)
+    require(srcSql.isEmpty || sAliasOpt.nonEmpty || exprSql.isEmpty,
+      s"$tag: a subquery source needs an alias — USING (SELECT …) AS s")
+    val ta = tAliasOpt.getOrElse(name.split('.').last)
+    val sa = sAliasOpt.getOrElse(srcName.split('.').last)
+    // the unconditional `UPDATE SET * / INSERT *` pair: every source row
+    // lands whole whether it matched or not, so no join is built
+    val upsertAll =
+      clauses.find(_.matched).contains(MergeClause(true, None, MergeUpdateAll)) &&
+        clauses.find(!_.matched).contains(MergeClause(false, None, MergeInsertAll))
+    require(upsertAll || !ta.equalsIgnoreCase(sa),
+      s"$tag: target and source aliases collide (`$ta`) — alias one side")
+    require(upsertAll || !isTcol("_graft_del"), s"$tag: `_graft_del` is reserved")
+    // the column names the expressions mention; a subquery or star
+    // hides its references, so it counts as reading every column
+    val trees = exprSql.map(e =>
+      org.apache.spark.sql.graftbridge.ColumnBridge.expressionEager(expr(e)))
+    val opaque = trees.exists(_.exists {
+      case _: SubqueryExpression | _: Star => true
+      case _ => false
+    })
+    val refs: Seq[Seq[String]] = trees.flatMap(_.collect {
+      case a: UnresolvedAttribute => a.nameParts
+    })
+    def qualified(p: Seq[String], alias: String) =
+      p.length > 1 && p.head.equalsIgnoreCase(alias)
+    val starAll = clauses.exists(c =>
+      c.action == MergeUpdateAll || c.action == MergeInsertAll)
+    // an expensive source QUERY/VIEW materializes once, projected to the
+    // columns the clauses read, and feeds both the cardinality probe
+    // and the merge; a registered store view stays lazy
+    val graftSrc =
+      if (srcSql.nonEmpty) None else GraftTableRegistry.lookup(srcName)
+    val raw = srcSql.map(spark.sql).getOrElse(graftSrc
+      .map { case (s2, v2) => s2.read(v2) }
+      // a NON-graft source resolves by its ORIGINAL spelling — the
+      // canonical name collapses quoted multi-part structure
+      // (`my db`.src -> "my db.src"), which spark.table would misread
+      .getOrElse(spark.table(if (srcRaw.nonEmpty) srcRaw
+        else GraftSqlParser.quoteIdent(srcName))))
+    if (starAll) tcols.foreach { c =>
+      require(raw.columns.exists(_.equalsIgnoreCase(c)),
+        s"$tag: UPDATE/INSERT * needs source column `$c` " +
+          raw.columns.mkString("(", ", ", ")"))
+    }
+    val named = refs.flatten.map(_.toLowerCase).toSet
+    val source =
+      if (graftSrc.nonEmpty) raw
+      else raw.select(raw.columns.toSeq
+        .filter(c => opaque || c.equalsIgnoreCase(keyCol) ||
+          (starAll && isTcol(c)) || named(c.toLowerCase))
+        .map(c => raw.col("`" + c.replace("`", "``") + "`")): _*)
+        .localCheckpoint()
+    GraftMergeCommand.requireUniqueSourceKeys(tag, source, keyCol)
     // SQL:2003 / Delta reject target references in NOT MATCHED
     // conditions at analysis time — here every target column is NULL
     // (the left join's unmatched side), so `AND t.ok` would silently
@@ -2422,63 +2202,87 @@ case class GraftMergeWhenCommand(name: String, tAliasOpt: Option[String],
     clauses.filterNot(_.matched).flatMap(_.cond).foreach { cond =>
       val refsTarget = org.apache.spark.sql.graftbridge.ColumnBridge
         .expressionEager(expr(cond)).collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-              if a.nameParts.length > 1 &&
-                a.nameParts.head.equalsIgnoreCase(ta) => a
+          case a: UnresolvedAttribute if qualified(a.nameParts, ta) => a
         }
       require(refsTarget.isEmpty,
         s"$tag: a WHEN NOT MATCHED condition cannot reference the " +
           s"target (`${refsTarget.headOption.fold("")(_.name)}` in " +
           s"`$cond`) — every target column is NULL for unmatched rows")
     }
-    val joined = source.as(sa).join(target.as(ta),
-      col(s"$sa.$keyCol") === col(s"$ta.$keyCol"), "left")
-    val matched = col(s"$ta.$keyCol").isNotNull
-    def fire(c: MergeClause): org.apache.spark.sql.Column =
-      c.cond.map(e => coalesce(expr(e).cast("boolean"), lit(false)))
-        .getOrElse(lit(true))
-    val mClauses = parsed.filter(_._1.matched)
-    val iClauses = parsed.filterNot(_._1.matched)
-    def chain(pairs: Seq[(org.apache.spark.sql.Column, org.apache.spark.sql.Column)],
-              default: org.apache.spark.sql.Column) =
-      pairs.foldRight(default) { case ((f, v), acc) => when(f, v).otherwise(acc) }
-    val anyM = mClauses.map { case (c, _) => fire(c) }
-      .reduceOption(_ || _).getOrElse(lit(false))
-    val anyI = iClauses.map { case (c, _) => fire(c) }
-      .reduceOption(_ || _).getOrElse(lit(false))
-    val keep = (matched && anyM) || (!matched && anyI)
-    val delFlag = when(matched,
-      chain(mClauses.map { case (c, _) =>
-        fire(c) -> lit(c.action == MergeDelete) }, lit(false)))
-      .otherwise(lit(false))
-    val projected = joined.where(keep).select(tcols.map { c =>
-      val dt = targetSchema(c).dataType
-      def mValue(cl: MergeClause, sets: Map[String, String]) = cl.action match {
-        case MergeUpdateAll => col(s"$sa.$c").cast(dt)
-        case MergeUpdateSet(_) => sets.get(c.toLowerCase)
-          .map(e => expr(e).cast(dt)).getOrElse(col(s"$ta.$c"))
-        case _ => col(s"$ta.$c") // DELETE: old row, dropped by the flag
+    // CHECK guards skip rows the merge is DELETING — their values never
+    // land, so they cannot violate anything
+    val (rows, deleteCol) =
+      if (upsertAll) (GraftSqlParser.withCheckGuards(name, source), None)
+      else {
+        // a target column is read by a name qualified with the target's
+        // alias, by an unqualified target column name (it resolves in the
+        // join — ambiguously when the source has the column too), or by
+        // a SET that carries the old value of a column it does not assign
+        val readsTarget = opaque ||
+          refs.exists(p => qualified(p, ta) ||
+            (!qualified(p, sa) && isTcol(p.head))) ||
+          parsed.exists {
+            case (MergeClause(_, _, MergeUpdateSet(_)), sets) =>
+              tcols.exists(c => !c.equalsIgnoreCase(keyCol) &&
+                !sets.contains(c.toLowerCase))
+            case _ => false
+          }
+        val tSide =
+          if (readsTarget) target else target.select(col(keyCol)).distinct()
+        val joined = source.as(sa).join(tSide.as(ta),
+          col(s"$sa.$keyCol") === col(s"$ta.$keyCol"), "left")
+        val matched = col(s"$ta.$keyCol").isNotNull
+        def fire(c: MergeClause): org.apache.spark.sql.Column =
+          c.cond.map(e => coalesce(expr(e).cast("boolean"), lit(false)))
+            .getOrElse(lit(true))
+        val mClauses = parsed.filter(_._1.matched)
+        val iClauses = parsed.filterNot(_._1.matched)
+        def chain(pairs: Seq[(org.apache.spark.sql.Column, org.apache.spark.sql.Column)],
+                  default: org.apache.spark.sql.Column) =
+          pairs.foldRight(default) { case ((f, v), acc) => when(f, v).otherwise(acc) }
+        def anyFires(cs: Seq[(MergeClause, Map[String, String])]) =
+          cs.map { case (c, _) => fire(c) }.reduceOption(_ || _).getOrElse(lit(false))
+        // rows firing no clause leave the source; with an unconditional
+        // clause on each side every row fires, and no filter reads the
+        // match (so a key-only consumer of the rows needs no join)
+        val kept =
+          if (Seq(mClauses, iClauses).forall(_.exists(_._1.cond.isEmpty))) joined
+          else joined.where((matched && anyFires(mClauses)) ||
+            (!matched && anyFires(iClauses)))
+        val delFlag = when(matched,
+          chain(mClauses.map { case (c, _) =>
+            fire(c) -> lit(c.action == MergeDelete) }, lit(false)))
+          .otherwise(lit(false))
+        val projected = kept.select(tcols.map { c =>
+          val dt = targetSchema(c).dataType
+          // the matched row's key, and NULL for values that never land
+          val unread =
+            if (c.equalsIgnoreCase(keyCol)) col(s"$sa.$c").cast(dt)
+            else lit(null).cast(dt)
+          def mValue(cl: MergeClause, sets: Map[String, String]) = cl.action match {
+            case MergeUpdateAll => col(s"$sa.$c").cast(dt)
+            case MergeUpdateSet(_) => sets.get(c.toLowerCase).map(e => expr(e).cast(dt))
+              .getOrElse(if (c.equalsIgnoreCase(keyCol)) unread else col(s"$ta.$c"))
+            case _ => unread // DELETE: dropped by the flag
+          }
+          def iValue(cl: MergeClause, ins: Map[String, String]) = cl.action match {
+            case MergeInsertAll => col(s"$sa.$c").cast(dt)
+            case _ => ins.get(c.toLowerCase)
+              .map(e => expr(e).cast(dt)).getOrElse(lit(null).cast(dt))
+          }
+          when(matched,
+            chain(mClauses.map { case (cl, m) => fire(cl) -> mValue(cl, m) }, unread))
+            .otherwise(
+              chain(iClauses.map { case (cl, m) => fire(cl) -> iValue(cl, m) },
+                lit(null).cast(dt)))
+            .as(c)
+        } :+ delFlag.as("_graft_del"): _*)
+        (GraftSqlParser.withCheckGuards(name, projected,
+          exempt = col("_graft_del")), Some("_graft_del"))
       }
-      def iValue(cl: MergeClause, ins: Map[String, String]) = cl.action match {
-        case MergeInsertAll => col(s"$sa.$c").cast(dt)
-        case _ => ins.get(c.toLowerCase)
-          .map(e => expr(e).cast(dt)).getOrElse(lit(null).cast(dt))
-      }
-      when(matched,
-        chain(mClauses.map { case (cl, m) => fire(cl) -> mValue(cl, m) },
-          col(s"$ta.$c")))
-        .otherwise(
-          chain(iClauses.map { case (cl, m) => fire(cl) -> iValue(cl, m) },
-            lit(null).cast(dt)))
-        .as(c)
-    } :+ delFlag.as("_graft_del"): _*)
-    // CHECK guards skip rows the merge is DELETING — their carried old
-    // values never land, so they cannot violate anything
-    val guarded = GraftSqlParser.withCheckGuards(name, projected,
-      exempt = col("_graft_del"))
     Seq(org.apache.spark.sql.Row(name,
-      store.mergeInto(view, guarded, keyCol,
-        deleteCol = Some("_graft_del"), statsCols = Seq(keyCol))))
+      store.mergeInto(view, rows, keyCol, deleteCol = deleteCol,
+        statsCols = Seq(keyCol))))
   }
 }
 

@@ -63,33 +63,11 @@ private[serving] object LinAlg {
 }
 
 /** Linear AR(p) + exogenous regression, ridge-regularized, fit by
-  * Gaussian elimination on the normal equations. Deterministic.
+  * Gaussian elimination on the normal equations. Deterministic: the
+  * SARIMAX-shaped model with no differencing, MA or seasonal terms.
   */
-class ArxForecaster(p: Int = 2, ridge: Double = 1e-6) extends Forecaster {
-
-  override def predictNext(y: Array[Double], exog: Array[Array[Double]]): Double = {
-    val n = y.length
-    require(n > p, s"need more than $p observations, got $n")
-    val nExog = if (exog.nonEmpty) exog(0).length else 0
-    val dim = 1 + p + nExog // intercept + lags + exog
-    // rows t = p .. n-1: predict y(t) from [1, y(t-1..t-p), exog(t)]
-    val rows = (p until n).map { t =>
-      val x = new Array[Double](dim)
-      x(0) = 1.0
-      for (j <- 1 to p) x(j) = y(t - j)
-      for (j <- 0 until nExog) x(1 + p + j) = exog(t)(j)
-      (x, y(t))
-    }
-    val beta = LinAlg.ridgeFit(rows, dim, ridge)
-    // feature row for t = n
-    val xNext = new Array[Double](dim)
-    xNext(0) = 1.0
-    for (j <- 1 to p) xNext(j) = y(n - j)
-    for (j <- 0 until nExog)
-      xNext(1 + p + j) = if (exog.length > n - 1) exog(n - 1)(j) else exog.last(j)
-    (0 until dim).map(i => beta(i) * xNext(i)).sum
-  }
-}
+class ArxForecaster(p: Int = 2, ridge: Double = 1e-6)
+    extends SarimaxLiteForecaster(p = p, ridge = ridge)
 
 /** SARIMAX-shaped forecaster (reference: airflow/dags/Serving_layer/
   * prediction.py:64-73, a pmdarima SARIMAX): `d`-order differencing,
