@@ -817,7 +817,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * newest per view makes the cache O(live views); a time-travel read
     * of a superseded version just re-derives from footers (correct, one
     * plan-time job). Foreign-ref keys (clones) escape the prefix test —
-    * the global cap in [[readDirs]] bounds those.
+    * the cache's LRU bound covers those.
     */
   private def evictSchemaCache(view: String, keep: Seq[String]): Unit = {
     val prefix = dataRoot(view).toString + "/"
@@ -826,7 +826,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       // they are what lets [[readDirs]] recompose superseded or
       // time-travel dir LISTS (a CDC stream's from-version read, a
       // delete loop's growing vector list) without a footer job; the
-      // global cap in [[readDirs]] still bounds the degenerate case
+      // cache's LRU bound still covers the degenerate case
       if (k != keep && k.lengthCompare(1) > 0 &&
           k.headOption.exists(_.startsWith(prefix)))
         schemaCache.remove(k)
@@ -969,16 +969,14 @@ class SnapshotStore(spark: SparkSession, val root: String) {
   // plans with zero footer IO; any new dir list (new version) misses
   // and re-merges. Per-file column subsets still read correctly under
   // an explicit schema (missing columns surface NULL, the same
-  // evolution contract mergeSchema provides).
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[Seq[String], org.apache.spark.sql.types.StructType]
+  // evolution contract mergeSchema provides). The LRU bound backstops
+  // keys the per-view eviction can't claim (time-travel lists, foreign
+  // clone refs): a re-derive is one plan-time footer job, far cheaper
+  // than unbounded driver growth, and the keys in use stay hot.
+  private val schemaCache = new LruMap[Seq[String], StructType](512)
 
   private def readDirs(dirs: Seq[String], view: String): DataFrame = {
     val paths = dirs.map(d => dataRoot(view).resolve(d).toString)
-    // backstop bound for keys the per-view eviction can't claim
-    // (time-travel lists, foreign clone refs): a full re-derive is one
-    // plan-time footer job, far cheaper than unbounded driver growth
-    if (schemaCache.size > 512) schemaCache.clear()
     val sch = schemaCache.getOrElseUpdate(paths, {
       // compose a multi-dir list from the per-dir seeds when every dir
       // is cached with the SAME schema — the merge of identical schemas
@@ -3565,4 +3563,22 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     require(pins.contains(view), s"syncpoint does not pin $view (has ${pins.keys})")
     read(view, asOf = Some(pins(view)))
   }
+}
+
+/** A map bounded to `capacity` entries that evicts the least recently
+  * used one (a `get` or `update` counts as a use). Thread-safe: every
+  * access, reads included, reorders the entries under one lock; a
+  * `getOrElseUpdate` computes outside it.
+  */
+private[sources] final class LruMap[K, V](capacity: Int) {
+  private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size() > capacity
+  }
+  def get(k: K): Option[V] = synchronized(Option(m.get(k)))
+  def update(k: K, v: V): Unit = synchronized { m.put(k, v); () }
+  def remove(k: K): Unit = synchronized { m.remove(k); () }
+  def getOrElseUpdate(k: K, v: => V): V =
+    get(k).getOrElse { val computed = v; update(k, computed); computed }
+  /** A snapshot of the keys, least recently used first. */
+  def keys: Seq[K] = synchronized(m.keySet.asScala.toSeq)
 }

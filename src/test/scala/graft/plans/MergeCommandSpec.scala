@@ -1,9 +1,7 @@
 package graft.plans
 
 import java.nio.file.{Files, Paths}
-import graft.{Bench, SparkSpec}
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.SpanSugar._
+import graft.SparkSpec
 
 /** MERGE is one statement regex and one command: every clause list,
   * the upsert-all pair included, compiles through the same
@@ -56,22 +54,8 @@ class MergeCommandSpec extends SparkSpec {
   private def rows(st: graft.sources.SnapshotStore) =
     st.read("t").select("k", "p").as[(Long, Double)].collect().toMap
 
-  /** Spark jobs `sql` submits, counted under a job-group tag. */
-  private def jobs(sql: String): Long = {
-    val sc = spark.sparkContext
-    val stats = new Bench.RunStats
-    sc.addSparkListener(stats)
-    try {
-      Bench.tagged(sc, "merge")(spark.sql(sql).collect())
-      // the bus delivers events in order: once the sentinel's stage is
-      // in, every earlier job's events are too
-      Bench.tagged(sc, "end")(sc.parallelize(1 to 2, 1).count())
-      eventually(timeout(30.seconds)) {
-        assert(stats.counts.get("end").exists(_.stages == 1))
-      }
-      stats.counts.get("merge").fold(0L)(_.jobs)
-    } finally sc.removeSparkListener(stats)
-  }
+  /** Spark jobs `sql` submits. */
+  private def jobs(sql: String): Long = jobsIn(spark.sql(sql).collect())
 
   // the job bounds are the counts the upsert-all MERGE and its
   // matched-DELETE variant paid on their own dedicated command, before

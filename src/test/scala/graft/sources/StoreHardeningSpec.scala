@@ -68,8 +68,7 @@ class StoreHardeningSpec extends SparkSpec {
     val f = st.getClass.getDeclaredFields
       .find(_.getName.contains("schemaCache")).get
     f.setAccessible(true)
-    f.get(st).asInstanceOf[
-      scala.collection.concurrent.TrieMap[Seq[String], Any]].keys
+    f.get(st).asInstanceOf[LruMap[Seq[String], Any]].keys
   }
 
   test("schemaCache stays bounded across a commit loop (O(live dirs), one list)") {
@@ -82,8 +81,8 @@ class StoreHardeningSpec extends SparkSpec {
     // commit (at most one list per view), and per-DIR seeds are kept —
     // they are O(live data dirs), they are what lets readDirs recompose
     // superseded/time-travel lists (CDC from-version reads, delete
-    // loops) without a footer job, and the global 512 cap in readDirs
-    // bounds the degenerate case. 30 appends ⇒ 30 dir seeds + 1 list.
+    // loops) without a footer job, and the cache's 512-entry LRU bound
+    // covers the degenerate case. 30 appends ⇒ 30 dir seeds + 1 list.
     val keys = schemaCacheKeys(st)
     assert(keys.size <= 31,
       s"cache grew to ${keys.size} entries over 30 commits of one view")
