@@ -1322,10 +1322,36 @@ object GraftSqlParser {
     (checksFor.fold(src)(withCheckGuards(_, src)), obs)
   }
 
+  /** The one duplicate-key probe, behind MERGE's cardinality rule and
+    * PRIMARY KEY's intra-batch check: a key `df` carries on more than
+    * one row, cast to string, with its row count (NULL keys count as
+    * one key, as SQL's GROUP BY counts them). Keys already on the
+    * driver ([[graft.sources.SnapshotStore.localKeyFrame]]) are counted
+    * there, with no job; any other frame runs one narrow aggregate
+    * (key-only column pruning).
+    */
+  private[plans] def repeatedKey(df: org.apache.spark.sql.DataFrame,
+      k: String): Option[(String, Long)] = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    graft.sources.SnapshotStore.localKeyFrame(df, k) match {
+      case Some(keys) =>
+        val ks = keys.select(col(k), col(k).cast("string")).collect()
+          .map(r => (Option(r.get(0)), r.getString(1)))
+        val n = ks.groupMapReduce(_._1)(_ => 1L)(_ + _)
+        ks.collectFirst { case (v, s) if n(v) > 1 => (s, n(v)) }
+      case None =>
+        df.groupBy(col(k)).agg(count(lit(1)).as("_graft_n"))
+          .where(col("_graft_n") > 1)
+          .select(col(k).cast("string"), col("_graft_n"))
+          .limit(1).collect().headOption.map(r => (r.getString(0), r.getLong(1)))
+    }
+  }
+
   /** Opt-in PRIMARY KEY enforcement (`spark.graft.sql.enforcePrimaryKey`)
     * shared by the INSERT family, run BEFORE any write on a keyed
-    * table: the payload materializes once (localCheckpoint) and refuses
-    * a repeated key, naming it; with `survivors` — the rows of the
+    * table: the payload materializes once (localCheckpoint; rows
+    * already on the driver stand as they are) and refuses a repeated
+    * key, naming it ([[repeatedKey]]); with `survivors` — the rows of the
     * snapshot the payload lands beside — a semi-probe refuses a key
     * that already exists among them (key-only column pruning on the
     * target scan; the payload side is small and broadcasts). Without
@@ -1340,7 +1366,7 @@ object GraftSqlParser {
       view: String, src: org.apache.spark.sql.DataFrame,
       survivors: Option[org.apache.spark.sql.Column], where: String = "")
       : (org.apache.spark.sql.DataFrame, Option[Long]) = {
-    import org.apache.spark.sql.functions.{col, count, lit}
+    import org.apache.spark.sql.functions.col
     GraftTableRegistry.lookupKey(name).filter(_ =>
       spark.conf.getOption("spark.graft.sql.enforcePrimaryKey")
         .exists(_.toBoolean)) match {
@@ -1348,13 +1374,14 @@ object GraftSqlParser {
       case Some(k) =>
         val probedBase = survivors.map(_ =>
           store.versions(view).lastOption.getOrElse(0L))
-        val chk = src.localCheckpoint()
-        chk.groupBy(col(k)).agg(count(lit(1)).as("_graft_n"))
-          .where(col("_graft_n") > 1)
-          .select(col(k).cast("string")).limit(1).collect()
-          .headOption.foreach(r => throw new IllegalArgumentException(
-            s"$tag: the payload repeats PRIMARY KEY `$k` = ${r.getString(0)} " +
-              "— deduplicate it, or disable spark.graft.sql.enforcePrimaryKey"))
+        // rows already on the driver are a fixed set as they stand
+        val chk =
+          if (graft.sources.SnapshotStore.isLocal(src)) src
+          else src.localCheckpoint()
+        repeatedKey(chk, k).foreach { case (key, _) =>
+          throw new IllegalArgumentException(
+            s"$tag: the payload repeats PRIMARY KEY `$k` = $key " +
+              "— deduplicate it, or disable spark.graft.sql.enforcePrimaryKey") }
         survivors.foreach { rows =>
           store.read(view).where(rows).select(col(k))
             .join(chk.select(col(k)).distinct(), Seq(k), "left_semi")
@@ -2078,8 +2105,12 @@ final case class MergeClause(matched: Boolean, cond: Option[String],
   *
   * `src` is a registered view (read lazily, manifest-pinned), any
   * session table or temp view, or an inline `USING (SELECT …)`; the
-  * last two materialize once, projected to the columns the clauses
-  * read. Returns (table, version).
+  * last two are projected to the columns the clauses read, and
+  * materialize once unless their rows already sit on the driver (an
+  * optimized plan that is a LocalRelation, such as a VALUES list). Such
+  * a source runs its cardinality probe on the driver, and the
+  * upsert-all pair hands it to mergeInto, which answers its key
+  * questions there too. Returns (table, version).
   */
 case class GraftMergeCommand(name: String, tAliasOpt: Option[String],
                              srcName: String, sAliasOpt: Option[String],
@@ -2189,11 +2220,16 @@ case class GraftMergeCommand(name: String, tAliasOpt: Option[String],
     val named = refs.flatten.map(_.toLowerCase).toSet
     val source =
       if (graftSrc.nonEmpty) raw
-      else raw.select(raw.columns.toSeq
-        .filter(c => opaque || c.equalsIgnoreCase(keyCol) ||
-          (starAll && isTcol(c)) || named(c.toLowerCase))
-        .map(c => raw.col("`" + c.replace("`", "``") + "`")): _*)
-        .localCheckpoint()
+      else {
+        val narrowed = raw.select(raw.columns.toSeq
+          .filter(c => opaque || c.equalsIgnoreCase(keyCol) ||
+            (starAll && isTcol(c)) || named(c.toLowerCase))
+          .map(c => raw.col("`" + c.replace("`", "``") + "`")): _*)
+        // rows already on the driver (a VALUES list, a local frame) are
+        // a fixed set as they stand, and their key probes run there
+        if (graft.sources.SnapshotStore.isLocal(narrowed)) narrowed
+        else narrowed.localCheckpoint()
+      }
     GraftMergeCommand.requireUniqueSourceKeys(tag, source, keyCol)
     // SQL:2003 / Delta reject target references in NOT MATCHED
     // conditions at analysis time — here every target column is NULL
@@ -2290,26 +2326,19 @@ object GraftMergeCommand {
   /** The SQL MERGE cardinality rule: at most ONE source row may match
     * a target row — two source rows on the same key would both land
     * through the store's anti-join+union merge, a silent duplicate-key
-    * corruption of a keyed table. One narrow aggregate probe over the
-    * source keys (key-only column pruning; runs BEFORE any write), a
-    * clear refusal naming the offending key otherwise.
+    * corruption of a keyed table. One probe over the source keys
+    * ([[GraftSqlParser.repeatedKey]]; runs BEFORE any write), a clear
+    * refusal naming the offending key otherwise.
     */
   private[plans] def requireUniqueSourceKeys(tag: String,
-      source: org.apache.spark.sql.DataFrame, keyCol: String): Unit = {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    val dup = source.groupBy(col(keyCol))
-      .agg(count(lit(1)).as("_graft_n"))
-      .where(col("_graft_n") > 1)
-      .select(col(keyCol).cast("string"), col("_graft_n"))
-      .limit(1).collect()
-    dup.headOption.foreach { r =>
+      source: org.apache.spark.sql.DataFrame, keyCol: String): Unit =
+    GraftSqlParser.repeatedKey(source, keyCol).foreach { case (key, n) =>
       throw new IllegalArgumentException(
-        s"$tag: source has ${r.getLong(1)} rows for key `${r.getString(0)}` " +
+        s"$tag: source has $n rows for key `$key` " +
           "— SQL MERGE requires at most one source row per target row; " +
           "deduplicate the source (e.g. row_number() OVER " +
           "(PARTITION BY key ORDER BY …) = 1) first")
     }
-  }
 }
 
 /** `CREATE TABLE <name> (<ddl>) USING graft [PRIMARY KEY k]

@@ -68,7 +68,9 @@ import scala.jdk.CollectionConverters._
   *    rewritten; untouched dirs are carried into the new manifest by
   *    NAME, never re-read and never re-written. That is the exact shape
   *    Delta's file-pruned merge has, and the reason a 1 GB upsert into a
-  *    100 TB table does not cost 100 TB of IO.
+  *    100 TB table does not cost 100 TB of IO. A source whose rows
+  *    already sit on the driver (a VALUES list) answers those key
+  *    questions there, with no job.
   *  - '''change data feed''' ([[diff]]): insert/update/delete rows between
   *    any two retained versions, computed as one full-outer join of the
   *    two snapshots on the key (each side is manifest-resolved, so the
@@ -1076,10 +1078,12 @@ class SnapshotStore(spark: SparkSession, val root: String) {
                         dels: Seq[String]): DataFrame =
     if (dels.isEmpty) df
     else {
-      val delKeys = readDirs(dels, view).distinct()
+      val delKeys = readDirs(dels, view)
+      // a repeated build key cannot change an anti-join's result: only
+      // the shuffled branch dedups, to cut its exchange
       val hinted =
         if (delBytes(view, dels) <= dvBroadcastMaxBytes) broadcast(delKeys)
-        else delKeys
+        else delKeys.distinct()
       df.join(hinted, Seq(delKeys.columns.head), "left_anti")
     }
 
@@ -2077,7 +2081,10 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * bounds as exact decimal literals against the key in its own type
     * (a double round-trip misclassifies dirs for keys beyond 2^53 — a
     * lost update, not just an over-read). Statless dirs are always
-    * hit.
+    * hit. Keys that already sit on the driver ([[SnapshotStore.isLocal]])
+    * skip the aggregate: the flags (keys × dirs booleans) evaluate as a
+    * projection Catalyst folds into the local relation, and OR on the
+    * driver — no job.
     */
   private def dirsHitByKeys(view: String, dirs: Seq[String], keyCol: String,
                             keys: DataFrame): (Seq[String], Seq[String]) = {
@@ -2087,17 +2094,19 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val hit: Set[String] =
       if (ranged.isEmpty) Set.empty
       else {
-        val aggs = ranged.map { case (_, (numeric, lo, hi)) =>
+        val flags = ranged.map { case (_, (numeric, lo, hi)) =>
           val kc = if (numeric) col(keyCol) else col(keyCol).cast("string")
           val (l, h) =
             if (numeric) (lit(new java.math.BigDecimal(lo)),
               lit(new java.math.BigDecimal(hi)))
             else (lit(lo), lit(hi))
-          max(kc.between(l, h))
+          kc.between(l, h)
         }
-        val r = keys.agg(aggs.head, aggs.tail: _*).head()
+        val rows =
+          if (SnapshotStore.isLocal(keys)) keys.select(flags: _*).collect()
+          else keys.agg(max(flags.head), flags.tail.map(max): _*).collect()
         ranged.zipWithIndex.collect {
-          case ((d, _), i) if !r.isNullAt(i) && r.getBoolean(i) => d
+          case ((d, _), i) if rows.exists(r => !r.isNullAt(i) && r.getBoolean(i)) => d
         }.toSet
       }
     dirs.partition(d => hit.contains(d) || statless.contains(d))
@@ -2115,8 +2124,14 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * every other dir is carried into the new manifest BY NAME, costing
     * zero IO. The rewrite is one left-anti join (drop shadowed/deleted
     * targets) + union of the upserts, written as a single new dir with
-    * fresh stats. A concurrent writer landing first is CLASSIFIED, not
-    * blindly thrown: provably-disjoint interleaved commits (blind
+    * fresh stats. A source whose rows already sit on the driver (its
+    * optimized plan is a LocalRelation — a VALUES list, a local frame)
+    * answers every key question there: its key set is read back with
+    * no job, the dir skipping evaluates on the driver, the anti-join
+    * becomes a NULL-safe `NOT key IN (…)` filter, and a carried vector
+    * holding none of its keys carries as it stands. Any other source
+    * keeps the distributed plans. A concurrent writer landing first is
+    * CLASSIFIED, not blindly thrown: provably-disjoint interleaved commits (blind
     * appends / rewrites that touched none of this merge's read set,
     * added nothing overlapping its key range, and changed no DV or
     * schema metadata) rebase the merge onto the new head — manifest-only,
@@ -2156,6 +2171,17 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // NULLs (what the whole-table mergeSchema read would yield) before
     // the anti-join/union instead of failing the select.
     def aligned(df: DataFrame): DataFrame = alignedTo(df, targetSchema)
+    // the source's non-NULL keys when they sit on the driver; a NULL
+    // key matches no target row, and would make NOT IN answer NULL
+    val localKeyFrame = SnapshotStore.localKeyFrame(source, keyCol)
+    val localKeys = localKeyFrame.map(_.collect().flatMap(r => Option(r.get(0))).distinct)
+    // drop the rows of `df` whose key the source carries: a NULL key
+    // survives either way, as it does under the anti-join
+    def unshadowed(df: DataFrame): DataFrame = localKeys match {
+      case Some(ks) => df.where(col(keyCol).isNull || !col(keyCol).isin(ks: _*))
+      case None =>
+        df.join(source.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
+    }
     val (touched, untouched) = dirsHitByKeys(view, dirs, keyCol, source)
     // deletion vectors of the base snapshot: the touched-dir read must
     // honor them (a rewritten dir is BORN clean — resurrecting deleted
@@ -2165,10 +2191,10 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val baseDels = manifestDels(view, base)
     val rewritten =
       if (touched.isEmpty) upserts
-      else aligned(applyRenames(
-          applyDels(readDirs(touched, view), view, baseDels), view, base))
-        .join(source.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-        .unionByName(upserts)
+      else
+        unshadowed(aligned(applyRenames(
+          applyDels(readDirs(touched, view), view, baseDels), view, base)))
+          .unionByName(upserts)
     // Size the rewrite's file count from the touched dirs' bytes (the
     // dominant term — upserts are the small side of a merge): a keyed
     // maintenance loop otherwise fragments its store into
@@ -2194,11 +2220,13 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       if (baseDels.isEmpty) Nil
       else {
         val delKeys = readDirs(baseDels, view)
-        if (delKeys.columns.head != keyCol) baseDels
+        // driver-held keys probe the vector first: when it holds none
+        // of them, it carries as it stands, with nothing rewritten
+        def holdsSourceKey = localKeys.forall(ks => ks.nonEmpty &&
+          delKeys.where(col(keyCol).isin(ks: _*)).limit(1).collect().nonEmpty)
+        if (delKeys.columns.head != keyCol || !holdsSourceKey) baseDels
         else {
-          val remaining = delKeys.distinct()
-            .join(source.select(col(keyCol)).distinct(), Seq(keyCol),
-              "left_anti")
+          val remaining = unshadowed(delKeys.distinct())
           // write-then-check with an observed count: one execution of
           // the subtraction plan instead of isEmpty-probe + write. The
           // write parallelizes past the broadcast byte bound — a merge
@@ -2245,9 +2273,10 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // first lost race (localCheckpoint): re-running an expensive or
     // non-deterministic source lineage per rebase attempt would both
     // cost a job per attempt and weaken the proof (the probed keys
-    // must be ONE fixed set across attempts)
-    lazy val probeKeys =
-      source.select(col(keyCol)).distinct().localCheckpoint()
+    // must be ONE fixed set across attempts). Driver-held keys are
+    // that fixed set already.
+    lazy val probeKeys = localKeyFrame.getOrElse(
+      source.select(col(keyCol)).distinct().localCheckpoint())
     publishAtHead(view, base, txns = txn.toSet) { (from, head, e) =>
       val deltas = interleavedDeltas(view, from, head)
       if (deltas.exists(d => d.metaChanged || d.delsChanged ||
@@ -3581,4 +3610,35 @@ private[sources] final class LruMap[K, V](capacity: Int) {
     get(k).getOrElse { val computed = v; update(k, computed); computed }
   /** A snapshot of the keys, least recently used first. */
   def keys: Seq[K] = synchronized(m.keySet.asScala.toSeq)
+}
+
+object SnapshotStore {
+  /** Whether `df`'s rows already sit on the driver: its optimized plan
+    * is a LocalRelation (a VALUES list, a local Seq, or a projection
+    * or filter Catalyst's ConvertToLocalRelation folded into one).
+    * Such a frame is a fixed row set, and reading it back, or a
+    * projection over it, runs no job.
+    */
+  def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** `df`'s `keyCol` as a one-column frame whose rows sit on the
+    * driver, when [[isLocal]] holds and the key's value equality on
+    * the driver is SQL's: integral, decimal, boolean, date, timestamp
+    * or plain string keys. Floating keys (SQL equates -0.0 and 0.0),
+    * binary, collated and nested keys get None, as does any other
+    * source: the caller keeps its distributed plan.
+    */
+  def localKeyFrame(df: DataFrame, keyCol: String): Option[DataFrame] = {
+    import org.apache.spark.sql.types._
+    val keys = df.select(col(keyCol))
+    val byValue = keys.schema.head.dataType match {
+      case FloatType | DoubleType => false
+      case _: NumericType | BooleanType | DateType | TimestampType |
+           TimestampNTZType => true
+      case t => t == StringType
+    }
+    if (byValue && isLocal(keys)) Some(keys) else None
+  }
 }

@@ -57,14 +57,14 @@ class MergeCommandSpec extends SparkSpec {
   /** Spark jobs `sql` submits. */
   private def jobs(sql: String): Long = jobsIn(spark.sql(sql).collect())
 
-  // the job bounds are the counts the upsert-all MERGE and its
-  // matched-DELETE variant paid on their own dedicated command, before
-  // every form compiled through the clause list
-  test("the unconditional upsert-all MERGE joins no target: at most 8 jobs") {
+  // the matched-DELETE bound is the count its variant paid on its own
+  // dedicated command, before every form compiled through the clause
+  // list; the upsert-all bound is the count its local source pays
+  test("the unconditional upsert-all MERGE joins no target: at most 1 job") {
     val (st, name) = fresh()
     val j = jobs(s"""MERGE INTO $name AS t USING ${name}_src AS s ON t.k = s.k
       WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""")
-    assert(j <= 8, s"$j jobs")
+    assert(j <= 1, s"$j jobs")
     val m = rows(st)
     assert(m.size == 210 && m(195L) == -195.0 && m(205L) == -205.0 &&
       m(5L) == 5.0, m.toString)
@@ -103,5 +103,24 @@ class MergeCommandSpec extends SparkSpec {
     val m = rows(st)
     assert(!m.contains(7L), "matched and flagged: deleted")
     assert(m.get(500L).contains(5.0), "unmatched and flagged: inserted")
+  }
+
+  test("a VALUES-sourced upsert-all MERGE into a table holding a deletion " +
+      "vector probes its keys on the driver: at most 3 jobs") {
+    val (st, name) = fresh()
+    spark.sql(s"DELETE FROM $name WHERE k = 5")
+    val v = st.versions("t").max
+    assert(st.manifestDels("t", v).nonEmpty, "the DELETE must leave a vector")
+    spark.sql(s"""CREATE OR REPLACE TEMPORARY VIEW ${name}_vals AS
+      SELECT * FROM VALUES (150L, -150.0D, 's'), (199L, -199.0D, 's'),
+      (300L, -300.0D, 's') AS s(k, p, seg)""")
+    val j = jobs(s"""MERGE INTO $name AS t USING ${name}_vals AS s ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""")
+    assert(j <= 3, s"$j jobs")
+    // no source key is in the vector: it carries as it stands
+    assert(st.manifestDels("t", v + 1) == st.manifestDels("t", v))
+    val m = rows(st)
+    assert(m.size == 200 && !m.contains(5L) && m(150L) == -150.0 &&
+      m(199L) == -199.0 && m(300L) == -300.0 && m(4L) == 4.0, m.toString)
   }
 }
