@@ -2,7 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{NumericType, StructType}
+import org.apache.spark.sql.types.{DataType, NumericType, StructType}
+import org.json4s.{JArray, JInt, JLong, JObject, JString, JValue, jvalue2monadic}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -82,10 +83,13 @@ import scala.jdk.CollectionConverters._
   *    compaction materializes, time travel and restore see each
   *    version's own vector set.
   *
-  * Reads merge schemas across data dirs (`mergeSchema`), so an append
-  * that adds a column is readable immediately — old rows surface NULL
-  * for the new column (schema evolution). At 100 TB the merged schema
-  * would ride in the manifest instead of being re-derived from footers.
+  * Each manifest records its snapshot's physical schema (`schema`, the
+  * Delta `metaData.schemaString` idea): an append that adds a column
+  * publishes the union of the predecessor's schema and the written one,
+  * so old rows surface NULL for the new column (schema evolution), and
+  * every read plans from the manifest without opening a footer. A
+  * manifest written before the field existed takes the footer merge of
+  * its dirs, until the table's next commit records the field.
   *
   * At 100 TB the manifest lists file paths, not row data — commits and
   * time travel stay O(files), and reads plan partition pruning from the
@@ -132,32 +136,99 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       .sorted
   }
 
-  // manifest = {"dirs":[...],"txns":[...]} — dirs are the snapshot's
-  // data directories; txns the applied-transaction ids carried forward
-  // across EVERY commit (append, overwrite, merge, compact), so the
-  // exactly-once guarantee of [[appendOnce]] survives a table rewrite
-  // (deriving txns from live dir names would erase them on OPTIMIZE —
-  // Delta persists setTransaction state in the snapshot for the same
-  // reason). Names/ids contain no quotes/escapes by construction.
-  private def manifestField(txt: String, field: String): Seq[String] = {
-    val m = ("\"" + field + "\"\\s*:\\s*\\[([^\\]]*)\\]").r
-    m.findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-      .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      .filter(_.nonEmpty).toSeq
+  /** One parsed manifest, a JSON object:
+    *  - `dirs`: the snapshot's data directories;
+    *  - `dels`: its deletion-vector dirs ([[manifestDels]]);
+    *  - `ts`: the commit timestamp ([[commitTimestamp]]);
+    *  - `files`: per-file ingestion fences ([[manifestFiles]]);
+    *  - `drops`, `renames`, `widens`: the metadata-only column DDL, a
+    *    rename encoded `old>new` and a widening `col>typeDDL` with the
+    *    DDL's commas as `;` ([[manifestRenames]], [[manifestWidens]]);
+    *  - `txns`: the applied-transaction ids, carried forward across
+    *    EVERY commit (append, overwrite, merge, compact), so the
+    *    exactly-once guarantee of [[appendOnce]] survives a table
+    *    rewrite (deriving txns from live dir names would erase them on
+    *    OPTIMIZE — Delta persists setTransaction state in the snapshot
+    *    for the same reason);
+    *  - `schema`: the physical schema of the snapshot's data dirs
+    *    (`StructType.json`, all fields nullable as a footer read
+    *    returns them), and `delSchema`, the one-column schema of its
+    *    deletion vectors.
+    * A field a manifest predates reads as None (`ts`, `files`,
+    * `schema`, `delSchema`) or empty.
+    */
+  private case class Manifest(dirs: Seq[String], dels: Seq[String],
+                              ts: Option[Long], files: Option[Set[Long]],
+                              drops: Seq[String],
+                              renames: Seq[(String, String)],
+                              widens: Seq[(String, String)],
+                              txns: Set[Long],
+                              schema: Option[StructType],
+                              delSchema: Option[StructType]) {
+    def json: String = {
+      def strs(xs: Seq[String]) = JArray(xs.map(JString(_)).toList)
+      def longs(xs: Set[Long]) = JArray(xs.toList.sorted.map(JLong(_)))
+      def struct(s: StructType) = JString(s.json)
+      org.json4s.jackson.JsonMethods.compact(JObject(List(
+        Some("dirs" -> strs(dirs)), Some("dels" -> strs(dels)),
+        ts.map(t => "ts" -> JLong(t)), files.map(f => "files" -> longs(f)),
+        Some("drops" -> strs(drops)),
+        Some("renames" -> strs(renames.map { case (o, n) => s"$o>$n" })),
+        Some("widens" -> strs(widens.map { case (c, t) =>
+          s"$c>${t.replace(',', ';')}" })),
+        Some("txns" -> longs(txns)),
+        schema.map(s => "schema" -> struct(s)),
+        delSchema.map(s => "delSchema" -> struct(s))).flatten))
+    }
   }
 
-  // Published manifests are IMMUTABLE, so their text caches by
-  // (view, version) — a snapshot read parses dirs + dels + drops +
-  // renames (4 fields) and the maintenance loops re-consult several
-  // more times per commit; without the cache each parse re-reads the
-  // same small file. Bounded (manifests are tiny, but a long-running
-  // process over many views must not grow without limit); vacuum
-  // purges the view's deleted versions so a vacuumed manifest cannot
-  // be served from memory.
-  private val manifestCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+  // JSON arrays of a parsed manifest or syncpoint; None = field absent
+  private def jsonArray(j: JValue, f: String): Option[List[JValue]] =
+    j \ f match {
+      case JArray(xs) => Some(xs)
+      case _ => None
+    }
+  private def jsonLong(v: JValue): Option[Long] = v match {
+    case JInt(n) => Some(n.toLong)
+    case JLong(n) => Some(n)
+    case _ => None
+  }
+  private def jsonStrings(j: JValue, f: String): Seq[String] =
+    jsonArray(j, f).getOrElse(Nil).collect { case JString(x) => x }
+  private def jsonLongs(j: JValue, f: String): Option[Set[Long]] =
+    jsonArray(j, f).map(_.flatMap(jsonLong).toSet)
+  private def parseJson(p: Path): JValue =
+    org.json4s.jackson.JsonMethods.parse(Files.readString(p))
 
-  private def manifestText(view: String, v: Long): String = {
+  private def parseManifest(j: JValue): Manifest = {
+    def pairs(f: String) = jsonStrings(j, f).map { x =>
+      val i = x.indexOf('>')
+      (x.take(i), x.drop(i + 1))
+    }
+    def struct(f: String) = j \ f match {
+      case JString(x) => Some(DataType.fromJson(x).asInstanceOf[StructType])
+      case _ => None
+    }
+    Manifest(jsonStrings(j, "dirs"), jsonStrings(j, "dels"),
+      jsonLong(j \ "ts"), jsonLongs(j, "files"), jsonStrings(j, "drops"),
+      pairs("renames"),
+      pairs("widens").map { case (c, t) => c -> t.replace(';', ',') },
+      jsonLongs(j, "txns").getOrElse(Set.empty), struct("schema"),
+      struct("delSchema"))
+  }
+
+  // Published manifests are IMMUTABLE, so their parsed records cache by
+  // (view, version) — a snapshot read consults dirs, dels, the schemas
+  // and the column DDL, and the maintenance loops re-consult several
+  // more times per commit; without the cache each would re-read and
+  // re-parse the same small file. Bounded (records are small, but a
+  // long-running process over many views must not grow without limit);
+  // vacuum purges the view's deleted versions so a vacuumed manifest
+  // cannot be served from memory.
+  private val manifestCache =
+    scala.collection.concurrent.TrieMap.empty[(String, Long), Manifest]
+
+  private def manifest(view: String, v: Long): Manifest = {
     if (manifestCache.size > 4096) {
       // evict superseded versions per view first (readers want heads;
       // time-travel re-reads are one tiny file) — wholesale clear only
@@ -170,17 +241,14 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       if (manifestCache.size > 4096) manifestCache.clear()
     }
     manifestCache.getOrElseUpdate((view, v),
-      Files.readString(manifestPath(view, v)))
+      parseManifest(parseJson(manifestPath(view, v))))
   }
 
   private def readManifest(view: String, v: Long): Seq[String] =
-    manifestField(manifestText(view, v), "dirs")
+    manifest(view, v).dirs
 
   private def manifestTxns(view: String, v: Long): Set[Long] =
-    manifestField(manifestText(view, v), "txns")
-      .map(_.toLong).toSet
-
-  private val TsField = """"ts"\s*:\s*(\d+)""".r
+    manifest(view, v).txns
 
   /** Wall-clock commit timestamp of version `v` (epoch millis) — the
     * `TIMESTAMP AS OF` anchor. Recorded in the manifest at publish with
@@ -192,8 +260,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * fallback Delta documents for non-ICT tables).
     */
   def commitTimestamp(view: String, v: Long): Long =
-    TsField.findFirstMatchIn(manifestText(view, v)).map(_.group(1).toLong)
-      .getOrElse(
+    manifest(view, v).ts.getOrElse(
         Files.getLastModifiedTime(manifestPath(view, v)).toMillis)
 
   /** Resolve a wall-clock instant to the snapshot a reader AT that
@@ -222,7 +289,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * no-rewrite structure.
     */
   def manifestDels(view: String, v: Long): Seq[String] =
-    manifestField(manifestText(view, v), "dels")
+    manifest(view, v).dels
 
   /** Per-file ingestion fences ([[fileFence]]) folded into snapshot
     * `v` — their OWN manifest field, disjoint from the txn-id space by
@@ -231,8 +298,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * appendOnce). Absent in pre-field manifests ⇒ empty.
     */
   def manifestFiles(view: String, v: Long): Set[Long] =
-    manifestField(manifestText(view, v), "files")
-      .map(_.toLong).toSet
+    manifest(view, v).files.getOrElse(Set.empty)
 
   /** Columns DROPPED (metadata-only) as of snapshot `v` — recorded in
     * the manifest and applied as a read-time projection, so the drop
@@ -241,7 +307,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * clears the list — the rewritten data physically lacks the column.
     */
   def manifestDrops(view: String, v: Long): Seq[String] =
-    manifestField(manifestText(view, v), "drops")
+    manifest(view, v).drops
 
   /** Column RENAMES (metadata-only) as of snapshot `v`, in application
     * order, each encoded `old>new` — the read-time projection maps the
@@ -251,25 +317,17 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * list (the rewritten data is born under the new names).
     */
   def manifestRenames(view: String, v: Long): Seq[(String, String)] =
-    manifestField(manifestText(view, v), "renames")
-      .map { s =>
-        val i = s.indexOf('>')
-        (s.take(i), s.drop(i + 1))
-      }
+    manifest(view, v).renames
 
   /** Column TYPE WIDENINGS (metadata-only) as of snapshot `v`, each
     * encoded `col>typeDDL` (a DDL comma — `decimal(12,2)` — rides as
-    * `;` to stay clear of the manifest's comma-split parse) — applied
+    * `;`, the encoding manifests have always used) — applied
     * as a read-time cast, so the widen is zero data IO, versioned like
     * a rename (time travel keeps each version's own type), and cleared
     * by the next full rewrite (the rewritten data is born wide).
     */
   def manifestWidens(view: String, v: Long): Seq[(String, String)] =
-    manifestField(manifestText(view, v), "widens")
-      .map { s =>
-        val i = s.indexOf('>')
-        (s.take(i), s.drop(i + 1).replace(';', ','))
-      }
+    manifest(view, v).widens
 
   /** The data-dir names snapshot `v` (default: latest) is made of —
     * public so tests can pin copy-on-write behavior (which dirs a merge
@@ -291,12 +349,13 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     */
   private val StatsFile = "_stats.tsv"
 
-  private def writeStats(view: String, dirName: String,
+  private def writeStats(view: String, dirName: String, schema: StructType,
                          bloomCols: Seq[String],
                          knownRows: Option[Long] = None): Unit = {
     if (bloomCols.isEmpty) return
     val path = dataRoot(view).resolve(dirName)
-    val written = spark.read.parquet(path.toString)
+    // the written frame's schema: no footer read (a schema-inference job)
+    val written = spark.read.schema(schema).parquet(path.toString)
     // Bloom sidecars: point-lookup skipping for columns whose values
     // interleave across commits (min/max ranges all overlap, so range
     // stats prune nothing — digest/key probes are exactly this shape).
@@ -408,15 +467,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
         dataRoot(view).resolve(dirName).resolve(StatsFile),
         lines.mkString("\n"))
     }
-    // per-dir schema seed: the written frame's schema IS the dir's
-    // parquet schema (the same driver-known-schema contract
-    // [[seedSchemaCache]] already relies on for dir lists), and
-    // [[readDirs]] composes multi-dir lists from identical per-dir
-    // seeds — so later reads of ANY list over seeded dirs (old-version
-    // CDC reads, growing vector lists) plan with zero footer jobs
-    schemaCache.update(Seq(dataRoot(view).resolve(dirName).toString),
-      df.schema)
-    writeStats(view, dirName, bloomCols, observedRows)
+    writeStats(view, dirName, df.schema, bloomCols, observedRows)
   }
 
   /** The shared write-sizing rule for copy-on-write rewrites: coalesce
@@ -446,21 +497,23 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * columns: None carries the predecessor's list (append-shaped
     * publishes), Some sets it explicitly (overwrite/rewrite publishes
     * — the written data defines the physical schema, so a full rewrite
-    * clears the list).
+    * clears the list). `schema` / `delSchema` = the physical schemas of
+    * `dirs` and `dels` ([[schemaOver]]); None records no field, and
+    * reads of the version then take the footer merge.
     */
   private def publish(view: String, next: Long, dirs: Seq[String],
                       txns: Set[Long], dels: Seq[String] = Nil,
                       filesExtra: Set[Long] = Set.empty,
                       drops: Option[Seq[String]] = None,
                       renames: Option[Seq[(String, String)]] = None,
-                      widens: Option[Seq[(String, String)]] = None): Unit = {
+                      widens: Option[Seq[(String, String)]] = None)
+                     (schema: Option[StructType],
+                      delSchema: Option[StructType] = None): Unit = {
     // predecessor for the carried fields — the latest RETAINED version
     // below `next` (vacuum may have dropped next-1)
-    val prevV = versions(view).filter(_ < next).lastOption
-    val files = prevV.map(manifestFiles(view, _)).getOrElse(Set.empty) ++
-      filesExtra
-    val dropped = drops.getOrElse(
-      prevV.map(manifestDrops(view, _)).getOrElse(Nil))
+    val prev = versions(view).filter(_ < next).lastOption.map(manifest(view, _))
+    val files = prev.flatMap(_.files).getOrElse(Set.empty) ++ filesExtra
+    val dropped = drops.getOrElse(prev.map(_.drops).getOrElse(Nil))
     // renames share the drops lifecycle exactly: None carries, a full
     // rewrite passes Some(Nil) — the Option arrives tied to `drops` at
     // every call site, so the two lists stay in lockstep
@@ -470,7 +523,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
         // clear with it; a site restoring/cloning specific state passes
         // its own renames explicitly
         case Some(Nil) => Nil
-        case _ => prevV.map(manifestRenames(view, _)).getOrElse(Nil)
+        case _ => prev.map(_.renames).getOrElse(Nil)
       })
     // widens share the drops/renames lifecycle exactly: None carries,
     // a full rewrite (drops = Some(Nil)) clears — rewritten data is
@@ -478,7 +531,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val widened = widens.getOrElse(
       drops match {
         case Some(Nil) => Nil
-        case _ => prevV.map(manifestWidens(view, _)).getOrElse(Nil)
+        case _ => prev.map(_.widens).getOrElse(Nil)
       })
     Files.createDirectories(manifestDir(view))
     // commit timestamp, monotonic-guarded against the latest retained
@@ -500,27 +553,15 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // COPY INTO legacy auto-consult keys on, one unrelated stream/DML
     // commit before the first post-upgrade COPY INTO would silently
     // re-load every previously loaded file
-    val writeFilesField = files.nonEmpty || prevV.isEmpty ||
-      prevV.exists(v => manifestText(view, v).contains("\"files\":"))
+    val writeFilesField = files.nonEmpty || prev.forall(_.files.isDefined)
+    val m = Manifest(dirs, dels, Some(ts),
+      Some(files).filter(_ => writeFilesField), dropped, renamed, widened,
+      txns, schema, delSchema.filter(_ => dels.nonEmpty))
     val tmp = Files.createTempFile(manifestDir(view), s".v$next", ".tmp")
-    val text =
-      dirs.map(d => "\"" + d + "\"").mkString("{\"dirs\":[", ",", "],") +
-        dels.map(d => "\"" + d + "\"").mkString("\"dels\":[", ",", "],") +
-        s""""ts":$ts,""" +
-        (if (writeFilesField)
-          files.toSeq.sorted.mkString("\"files\":[", ",", "],")
-        else "") +
-        dropped.map(d => "\"" + d + "\"").mkString("\"drops\":[", ",", "],") +
-        renamed.map { case (o, nn) => "\"" + o + ">" + nn + "\"" }
-          .mkString("\"renames\":[", ",", "],") +
-        widened.map { case (c, t) =>
-          "\"" + c + ">" + t.replace(',', ';') + "\"" }
-          .mkString("\"widens\":[", ",", "],") +
-        txns.toSeq.sorted.mkString("\"txns\":[", ",", "]}")
-    Files.writeString(tmp, text)
+    Files.writeString(tmp, m.json)
     try {
       Files.createLink(manifestPath(view, next), tmp)
-      manifestCache.update((view, next), text)
+      manifestCache.update((view, next), m)
     }
     catch { case _: java.nio.file.FileAlreadyExistsException =>
       throw new SnapshotConflict(s"$view: version $next already committed")
@@ -536,7 +577,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * Delta's ConflictChecker AddFile/RemoveFile/metadata
     * classification, reduced to this store's dir granularity.
     */
-  private case class CommitDelta(added: Set[String], removed: Set[String],
+  private case class CommitDelta(v: Long,
+                                 added: Set[String], removed: Set[String],
                                  delsAdded: Set[String],
                                  delsRemoved: Set[String],
                                  metaChanged: Boolean) {
@@ -556,7 +598,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       val db = readManifest(view, b).toSet
       val dela = manifestDels(view, a).toSet
       val delb = manifestDels(view, b).toSet
-      CommitDelta(
+      CommitDelta(b,
         added = db -- da, removed = da -- db,
         delsAdded = delb -- dela, delsRemoved = dela -- delb,
         metaChanged = manifestDrops(view, a) != manifestDrops(view, b) ||
@@ -681,10 +723,10 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       // vector, an interleaved vector keyed by a DIFFERENT column must
       // conflict — two racing FIRST-EVER deletes with different keys
       // both pass the empty-prevDels key check, and a rebased union
-      // would anti-join only on the merged schema's first column,
+      // would anti-join only on the vector schema's first column,
       // silently dropping the other vector's deletes
-      deltas.flatMap(_.delsAdded).distinct.foreach { d =>
-        if (readDirs(Seq(d), view).columns.head != kc) throw e
+      deltas.filter(_.delsAdded.nonEmpty).foreach { d =>
+        if (!vectorKey(view, d.v).contains(kc)) throw e
       }
       if (added.nonEmpty) {
         val (hit, _) = dirsHitByKeys(view, added, kc, kf)
@@ -765,75 +807,10 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       publish(view, at + 1, dirs, prevTxns ++ txns,
         if (wipe) Nil else manifestDels(view, at),
         filesExtra = files,
-        drops = if (wipe) Some(Nil) else None)
-      seedSchemaCache(view, dirs, schema,
-        prev = if (wipe) None else Some(readManifest(view, at)))
+        drops = if (wipe) Some(Nil) else None)(
+        if (wipe) unionSchemas(Seq(schema)) else schemaOver(view, at, schema),
+        if (wipe) None else vectorSchema(view, at))
     }
-
-  /** Pre-populate the merged-schema cache for a JUST-committed dir list
-    * from what the commit already knows in the driver (the written df's
-    * schema, merged onto the predecessor's cached schema for appends) —
-    * the first read of the new version then plans with zero footer IO.
-    * Merge failure or a cold predecessor just skips the seed; the read
-    * path falls back to the footer merge.
-    */
-  private def seedSchemaCache(view: String, dirs: Seq[String],
-                              written: org.apache.spark.sql.types.StructType,
-                              prev: Option[Seq[String]]): Unit = {
-    val paths = dirs.map(d => dataRoot(view).resolve(d).toString)
-    prev match {
-      case None => schemaCache.update(paths, written)
-      case Some(pdirs) =>
-        val ppaths = pdirs.map(d => dataRoot(view).resolve(d).toString)
-        schemaCache.get(ppaths).foreach { ps =>
-          // name-keyed union; identical types only — any type conflict
-          // (widening) skips the seed and defers to the footer merge
-          val prevByName = ps.fields.map(f => f.name -> f).toMap
-          val conflict = written.fields.exists(f =>
-            prevByName.get(f.name).exists(_.dataType != f.dataType))
-          if (!conflict) {
-            val added = written.fields.filterNot(f => prevByName.contains(f.name))
-            schemaCache.update(paths,
-              org.apache.spark.sql.types.StructType(ps.fields ++ added))
-          }
-        }
-    }
-    evictSchemaCache(view, paths)
-  }
-
-  /** Seed a rewrite's new dir list with the snapshot schema the rewrite
-    * knows in the driver — only when it published directly over its
-    * `base` (`at == base`): an interleaved append may carry a
-    * schema-evolved column that schema predates, and a stale seed would
-    * hide it, so a rebased publish leaves the read path to re-derive
-    * from footers.
-    */
-  private def seedUnraced(view: String, base: Long, at: Long,
-                          dirs: Seq[String], schema: StructType): Unit =
-    if (at == base) seedSchemaCache(view, dirs, schema, prev = None)
-
-  /** Drop every cached dir-list schema of `view` EXCEPT the just-seeded
-    * key — each commit supersedes its predecessors' lists, so without
-    * eviction a long-running maintenance loop grows the cache O(commits)
-    * (small entries, but unbounded driver growth). Keeping only the
-    * newest per view makes the cache O(live views); a time-travel read
-    * of a superseded version just re-derives from footers (correct, one
-    * plan-time job). Foreign-ref keys (clones) escape the prefix test —
-    * the cache's LRU bound covers those.
-    */
-  private def evictSchemaCache(view: String, keep: Seq[String]): Unit = {
-    val prefix = dataRoot(view).toString + "/"
-    schemaCache.keys.foreach { k =>
-      // single-dir seeds are spared: they are O(live dirs) small, and
-      // they are what lets [[readDirs]] recompose superseded or
-      // time-travel dir LISTS (a CDC stream's from-version read, a
-      // delete loop's growing vector list) without a footer job; the
-      // cache's LRU bound still covers the degenerate case
-      if (k != keep && k.lengthCompare(1) > 0 &&
-          k.headOption.exists(_.startsWith(prefix)))
-        schemaCache.remove(k)
-    }
-  }
 
   /** The per-FILE idempotence fence COPY INTO records: a 64-bit
     * FNV-1a hash of the file's (absolute normalized path, size, mtime)
@@ -891,7 +868,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     */
   def hasFileFenceField(view: String): Boolean = {
     val vs = versions(view)
-    vs.nonEmpty && manifestText(view, vs.max).contains("\"files\":")
+    vs.nonEmpty && manifest(view, vs.max).files.isDefined
   }
 
   /** Publish a FENCE-ONLY version: same dirs, same content, only new
@@ -922,7 +899,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     publishAtHead(view, base, txns = txns, files = files)(anyShape) { at =>
       publish(view, at + 1, readManifest(view, at),
         manifestTxns(view, at) ++ txns, manifestDels(view, at),
-        filesExtra = files)
+        filesExtra = files)(schemaOver(view, at), vectorSchema(view, at))
     }
 
   /** The PRE-namespacing file fence (a path-only FNV-1a recorded in
@@ -963,70 +940,108 @@ class SnapshotStore(spark: SparkSession, val root: String) {
 
   // --------------------------------------------------------------- reads
 
-  // Merged-schema cache keyed by the exact (view-qualified) dir list:
-  // data dirs are IMMUTABLE, so a dir list fully determines the merged
-  // schema — and mergeSchema inference is a distributed footer-read JOB
-  // at plan time, which a maintenance loop re-pays on every one of its
-  // ~6 store reads per micro-batch. A hit replays the cached schema and
-  // plans with zero footer IO; any new dir list (new version) misses
-  // and re-merges. Per-file column subsets still read correctly under
-  // an explicit schema (missing columns surface NULL, the same
-  // evolution contract mergeSchema provides). The LRU bound backstops
-  // keys the per-view eviction can't claim (time-travel lists, foreign
-  // clone refs): a re-derive is one plan-time footer job, far cheaper
-  // than unbounded driver growth, and the keys in use stay hot.
-  private val schemaCache = new LruMap[Seq[String], StructType](512)
-
-  private def readDirs(dirs: Seq[String], view: String): DataFrame = {
+  /** Scan `dirs` under `schema`, the physical schema the version they
+    * belong to records — the scan plans with no footer read. Per-dir
+    * column subsets read correctly under it (columns a dir predates
+    * surface NULL, older narrower types promote in the parquet reader).
+    * None — a manifest written before the field — takes the footer merge
+    * of `dirs`: the one fallback, paid per read until the table's next
+    * commit records the field.
+    */
+  private def readDirs(dirs: Seq[String], view: String,
+                       schema: Option[StructType]): DataFrame = {
     val paths = dirs.map(d => dataRoot(view).resolve(d).toString)
-    val sch = schemaCache.getOrElseUpdate(paths, {
-      // compose a multi-dir list from the per-dir seeds when every dir
-      // is cached with the SAME schema — the merge of identical schemas
-      // is itself, so this is exactly what the footer job would return.
-      // This is what keeps a maintenance loop's growing deletion-vector
-      // list (one new key file per delete → a new list every commit)
-      // and a CDC reader's superseded old-version lists at ZERO footer
-      // jobs: each dir was seeded once at write time. Any evolution
-      // across the list (schemas differ) falls through to the real
-      // footer merge.
-      val per = paths.map(p => schemaCache.get(Seq(p)))
-      if (paths.lengthCompare(1) > 0 && per.forall(_.isDefined) &&
-          per.flatten.distinct.lengthCompare(1) == 0) per.head.get
-      else inferMergedSchema(paths)
-    })
-    spark.read.schema(sch).parquet(paths: _*)
+    spark.read.schema(schema.getOrElse(inferMergedSchema(paths)))
+      .parquet(paths: _*)
   }
 
-  /** Merged scan schema for a dir list. The common case is Spark's own
-    * mergeSchema footer merge; when the dirs span a TYPE WIDENING (an
-    * old era wrote INT where the new era writes BIGINT — name-identical,
-    * type-conflicting fields that make the stock merge throw), fall
-    * back to a per-path footer read merged through the numeric widening
-    * lattice, and let the parquet reader's type promotion (Spark 4:
-    * INT32→INT64, INT32→DOUBLE, FLOAT→DOUBLE, DECIMAL precision growth)
-    * read every era under the one wide schema. The fallback costs one
-    * footer read per path, only on conflict, and the result caches.
+  /** `recorded`, or for a manifest that predates the field the footer
+    * merge of `dirs` (one job), or None when those footers do not merge.
     */
-  private def inferMergedSchema(paths: Seq[String])
-      : org.apache.spark.sql.types.StructType =
-    try spark.read.option("mergeSchema", "true").parquet(paths: _*).schema
-    catch { case e: Throwable =>
-      import org.apache.spark.sql.types._
-      val per =
-        try paths.map(p => spark.read.parquet(p).schema)
-        catch { case _: Throwable => throw e }
-      per.reduce { (a, b) =>
-        val aByName = a.fields.map(f => f.name -> f).toMap
+  private def recordedSchema(view: String, recorded: Option[StructType],
+                             dirs: Seq[String]): Option[StructType] =
+    recorded.orElse(scala.util.Try(inferMergedSchema(
+      dirs.map(d => dataRoot(view).resolve(d).toString))).toOption)
+
+  /** Version `v`'s data schema ([[recordedSchema]]). */
+  private def dataSchema(view: String, v: Long): Option[StructType] = {
+    val m = manifest(view, v)
+    recordedSchema(view, m.schema, m.dirs)
+  }
+
+  /** Version `v`'s deletion-vector schema (None: no vectors). */
+  private def vectorSchema(view: String, v: Long): Option[StructType] = {
+    val m = manifest(view, v)
+    if (m.dels.isEmpty) None else recordedSchema(view, m.delSchema, m.dels)
+  }
+
+  /** The column version `v`'s deletion vectors are keyed by — one per
+    * snapshot ([[requireVectorKey]]).
+    */
+  private def vectorKey(view: String, v: Long): Option[String] =
+    vectorSchema(view, v).map(_.head.name)
+
+  /** Version `v`'s data dirs under its schema. */
+  private def readData(view: String, v: Long, dirs: Seq[String]): DataFrame =
+    readDirs(dirs, view, dataSchema(view, v))
+
+  /** Deletion-vector dirs `dels` of version `v` under its vector schema. */
+  private def readVectors(view: String, v: Long, dels: Seq[String]): DataFrame =
+    readDirs(dels, view, vectorSchema(view, v))
+
+  /** The schema a publish over `at` records when it keeps some of
+    * `at`'s dirs and adds dirs written under `written`: the union of
+    * the two by name ([[unionSchemas]]) — taken at `at`, so a column an
+    * interleaved commit added survives a rebase. None when `at` records
+    * no usable schema or the union leaves the widening lattice (an
+    * append that broke [[commit]]'s type contract): that version then
+    * records no schema, and its reads fail in the footer merge.
+    */
+  private def schemaOver(view: String, at: Long,
+                         written: StructType*): Option[StructType] =
+    dataSchema(view, at).flatMap(s => unionSchemas(s +: written))
+
+  /** Name-keyed union of `schemas`, every field nullable (what a footer
+    * read returns): the first schema's fields in order — a field two
+    * schemas share takes the wider type of [[widerType]]'s lattice —
+    * then each later schema's new fields. None when a shared field's
+    * types have no wider type there.
+    */
+  private def unionSchemas(schemas: Seq[StructType]): Option[StructType] = {
+    val all = schemas.map(_.toNullable)
+    all.tail.foldLeft(Option(all.head)) { (acc, b) =>
+      acc.flatMap { a =>
         val merged = a.fields.map { f =>
           b.fields.find(_.name == f.name) match {
             case Some(g) if g.dataType != f.dataType =>
-              f.copy(dataType =
-                widerType(f.dataType, g.dataType).getOrElse(throw e))
-            case _ => f
+              widerType(f.dataType, g.dataType).map(t => f.copy(dataType = t))
+            case _ => Some(f)
           }
-        } ++ b.fields.filterNot(f => aByName.contains(f.name))
-        StructType(merged)
+        }
+        if (merged.exists(_.isEmpty)) None
+        else Some(StructType(merged.flatten ++
+          b.fields.filterNot(f => a.fieldNames.contains(f.name))))
       }
+    }
+  }
+
+  /** Merged scan schema for a dir list — the read path of manifests
+    * that predate the `schema` field. The common case is Spark's own
+    * mergeSchema footer merge; when the dirs span a TYPE WIDENING (an
+    * old era wrote INT where the new era writes BIGINT — name-identical,
+    * type-conflicting fields that make the stock merge throw), fall
+    * back to a per-path footer read merged through [[unionSchemas]],
+    * and let the parquet reader's type promotion (Spark 4:
+    * INT32→INT64, INT32→DOUBLE, FLOAT→DOUBLE, DECIMAL precision growth)
+    * read every era under the one wide schema.
+    */
+  private def inferMergedSchema(paths: Seq[String]): StructType =
+    try spark.read.option("mergeSchema", "true").parquet(paths: _*).schema
+    catch { case e: Throwable =>
+      val per =
+        try paths.map(p => spark.read.parquet(p).schema)
+        catch { case _: Throwable => throw e }
+      unionSchemas(per).getOrElse(throw e)
     }
 
   /** The numeric widening lattice the store supports without a rewrite
@@ -1060,7 +1075,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     spark.conf.getOption("spark.graft.dv.broadcastMaxBytes")
       .map(_.toLong).getOrElse(64L << 20)
 
-  /** Anti-join `df` against the snapshot's deletion vectors (each a
+  /** Anti-join `df` against snapshot `v`'s deletion vectors (each a
     * one-column parquet key list): the read-time half of
     * [[deleteWhere]]'s zero-rewrite deletes. No vectors ⇒ the frame
     * passes through untouched (the common case costs nothing). A small
@@ -1074,11 +1089,11 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * vector ever gets that large on its own — this bound is the
     * defense in depth for accumulated loops and raised thresholds.
     */
-  private def applyDels(df: DataFrame, view: String,
-                        dels: Seq[String]): DataFrame =
+  private def applyDels(df: DataFrame, view: String, v: Long): DataFrame = {
+    val dels = manifestDels(view, v)
     if (dels.isEmpty) df
     else {
-      val delKeys = readDirs(dels, view)
+      val delKeys = readVectors(view, v, dels)
       // a repeated build key cannot change an anti-join's result: only
       // the shuffled branch dedups, to cut its exchange
       val hinted =
@@ -1086,6 +1101,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
         else delKeys.distinct()
       df.join(hinted, Seq(delKeys.columns.head), "left_anti")
     }
+  }
 
   private def resolvedVersion(view: String, asOf: Option[Long]): Long = {
     val vs = versions(view)
@@ -1101,9 +1117,14 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     */
   def read(view: String, asOf: Option[Long] = None): DataFrame = {
     val v = resolvedVersion(view, asOf)
-    applyDrops(applyDels(readDirs(readManifest(view, v), view), view,
-      manifestDels(view, v)), view, v)
+    readAt(view, v, readManifest(view, v))
   }
+
+  /** `dirs` of snapshot `v` as the snapshot read surfaces them: `v`'s
+    * schema, its deletion vectors and its column DDL applied.
+    */
+  private def readAt(view: String, v: Long, dirs: Seq[String]): DataFrame =
+    applyDrops(applyDels(readData(view, v, dirs), view, v), view, v)
 
   /** The metadata-only RENAME/DROP COLUMN projection, applied in
     * recorded order — renames first (drops are recorded against
@@ -1195,9 +1216,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     if (added.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         read(view, Some(toV)).schema)
-    else applyDrops(
-      applyDels(readDirs(added, view), view, manifestDels(view, toV)),
-      view, toV)
+    else readAt(view, toV, added)
   }
 
   /** The manifest dirs of snapshot `asOf` split into (kept, skipped) for
@@ -1228,8 +1247,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // scan to an empty LocalRelation with the right schema
     if (keep.isEmpty) return read(view, asOf).where(lit(false))
     val v = resolvedVersion(view, asOf)
-    val df = applyDrops(applyDels(readDirs(keep, view), view,
-      manifestDels(view, v)), view, v)
+    val df = readAt(view, v, keep)
     val dt = df.schema(c).dataType
     df.where(col(c) >= lit(lo).cast(dt) && col(c) <= lit(hi).cast(dt))
   }
@@ -1260,8 +1278,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val (keep, _) = pruneDirsBox(view, preds, asOf)
     if (keep.isEmpty) return read(view, asOf).where(lit(false))
     val v = resolvedVersion(view, asOf)
-    val base = applyDrops(applyDels(readDirs(keep, view), view,
-      manifestDels(view, v)), view, v)
+    val base = readAt(view, v, keep)
     preds.foldLeft(base) { case (df, (c, lo, hi)) =>
       val dt = df.schema(c).dataType
       df.where(col(c) >= lit(lo).cast(dt) && col(c) <= lit(hi).cast(dt))
@@ -1304,9 +1321,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val (keep, _) = pruneDirsEq(view, c, value, asOf)
     if (keep.isEmpty) return read(view, asOf).where(lit(false))
     val v = resolvedVersion(view, asOf)
-    applyDrops(applyDels(readDirs(keep, view), view,
-      manifestDels(view, v)), view, v)
-      .where(col(c) === lit(value))
+    readAt(view, v, keep).where(col(c) === lit(value))
   }
 
   // ---------------------------------------------------- secondary index
@@ -1338,11 +1353,11 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       if (versions(iv).isEmpty) Set.empty
       else read(iv).select(col("_dir")).distinct()
         .collect().map(_.getString(0)).toSet
-    val dirs = manifestDirs(view)
-    val fresh = dirs.filterNot(d => covered.contains(dirBase(view, d)))
+    val head = resolvedVersion(view, None)
+    val fresh = readManifest(view, head)
+      .filterNot(d => covered.contains(dirBase(view, d)))
     if (fresh.isEmpty) return versions(iv).max
-    val rows = applyRenames(readDirs(fresh, view), view,
-        versions(view).max)
+    val rows = applyRenames(readData(view, head, fresh), view, head)
       .withColumn("_dir",
         expr("regexp_extract(input_file_name(), '([^/]+)/[^/]+$', 1)"))
       .select(col(c), col("_dir")).distinct()
@@ -1391,9 +1406,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val (keep, _) = indexedDirsEq(view, c, value)
     if (keep.isEmpty) return read(view).where(lit(false))
     val v = resolvedVersion(view, None)
-    applyDrops(applyDels(readDirs(keep, view), view,
-      manifestDels(view, v)), view, v)
-      .where(col(c) === lit(value))
+    readAt(view, v, keep).where(col(c) === lit(value))
   }
 
   // ------------------------------------------------------ row-level delete
@@ -1522,8 +1535,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val vs = versions(view)
     require(vs.nonEmpty, s"$view: nothing to delete from")
     val base = vs.max
-    val prevDels = manifestDels(view, base)
-    requireVectorKey(view, prevDels, keyCol)
+    requireVectorKey(view, base, keyCol)
     // DV-vs-rewrite policy (Delta's): past `spark.graft.dv.rewriteMinBytes`
     // of table data (default 1 GB — below it any vector broadcasts and
     // the next OPTIMIZE materializes it for pennies), ONE grouped pass
@@ -1565,10 +1577,10 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       // (a projection, still scan-local): the candidate SUBSET may
       // predate a schema-evolved column the predicate references.
       val raw = alignedTo(
-          applyRenames(readDirs(candidates, view), view, base),
+          applyRenames(readData(view, base, candidates), view, base),
           read(view, Some(base)).schema)
         .withColumn("_graft_dir", element_at(split(input_file_name(), "/"), -2))
-      val probe = applyDels(raw, view, prevDels)
+      val probe = applyDels(raw, view, base)
         .groupBy(col("_graft_dir"))
         .agg(count(lit(1)).as("_n"), count(when(hit, 1)).as("_m"))
         .collect()
@@ -1582,7 +1594,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       val hitDirs = probe.filter(_.getLong(2) > 0L).map(_.getString(0)).toSet
       val touched = dirs.filter(d => hitDirs.contains(dirBase(view, d)))
       if (matched >= frac * totalRows || matched >= minKeys)
-        return deleteRewrite(view, keyCol, base, prevDels, touched, hit, txn)
+        return deleteRewrite(view, keyCol, base, touched, hit, txn)
       probedMatched = matched
       matchedDirs = Some(touched)
     }
@@ -1599,7 +1611,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // contract-violating caller only costs vector bytes, never rows
     val keys = matchedDirs
       .map(md => alignedTo(applyRenames(
-        applyDels(readDirs(md, view), view, prevDels), view, base),
+        applyDels(readData(view, base, md), view, base), view, base),
         read(view, Some(base)).schema))
       .getOrElse(read(view, Some(base)))
       .where(pred).select(col(keyCol))
@@ -1621,29 +1633,24 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       Scratch.deleteRecursively(dataRoot(view).resolve(delDir).toFile)
       return fenceOnly(view, base, txn)
     }
-    // per-dir seed (vectors bypass writeData): the growing vector list a
-    // delete loop re-reads every iteration recomposes from these seeds
-    // with zero footer jobs
-    schemaCache.update(Seq(dataRoot(view).resolve(delDir).toString),
-      keys.schema)
-    publishVector(view, base, keyCol, Some(delDir), txn)
+    publishVector(view, base, keyCol, Some(delDir -> keys.schema), txn)
   }
 
   /** ONE vector key column per view: a delete keyed by another column
     * would make the read-side anti-join (on the vector union's first
     * column) silently ignore one side's deletes.
     */
-  private def requireVectorKey(view: String, dels: Seq[String],
+  private def requireVectorKey(view: String, base: Long,
                                keyCol: String): Unit =
-    dels.headOption.foreach { d =>
-      val existing = readDirs(Seq(d), view).columns.head
+    vectorKey(view, base).foreach { existing =>
       require(existing == keyCol,
         s"$view: deletion vectors are keyed by `$existing`, got `$keyCol`")
     }
 
   /** The deletion-vector publish [[deleteWhere]], [[deleteKeys]] and
     * [[expireBefore]] share: the head's dirs minus `dropped`, the head's
-    * vector list plus the already-written `delDir` (folded past
+    * vector list plus the already-written `vector` dir, given with its
+    * schema (folded past
     * `spark.graft.dv.maxVectors`), `txn` recorded. DV-delete rebase:
     * interleaved BLIND APPENDS whose dirs provably hold none of the
     * vector's keys are safe to land after (the delete serializes before
@@ -1653,16 +1660,24 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * possible key overlap, throws.
     */
   private def publishVector(view: String, base: Long, keyCol: String,
-                            delDir: Option[String], txn: Option[Long],
+                            vector: Option[(String, StructType)],
+                            txn: Option[Long],
                             dropped: Set[String] = Set.empty): Long =
     publishAtHead(view, base, txns = txn.toSet) { (from, head, e) =>
       deleteRebaseGuard(view, interleavedDeltas(view, from, head),
-        delDir.map(d => keyCol -> readDirs(Seq(d), view)),
+        vector.map { case (d, sch) =>
+          keyCol -> readDirs(Seq(d), view, Some(sch)) },
         allowDelAdds = true, e)
     } { at =>
+      val dels = manifestDels(view, at)
+      val delSchema =
+        if (dels.isEmpty) vector.flatMap(v => unionSchemas(Seq(v._2)))
+        else vectorSchema(view, at).flatMap(s =>
+          unionSchemas(s +: vector.map(_._2).toSeq))
       publish(view, at + 1, readManifest(view, at).filterNot(dropped),
         manifestTxns(view, at) ++ txn,
-        foldDels(view, at + 1, manifestDels(view, at) ++ delDir))
+        foldDels(view, at + 1, dels ++ vector.map(_._1), delSchema))(
+        schemaOver(view, at), delSchema)
     }
 
   /** The copy-on-write half of [[deleteWhere]]'s DV-vs-rewrite policy:
@@ -1676,7 +1691,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * commit; no deletion vector is ever created for the wide delete.
     */
   private def deleteRewrite(view: String, keyCol: String, base: Long,
-                            prevDels: Seq[String], touched: Seq[String],
+                            touched: Seq[String],
                             hit: Column, txn: Option[Long]): Long = {
     val snapshotSchema = read(view, Some(base)).schema
     // aligned to the snapshot schema (same contract as mergeInto's
@@ -1684,7 +1699,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // the touched dirs predate, and the rewritten dir must carry the
     // full-width rows the whole-table read would produce
     val keep = alignedTo(applyRenames(
-      applyDels(readDirs(touched, view), view, prevDels), view, base),
+      applyDels(readData(view, base, touched), view, base), view, base),
       snapshotSchema)
       .where(!coalesce(hit, lit(false)))
     val sized = sizedForBytes(keep, touched.map(dirBytes(view, _)).sum)
@@ -1699,8 +1714,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       val carried = readManifest(view, at).filterNot(touchedSet)
       publish(view, at + 1, carried :+ dataDir,
         manifestTxns(view, at) ++ txn,
-        if (carried.isEmpty) Nil else prevDels)
-      seedUnraced(view, base, at, carried :+ dataDir, snapshotSchema)
+        if (carried.isEmpty) Nil else manifestDels(view, base))(
+        schemaOver(view, at, snapshotSchema), vectorSchema(view, base))
     }
   }
 
@@ -1724,7 +1739,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * manifests still reference them for time travel; vacuum GCs them
     * with their manifests (vectors are retention roots there already).
     */
-  private def foldDels(view: String, next: Long, dels: Seq[String]): Seq[String] = {
+  private def foldDels(view: String, next: Long, dels: Seq[String],
+                       schema: Option[StructType]): Seq[String] = {
     val maxV = spark.conf.getOption("spark.graft.dv.maxVectors")
       .map(_.toInt).getOrElse(8)
     if (dels.size <= maxV) dels
@@ -1741,12 +1757,10 @@ class SnapshotStore(spark: SparkSession, val root: String) {
         case (d, b) if toFold.contains(d) => b
       }.sum
       val dir = s"del$next-fold" + java.util.UUID.randomUUID().toString.take(8)
-      val out = readDirs(toFold, view).distinct()
+      val out = readDirs(toFold, view, schema).distinct()
       val sized = if (foldBytes <= dvBroadcastMaxBytes) out.coalesce(1) else out
       sized.write.mode("overwrite")
         .parquet(dataRoot(view).resolve(dir).toString)
-      schemaCache.update(Seq(dataRoot(view).resolve(dir).toString),
-        out.schema)
       if (toFold.size == dels.size) Seq(dir) else Seq(bigDir, dir)
     }
   }
@@ -1774,8 +1788,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val vs = versions(view)
     require(vs.nonEmpty, s"$view: nothing to delete from")
     val base = vs.max
-    val prevDels = manifestDels(view, base)
-    requireVectorKey(view, prevDels, keyCol)
+    requireVectorKey(view, base, keyCol)
     val obs = org.apache.spark.sql.Observation()
     val chk = keys.select(col(keyCol)).distinct()
       .observe(obs, count(lit(1)).as("n")).localCheckpoint()
@@ -1787,7 +1800,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       1L + n / (8L * 1024 * 1024)).toInt
     chk.coalesce(nFiles).write.mode("overwrite")
       .parquet(dataRoot(view).resolve(delDir).toString)
-    publishVector(view, base, keyCol, Some(delDir), txn)
+    publishVector(view, base, keyCol, Some(delDir -> chk.schema), txn)
   }
 
   /** REPLACE WHERE — atomically swap the rows matching `pred` for the
@@ -1867,13 +1880,12 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val (resurrectDirs, resKeys) =
       if (prevDels.isEmpty || preUntouched.isEmpty) (Seq.empty[String], None)
       else {
-        val delKeys = readDirs(prevDels, view)
+        val delKeys = readVectors(view, base, prevDels)
         val vKey = delKeys.columns.head
         if (!snapshotSchema.fieldNames.contains(vKey))
           (Seq.empty[String], None) // orthogonally-keyed: carry verbatim
         else {
-          val written = spark.read
-            .parquet(dataRoot(view).resolve(dataDir).toString)
+          val written = readDirs(Seq(dataDir), view, Some(guarded.schema))
           val res = delKeys.distinct()
             .join(written.select(col(vKey)).distinct(), Seq(vKey),
               "left_semi").localCheckpoint()
@@ -1891,7 +1903,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       if (touched.isEmpty) None
       else {
         val keep = alignedTo(applyRenames(
-          applyDels(readDirs(touched, view), view, prevDels), view, base),
+          applyDels(readData(view, base, touched), view, base), view, base),
           snapshotSchema)
           .where(!coalesce(hit, lit(false)))
         val sized = sizedForBytes(keep, touched.map(dirBytes(view, _)).sum)
@@ -1908,10 +1920,9 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       else resKeys match {
         case None => prevDels
         case Some(res) =>
-          val delKeys = readDirs(prevDels, view)
-          val vKey = delKeys.columns.head
+          val delKeys = readVectors(view, base, prevDels)
           val remaining = delKeys.distinct()
-            .join(res, Seq(vKey), "left_anti")
+            .join(res, Seq(delKeys.columns.head), "left_anti")
           val delDir = s"del$next-" +
             java.util.UUID.randomUUID().toString.take(8)
           val dObs = org.apache.spark.sql.Observation()
@@ -1940,15 +1951,15 @@ class SnapshotStore(spark: SparkSession, val root: String) {
         txns = txn.toSet) { (from, head, e) =>
       val deltas = interleavedDeltas(view, from, head)
       deleteRebaseGuard(view, deltas,
-        resKeys.map(r => readDirs(prevDels, view).columns.head -> r),
+        resKeys.map(r => vectorKey(view, base).get -> r),
         allowDelAdds = false, e)
       if (deltas.flatMap(_.added).exists(dirMayMatch(view, _, bounds)))
         throw e
     } { at =>
       val newDirs = (readManifest(view, at).filterNot(touchedSet) ++ keptDir) :+
         dataDir
-      publish(view, at + 1, newDirs, manifestTxns(view, at) ++ txn, newDels)
-      seedUnraced(view, base, at, newDirs, snapshotSchema)
+      publish(view, at + 1, newDirs, manifestTxns(view, at) ++ txn, newDels)(
+        schemaOver(view, at, snapshotSchema), vectorSchema(view, base))
     }
   }
 
@@ -1982,9 +1993,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     }
     require(live.nonEmpty,
       s"$view: expiry would drop every dir — overwrite explicitly instead")
-    val prevDels = manifestDels(view, base)
-    requireVectorKey(view, prevDels, keyCol)
-    val residual = applyRenames(readDirs(live, view), view, base)
+    requireVectorKey(view, base, keyCol)
+    val residual = applyRenames(readData(view, base, live), view, base)
       .where(col(c) < lit(cutoff))
       .select(col(keyCol)).distinct()
     val next = base + 1
@@ -2003,7 +2013,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // until the next sweep) when the residual vector provably cannot
     // touch them (stats probe on the appended dirs); interleaved DV
     // additions commute (the rebase carries the head's vector list).
-    publishVector(view, base, keyCol, Some(delDir).filter(_ => hasResidual),
+    publishVector(view, base, keyCol,
+      Some(delDir -> residual.schema).filter(_ => hasResidual),
       txn, dropped = dead.toSet)
   }
 
@@ -2050,7 +2061,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
   }
 
   /** Project `df` to exactly `schema`'s columns, aligned by NAME and
-    * by TYPE — what the whole-table mergeSchema read would yield. The
+    * by TYPE — what the whole-table read would yield. The
     * schema-evolution alignment every dir-subset rewrite needs
     * ([[mergeInto]], [[deleteRewrite]], the probed key-selection scan)
     * before predicates or unions over the full snapshot width: columns
@@ -2168,7 +2179,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       source.where(!isDelete).select(targetCols.map(col): _*), targetSchema)
     // Schema evolution alignment: a touched dir may predate a column
     // that exists only in other dirs; project such columns as typed
-    // NULLs (what the whole-table mergeSchema read would yield) before
+    // NULLs (what the whole-table read would yield) before
     // the anti-join/union instead of failing the select.
     def aligned(df: DataFrame): DataFrame = alignedTo(df, targetSchema)
     // the source's non-NULL keys when they sit on the driver; a NULL
@@ -2193,7 +2204,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       if (touched.isEmpty) upserts
       else
         unshadowed(aligned(applyRenames(
-          applyDels(readDirs(touched, view), view, baseDels), view, base)))
+          applyDels(readData(view, base, touched), view, base), view, base)))
           .unionByName(upserts)
     // Size the rewrite's file count from the touched dirs' bytes (the
     // dominant term — upserts are the small side of a merge): a keyed
@@ -2219,12 +2230,12 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val newDels =
       if (baseDels.isEmpty) Nil
       else {
-        val delKeys = readDirs(baseDels, view)
+        val delKeys = readVectors(view, base, baseDels)
         // driver-held keys probe the vector first: when it holds none
         // of them, it carries as it stands, with nothing rewritten
         def holdsSourceKey = localKeys.forall(ks => ks.nonEmpty &&
           delKeys.where(col(keyCol).isin(ks: _*)).limit(1).collect().nonEmpty)
-        if (delKeys.columns.head != keyCol || !holdsSourceKey) baseDels
+        if (!vectorKey(view, base).contains(keyCol) || !holdsSourceKey) baseDels
         else {
           val remaining = unshadowed(delKeys.distinct())
           // write-then-check with an observed count: one execution of
@@ -2243,13 +2254,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
             else counted
           sizedDel.write
             .mode("overwrite").parquet(dataRoot(view).resolve(delDir).toString)
-          // seed only a dir that survives (deleteWhere's order): a seed
-          // for the removed dir would outlive it in the cache
-          if (obs.get("n").asInstanceOf[Long] > 0L) {
-            schemaCache.update(Seq(dataRoot(view).resolve(delDir).toString),
-              remaining.schema)
-            Seq(delDir)
-          } else {
+          if (obs.get("n").asInstanceOf[Long] > 0L) Seq(delDir)
+          else {
             Scratch.deleteRecursively(dataRoot(view).resolve(delDir).toFile)
             Nil
           }
@@ -2293,11 +2299,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       // is not), and interleaved appends ride along untouched
       val carried = readManifest(view, at).filterNot(touchedSet)
       publish(view, at + 1, carried :+ dataDir,
-        manifestTxns(view, at) ++ txn, newDels)
-      // untouched dirs hold column subsets of targetSchema and the
-      // rewritten dir was aligned to it — the new version's merged
-      // schema IS targetSchema, known in the driver
-      seedUnraced(view, base, at, carried :+ dataDir, targetSchema)
+        manifestTxns(view, at) ++ txn, newDels)(
+        schemaOver(view, at, targetSchema), vectorSchema(view, base))
     }
   }
 
@@ -2331,8 +2334,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val post = read(view, Some(toV))
     // payload = UNION of both snapshots' columns: a column added (or
     // dropped by an overwrite) between the versions is NULL-padded on
-    // the side that lacks it — matching mergeSchema read semantics —
-    // so a row whose only change is in a new column still surfaces as
+    // the side that lacks it — matching the snapshot read's schema
+    // evolution — so a row whose only change is in a new column still surfaces as
     // an update, and pack() never throws on a missing field.
     val payload = (pre.columns ++ post.columns).distinct
       .filterNot(keyCols.contains).toSeq
@@ -2426,18 +2429,19 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val outSchema = read(view, Some(toV)).schema
     def era(df: DataFrame) =
       alignedTo(applyDrops(df, view, toV), outSchema)
-    // vector key files may be keyed by different columns across
-    // operations — probe per key column, never through one merged read
-    val delParts = newDels.groupBy(d => readDirs(Seq(d), view).columns.head)
-      .toSeq.sortBy(_._1).flatMap { case (keyCol, dels) =>
-        val keys = readDirs(dels, view).distinct()
+    // each version's vectors share one key column, but the column may
+    // differ between the two versions — probe each side by its own key
+    val delParts = vectorKey(view, toV).filter(_ => newDels.nonEmpty)
+      .flatMap { keyCol =>
+        val keys = readVectors(view, toV, newDels).distinct()
         val (hit, _) = dirsHitByKeys(view, pre, keyCol, keys)
         if (hit.isEmpty) None
         else {
           val hinted =
-            if (delBytes(view, dels) <= dvBroadcastMaxBytes) broadcast(keys)
+            if (delBytes(view, newDels) <= dvBroadcastMaxBytes) broadcast(keys)
             else keys
-          Some(era(readDirs(hit, view)).join(hinted, Seq(keyCol), "left_semi"))
+          Some(era(readData(view, fromV, hit))
+            .join(hinted, Seq(keyCol), "left_semi"))
         }
       }
     // vectors REMOVED in the window with their dirs KEPT (RESTORE rolls
@@ -2447,29 +2451,14 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // here. Keys still suppressed (the fold case: the replacement
     // vector re-carries them) net nothing and are anti-joined away.
     val kept = pre.filter(post.toSet)
-    val resurrectParts = remDels
-      .groupBy(d => readDirs(Seq(d), view).columns.head)
-      .toSeq.sortBy(_._1).flatMap { case (keyCol, dels) =>
-        val postSame = delsPost.filter(d =>
-          readDirs(Seq(d), view).columns.head == keyCol)
-        val back0 = readDirs(dels, view).distinct()
-        val back =
-          if (postSame.isEmpty) back0
-          else back0.join(readDirs(postSame, view).distinct(),
-            Seq(keyCol), "left_anti")
-        val (hit, _) = dirsHitByKeys(view, kept, keyCol, back)
-        if (hit.isEmpty) None
-        else {
-          val hinted =
-            if (delBytes(view, dels ++ postSame) <= dvBroadcastMaxBytes)
-              broadcast(back)
-            else back
-          Some(era(readDirs(hit, view)).join(hinted, Seq(keyCol), "left_semi"))
-        }
+    val resurrectParts = resurrected(view, fromV, toV, remDels, kept)
+      .map { case (keyCol, hit, back) =>
+        era(readData(view, toV, hit)).join(back, Seq(keyCol), "left_semi")
       }
     val parts =
-      (if (removed.nonEmpty) Seq(era(readDirs(removed, view))) else Nil) ++
-        (if (added.nonEmpty) Seq(era(readDirs(added, view))) else Nil) ++
+      (if (removed.nonEmpty) Seq(era(readData(view, fromV, removed)))
+       else Nil) ++
+        (if (added.nonEmpty) Seq(era(readData(view, toV, added))) else Nil) ++
         delParts ++ resurrectParts
     Some(parts.reduceOption(_.unionByName(_))
       .getOrElse(read(view, Some(toV)).where(lit(false))))
@@ -2529,39 +2518,36 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // somehow coexist across the window, refuse rather than reason
     // about cross-column suppression
     if (remDels.nonEmpty &&
-        (delsPre ++ delsPost)
-          .map(d => readDirs(Seq(d), view).columns.head)
-          .distinct.size > 1) return None
+        (vectorKey(view, fromV).toSeq ++ vectorKey(view, toV)).distinct.size > 1)
+      return None
     val outSchema = read(view, Some(toV)).schema
     def era(df: DataFrame, sign: Int) =
       alignedTo(applyDrops(df, view, toV), outSchema)
         .withColumn("_graft_sign", lit(sign))
     val negRemoved =
       if (removed.isEmpty) None
-      else Some(era(applyDels(readDirs(removed, view), view, delsPre), -1))
+      else Some(era(applyDels(readData(view, fromV, removed), view, fromV), -1))
     val posAdded =
       if (added.isEmpty) None
-      else Some(era(applyDels(readDirs(added, view), view,
-        manifestDels(view, toV)), 1))
-    val negVectored = newDels
-      .groupBy(d => readDirs(Seq(d), view).columns.head)
-      .toSeq.sortBy(_._1).flatMap { case (keyCol, dels) =>
-        val preKeyed = delsPre.filter(d =>
-          readDirs(Seq(d), view).columns.head == keyCol)
-        val fresh0 = readDirs(dels, view).distinct()
+      else Some(era(applyDels(readData(view, toV, added), view, toV), 1))
+    val negVectored = vectorKey(view, toV).filter(_ => newDels.nonEmpty)
+      .flatMap { keyCol =>
+        val preKeyed =
+          if (vectorKey(view, fromV).contains(keyCol)) delsPre else Nil
+        val fresh0 = readVectors(view, toV, newDels).distinct()
         // a key already suppressed at fromV cannot go invisible twice
         val fresh =
           if (preKeyed.isEmpty) fresh0
-          else fresh0.join(readDirs(preKeyed, view).distinct(),
+          else fresh0.join(readVectors(view, fromV, preKeyed).distinct(),
             Seq(keyCol), "left_anti")
         val (hit, _) = dirsHitByKeys(view, kept, keyCol, fresh)
         if (hit.isEmpty) None
         else {
           val hinted =
-            if (delBytes(view, dels ++ preKeyed) <= dvBroadcastMaxBytes)
+            if (delBytes(view, newDels ++ preKeyed) <= dvBroadcastMaxBytes)
               broadcast(fresh)
             else fresh
-          Some(era(readDirs(hit, view).join(hinted, Seq(keyCol),
+          Some(era(readData(view, toV, hit).join(hinted, Seq(keyCol),
             "left_semi"), -1))
         }
       }
@@ -2572,26 +2558,9 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // anti-joined away — suppressed on both sides, no delta. Rows of
     // resurrected keys in removed dirs contributed nothing at fromV
     // (delsPre applied) and rows in added dirs already count +1.
-    val posResurrected = remDels
-      .groupBy(d => readDirs(Seq(d), view).columns.head)
-      .toSeq.sortBy(_._1).flatMap { case (keyCol, dels) =>
-        val postSame = delsPost.filter(d =>
-          readDirs(Seq(d), view).columns.head == keyCol)
-        val back0 = readDirs(dels, view).distinct()
-        val back =
-          if (postSame.isEmpty) back0
-          else back0.join(readDirs(postSame, view).distinct(),
-            Seq(keyCol), "left_anti")
-        val (hit, _) = dirsHitByKeys(view, kept, keyCol, back)
-        if (hit.isEmpty) None
-        else {
-          val hinted =
-            if (delBytes(view, dels ++ postSame) <= dvBroadcastMaxBytes)
-              broadcast(back)
-            else back
-          Some(era(readDirs(hit, view).join(hinted, Seq(keyCol),
-            "left_semi"), 1))
-        }
+    val posResurrected = resurrected(view, fromV, toV, remDels, kept)
+      .map { case (keyCol, hit, back) =>
+        era(readData(view, toV, hit).join(back, Seq(keyCol), "left_semi"), 1)
       }
     val parts = negRemoved.toSeq ++ posAdded.toSeq ++ negVectored ++
       posResurrected
@@ -2599,6 +2568,33 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       .getOrElse(read(view, Some(toV)).where(lit(false))
         .withColumn("_graft_sign", lit(1))))
   }
+
+  /** The resurrection leg [[affectedRows]] and [[signedDelta]] share:
+    * the keys of `fromV`'s vectors that `toV` no longer lists
+    * (`remDels`) and that no `toV` vector on the same key column still
+    * carries. Returns that key column, the `kept` dirs whose key stats
+    * may hold such a key, and the (broadcast-hinted) key frame; None
+    * when no kept dir can hold one.
+    */
+  private def resurrected(view: String, fromV: Long, toV: Long,
+                          remDels: Seq[String], kept: Seq[String])
+      : Option[(String, Seq[String], DataFrame)] =
+    vectorKey(view, fromV).filter(_ => remDels.nonEmpty).flatMap { keyCol =>
+      val postSame =
+        if (vectorKey(view, toV).contains(keyCol)) manifestDels(view, toV)
+        else Nil
+      val back0 = readVectors(view, fromV, remDels).distinct()
+      val back =
+        if (postSame.isEmpty) back0
+        else back0.join(readVectors(view, toV, postSame).distinct(),
+          Seq(keyCol), "left_anti")
+      val (hit, _) = dirsHitByKeys(view, kept, keyCol, back)
+      if (hit.isEmpty) None
+      else Some((keyCol, hit,
+        if (delBytes(view, remDels ++ postSame) <= dvBroadcastMaxBytes)
+          broadcast(back)
+        else back))
+    }
 
   // ------------------------------------------------------- maintenance
 
@@ -2632,7 +2628,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * (OPTIMIZE / compact / overwrite), which also CLEARS the list — so
     * re-adding a same-named column is refused only until then (a
     * metadata re-add would resurrect the old dirs' values through the
-    * merged-schema read). Refuses the deletion-vector key (the
+    * snapshot read). Refuses the deletion-vector key (the
     * vectors' row identity must stay readable) and unknown columns.
     */
   def dropColumn(view: String, column: String): Long =
@@ -2657,28 +2653,24 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     require(schema.length > exact.length,
       s"$view: cannot drop every column " +
         exact.mkString("(", ", ", ")"))
-    // same reserved-character guard renameColumn has: a name holding
-    // ',' or '"' would corrupt manifestField's split-on-comma parse of
-    // the drops list, silently changing which columns the read hides
+    // same reserved-character guard renameColumn has: recorded names
+    // stay clear of ',' and '"', so the drops list reads the same under
+    // the comma-split parse manifests have always been compatible with
     exact.foreach(c =>
       require(!c.contains(',') && !c.contains('"'),
         s"$view: column name `$c` holds a manifest-reserved character"))
-    val dels = manifestDels(view, base)
-    dels.headOption.foreach { d =>
-      val vKey = readDirs(Seq(d), view).columns.head
+    vectorKey(view, base).foreach { vKey =>
       exact.filter(vKey.equalsIgnoreCase).foreach(c =>
         throw new IllegalArgumentException(
           s"$view: `$c` keys the live deletion vectors — OPTIMIZE " +
             "(materialize the vectors) before dropping it"))
     }
-    publish(view, base + 1, readManifest(view, base),
-      manifestTxns(view, base), dels,
-      drops = Some((manifestDrops(view, base) ++ exact).distinct),
-      renames = Some(manifestRenames(view, base)),
+    publishDdl(view, base,
+      drops = (manifestDrops(view, base) ++ exact).distinct,
+      renames = manifestRenames(view, base),
       // a dropped column's widen cast has nothing to fire on
-      widens = Some(manifestWidens(view, base)
-        .filterNot(w => exact.contains(w._1))))
-    base + 1
+      widens = manifestWidens(view, base)
+        .filterNot(w => exact.contains(w._1)))
   }
 
   /** METADATA-ONLY column rename: publish the same dirs with
@@ -2724,26 +2716,25 @@ class SnapshotStore(spark: SparkSession, val root: String) {
         throw new IllegalArgumentException(
           s"$view: `$c` is a dropped/renamed-away column whose bytes " +
             "remain — OPTIMIZE (full rewrite) before reusing the name"))
+    // the `old>new` encoding splits at the first '>', and recorded names
+    // stay clear of ',' and '"' (the drops guard's reason)
     Seq(exact, newName).foreach(c =>
       require(!c.contains('>') && !c.contains(',') && !c.contains('"'),
         s"$view: column name `$c` holds a manifest-reserved character"))
-    val dels = manifestDels(view, base)
-    dels.headOption.foreach { d =>
-      val vKey = readDirs(Seq(d), view).columns.head
+    vectorKey(view, base).foreach { vKey =>
       require(!vKey.equalsIgnoreCase(exact),
         s"$view: `$exact` keys the live deletion vectors — OPTIMIZE " +
           "(materialize the vectors) before renaming it")
     }
-    publish(view, base + 1, readManifest(view, base),
-      manifestTxns(view, base), dels,
-      drops = Some(manifestDrops(view, base)),
-      renames = Some(manifestRenames(view, base) :+ (exact -> newName)),
+    publishDdl(view, base,
+      drops = manifestDrops(view, base),
+      renames = manifestRenames(view, base) :+ (exact -> newName),
       // a widen recorded under the old spelling follows the rename —
       // the read applies renames first, so the cast must target the
       // post-rename name to keep firing
-      widens = Some(manifestWidens(view, base).map { case (c, t) =>
+      widens = manifestWidens(view, base).map { case (c, t) =>
         (if (c == exact) newName else c) -> t
-      }))
+      })
     readManifest(view, base).filterNot(_.contains("/"))
       .foreach(rebindSidecar(view, _, exact, newName))
     base + 1
@@ -2754,9 +2745,10 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * IO. From this version on, reads cast the column to the declared
     * type ([[applyWidens]]), later writes land the WIDE type physically
     * (the SQL tier aligns inserts/merges to the read schema), and the
-    * mixed-era scan plans one wide schema through [[inferMergedSchema]]
-    * + the parquet reader's type promotion. Time travel keeps each
-    * version's own type; the next full rewrite localizes and clears.
+    * mixed-era scan plans one wide schema (the recorded schema's union
+    * through [[widerType]]) + the parquet reader's type promotion. Time
+    * travel keeps each version's own type; the next full rewrite
+    * localizes and clears.
     * WIDENING-ONLY, refusing everything else loudly: INT→BIGINT,
     * INT→DOUBLE, FLOAT→DOUBLE, DECIMAL(p,s)→DECIMAL(p+,s) — the
     * promotions the parquet reader can serve without a rewrite
@@ -2789,22 +2781,34 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       s"$view: ALTER COLUMN TYPE is widening-only — `$exact` is " +
         s"${cur.sql}, and ${target.sql} is not a supported widening " +
         "(INT→BIGINT, INT→DOUBLE, FLOAT→DOUBLE, DECIMAL(p,s)→DECIMAL(p+,s))")
+    // the `col>type` encoding splits at the first '>' (the rename
+    // guard's characters)
     require(!exact.contains('>') && !exact.contains(',') && !exact.contains('"'),
       s"$view: column name `$exact` holds a manifest-reserved character")
-    val dels = manifestDels(view, base)
-    dels.headOption.foreach { d =>
-      val vKey = readDirs(Seq(d), view).columns.head
+    vectorKey(view, base).foreach { vKey =>
       require(!vKey.equalsIgnoreCase(exact),
         s"$view: `$exact` keys the live deletion vectors — OPTIMIZE " +
           "(materialize the vectors) before widening it")
     }
-    publish(view, base + 1, readManifest(view, base),
-      manifestTxns(view, base), dels,
-      drops = Some(manifestDrops(view, base)),
-      renames = Some(manifestRenames(view, base)),
+    publishDdl(view, base,
+      drops = manifestDrops(view, base),
+      renames = manifestRenames(view, base),
       // chained widens collapse to the latest declaration per column
-      widens = Some(manifestWidens(view, base).filterNot(_._1 == exact) :+
-        (exact -> target.catalogString)))
+      widens = manifestWidens(view, base).filterNot(_._1 == exact) :+
+        (exact -> target.catalogString))
+  }
+
+  /** The metadata-only column-DDL publish: `base`'s dirs, vectors, txns
+    * and schemas unchanged (the physical data does not move), with the
+    * given column-DDL lists. Returns the published version.
+    */
+  private def publishDdl(view: String, base: Long, drops: Seq[String],
+                         renames: Seq[(String, String)],
+                         widens: Seq[(String, String)]): Long = {
+    publish(view, base + 1, readManifest(view, base),
+      manifestTxns(view, base), manifestDels(view, base),
+      drops = Some(drops), renames = Some(renames), widens = Some(widens))(
+      schemaOver(view, base), vectorSchema(view, base))
     base + 1
   }
 
@@ -2909,15 +2913,14 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // the consolidated dir is born clean of deletion vectors; the
     // vector carries forward for the big dirs it still applies to
     // (re-applying to the clean dir is a no-op — the rows are gone)
-    val dels = manifestDels(view, base)
     // applyRenames like every other rewrite path: a consolidated dir
     // mixing pre/post-rename rows must be written under the POST-rename
     // names with complete stats — left physical, old-era values would
     // hide under the old name and the new-name stats would classify the
     // dir as untouched (silently missed by keyed MERGE/DELETE/prunes)
-    writeData(view,
-      applyRenames(applyDels(readDirs(small, view), view, dels), view, base)
-        .coalesce(nFiles), dataDir, statsCols)
+    val consolidated = applyRenames(
+      applyDels(readData(view, base, small), view, base), view, base)
+    writeData(view, consolidated.coalesce(nFiles), dataDir, statsCols)
     // maintenance rebase: a compaction racing a stream's blind appends
     // re-publishes at the head with the appended dirs carried verbatim
     // (they simply stay uncompacted until the next run — the valid
@@ -2928,7 +2931,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val smallSet = small.toSet
     publishAtHead(view, base)(blindAppendsOnly(view)) { at =>
       publish(view, at + 1, readManifest(view, at).filterNot(smallSet) :+ dataDir,
-        manifestTxns(view, at), dels)
+        manifestTxns(view, at), manifestDels(view, base))(
+        schemaOver(view, at, consolidated.schema), vectorSchema(view, base))
     }
   }
 
@@ -2977,13 +2981,12 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     require(vs.nonEmpty, s"$view: nothing to optimize")
     val base = vs.max
     val dirs = readManifest(view, base)
-    val prevDels = manifestDels(view, base)
     val bounds = predBounds(pred)
     val touched = dirs.filter(dirMayMatch(view, _, bounds))
     if (touched.isEmpty) return base
     val snapshotSchema = read(view, Some(base)).schema
     val data = alignedTo(applyRenames(
-      applyDels(readDirs(touched, view), view, prevDels), view, base),
+      applyDels(readData(view, base, touched), view, base), view, base),
       snapshotSchema)
     val next = base + 1
     val newDirs =
@@ -3010,8 +3013,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     publishAtHead(view, base)(blindAppendsOnly(view)) { at =>
       val carried = readManifest(view, at).filterNot(touchedSet)
       publish(view, at + 1, carried ++ newDirs, manifestTxns(view, at),
-        if (carried.isEmpty) Nil else prevDels)
-      seedUnraced(view, base, at, carried ++ newDirs, snapshotSchema)
+        if (carried.isEmpty) Nil else manifestDels(view, base))(
+        schemaOver(view, at, snapshotSchema), vectorSchema(view, base))
     }
   }
 
@@ -3098,9 +3101,11 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val baseDirs = readManifest(view, base).toSet
     publishAtHead(view, base, pinned = !baseClean)(blindAppendsOnly(view)) { at =>
       val dirs = dirNames ++ readManifest(view, at).filterNot(baseDirs)
-      // full rewrite from read(): dropped columns are physically gone
-      publish(view, at + 1, dirs, manifestTxns(view, at), drops = Some(Nil))
-      seedUnraced(view, base, at, dirs, cur.schema)
+      // full rewrite from read(): dropped columns are physically gone,
+      // and only carried appends (over a metadata-clean base) add theirs
+      publish(view, at + 1, dirs, manifestTxns(view, at), drops = Some(Nil))(
+        if (at == base) unionSchemas(Seq(cur.schema))
+        else schemaOver(view, at, cur.schema))
     }
   }
 
@@ -3180,7 +3185,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     publish(view, next, readManifest(view, v), manifestTxns(view, base),
       manifestDels(view, v), drops = Some(manifestDrops(view, v)),
       renames = Some(manifestRenames(view, v)),
-      widens = Some(manifestWidens(view, v)))
+      widens = Some(manifestWidens(view, v)))(
+      dataSchema(view, v), vectorSchema(view, v))
     next
   }
 
@@ -3213,7 +3219,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       manifestDels(src, srcV).map(rel),
       drops = Some(manifestDrops(src, srcV)),
       renames = Some(manifestRenames(src, srcV)),
-      widens = Some(manifestWidens(src, srcV)))
+      widens = Some(manifestWidens(src, srcV)))(
+      dataSchema(src, srcV), vectorSchema(src, srcV))
     1L
   }
 
@@ -3313,7 +3320,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       manifestDels(b, head).map(toMain),
       drops = Some(manifestDrops(b, head)),
       renames = Some(manifestRenames(b, head)),
-      widens = Some(manifestWidens(b, head)))
+      widens = Some(manifestWidens(b, head)))(
+      dataSchema(b, head), vectorSchema(b, head))
     base + 1
   }
 
@@ -3357,7 +3365,10 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       renames = Some((manifestRenames(view, mainHead) ++
         manifestRenames(b, head)).distinct),
       widens = Some((manifestWidens(view, mainHead) ++
-        manifestWidens(b, head)).distinct))
+        manifestWidens(b, head)).distinct))(
+      for (m <- dataSchema(view, mainHead); bs <- dataSchema(b, head);
+           u <- unionSchemas(Seq(m, bs))) yield u,
+      vectorSchema(view, mainHead))
     head + 1
   }
 
@@ -3395,7 +3406,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     target.publish(dstView, 1L, dirs, Set.empty, dels,
       drops = Some(manifestDrops(srcView, v)),
       renames = Some(manifestRenames(srcView, v)),
-      widens = Some(manifestWidens(srcView, v)))
+      widens = Some(manifestWidens(srcView, v)))(
+      dataSchema(srcView, v), vectorSchema(srcView, v))
     1L
   }
 
@@ -3547,8 +3559,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
   }
 
   private def syncTxns(id: Long): Set[Long] =
-    manifestField(Files.readString(syncPath(id)), "txns")
-      .map(_.toLong).toSet
+    jsonLongs(parseJson(syncPath(id)), "txns").getOrElse(Set.empty)
 
   /** Txn ids already folded into the CURRENT syncpoint — the
     * store-level (multi-view) counterpart of [[appliedTxns]].
@@ -3577,7 +3588,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val vs = syncpoints
     require(vs.nonEmpty, "no published syncpoint")
     val sid = id.getOrElse(vs.max)
-    manifestField(Files.readString(syncPath(sid)), "pins").map { s =>
+    jsonStrings(parseJson(syncPath(sid)), "pins").map { s =>
       val i = s.lastIndexOf(':')
       s.substring(0, i) -> s.substring(i + 1).toLong
     }.toMap
@@ -3592,24 +3603,6 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     require(pins.contains(view), s"syncpoint does not pin $view (has ${pins.keys})")
     read(view, asOf = Some(pins(view)))
   }
-}
-
-/** A map bounded to `capacity` entries that evicts the least recently
-  * used one (a `get` or `update` counts as a use). Thread-safe: every
-  * access, reads included, reorders the entries under one lock; a
-  * `getOrElseUpdate` computes outside it.
-  */
-private[sources] final class LruMap[K, V](capacity: Int) {
-  private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size() > capacity
-  }
-  def get(k: K): Option[V] = synchronized(Option(m.get(k)))
-  def update(k: K, v: V): Unit = synchronized { m.put(k, v); () }
-  def remove(k: K): Unit = synchronized { m.remove(k); () }
-  def getOrElseUpdate(k: K, v: => V): V =
-    get(k).getOrElse { val computed = v; update(k, computed); computed }
-  /** A snapshot of the keys, least recently used first. */
-  def keys: Seq[K] = synchronized(m.keySet.asScala.toSeq)
 }
 
 object SnapshotStore {

@@ -47,7 +47,7 @@ import org.apache.spark.sql.types.StructType
   *
   * Built on the DataSource v1 streaming `Source` API deliberately: its
   * `getBatch` returns a DataFrame, so the store's existing reads
-  * (merged-schema cache, deletion-vector anti-join, foreign refs)
+  * (manifest-recorded schema, deletion-vector anti-join, foreign refs)
   * compose unchanged; the v2 `MicroBatchStream` would force this
   * library to re-implement parquet row reading behind
   * `PartitionReader`. The schema is pinned at stream start (columns
@@ -315,8 +315,7 @@ class GraftTableSource(spark: SparkSession,
 
   /** Pin every batch to the stream-start schema: same columns, same
     * order, same types (casts cover commit-time widenings; a column a
-    * later commit dropped reads NULL via the store's merged-schema
-    * read).
+    * later commit dropped reads NULL).
     */
   private def align(df: DataFrame): DataFrame = {
     val have = df.columns.toSet

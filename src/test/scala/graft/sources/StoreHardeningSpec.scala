@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Round-15 store hardening: manifest commit timestamps (TIMESTAMP AS
-  * OF's anchor), fence-only publishes for zero-effect txn writes, the
-  * bounded schema cache, and the stats-pruned delete probe.
+  * OF's anchor), fence-only publishes for zero-effect txn writes, and
+  * the stats-pruned delete probe.
   */
 class StoreHardeningSpec extends SparkSpec {
   import spark.implicits._
@@ -60,54 +60,6 @@ class StoreHardeningSpec extends SparkSpec {
     assert(st.read("t").count() == 3L, "replayed txn must not re-execute")
     // an UN-fenced zero-match delete still publishes nothing
     assert(st.deleteWhere("t", "k", col("k") === 888) == st.versions("t").max)
-  }
-
-  // the private cache is observable via its effect only — read it by
-  // reflection on the field (spec-only)
-  private def schemaCacheKeys(st: SnapshotStore): Iterable[Seq[String]] = {
-    val f = st.getClass.getDeclaredFields
-      .find(_.getName.contains("schemaCache")).get
-    f.setAccessible(true)
-    f.get(st).asInstanceOf[LruMap[Seq[String], Any]].keys
-  }
-
-  test("schemaCache stays bounded across a commit loop (O(live dirs), one list)") {
-    val (st, _) = freshStore()
-    (1 to 30).foreach { i =>
-      st.commit("t", Seq((i, s"v$i")).toDF("k", "v"), overwrite = false)
-      st.read("t").count()
-    }
-    // The contract is the bound. Since r18: superseded dir-LIST keys still evict per
-    // commit (at most one list per view), and per-DIR seeds are kept —
-    // they are O(live data dirs), they are what lets readDirs recompose
-    // superseded/time-travel lists (CDC from-version reads, delete
-    // loops) without a footer job, and the cache's 512-entry LRU bound
-    // covers the degenerate case. 30 appends ⇒ 30 dir seeds + 1 list.
-    val keys = schemaCacheKeys(st)
-    assert(keys.size <= 31,
-      s"cache grew to ${keys.size} entries over 30 commits of one view")
-    assert(keys.count(_.lengthCompare(1) > 0) <= 1,
-      "superseded dir-list keys must still evict (one list per view)")
-  }
-
-  test("a merge that re-inserts every carried deleted key seeds no cache key for the dropped vector") {
-    val (st, _) = freshStore()
-    st.commit("t", (1 to 20).map(i => (i, s"v$i")).toDF("k", "v"),
-      overwrite = true, statsCols = Seq("k"))
-    st.deleteWhere("t", "k", col("k") <= 2)
-    val carried = st.manifestDels("t", st.versions("t").max)
-    assert(carried.size == 1, "the delete published one deletion vector")
-    // the source covers both deleted keys: the carried vector subtracts
-    // to nothing, so the merge writes its vector dir and removes it
-    val v = st.mergeInto("t", Seq((1, "a"), (2, "b")).toDF("k", "v"), "k")
-    assert(st.manifestDels("t", v).isEmpty)
-    assert(st.read("t").count() == 20L)
-    val delKeys = schemaCacheKeys(st).flatten
-      .filter(_.contains("/del")).toSeq.distinct
-    assert(delKeys.nonEmpty && delKeys.forall(p => carried.exists(p.endsWith)),
-      s"only the carried vector's dir may stay cached: $delKeys")
-    assert(delKeys.forall(p => new java.io.File(p).exists),
-      s"a cached deletion-vector dir is gone from disk: $delKeys")
   }
 
   test("the delete probe prunes its input dirs by stats (narrow delete on a big table)") {
