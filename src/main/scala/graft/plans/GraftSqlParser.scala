@@ -1407,11 +1407,16 @@ object GraftSqlParser {
       filesExtra: Set[Long] = Set.empty): Long = {
     val cluster = GraftTableRegistry.lookupCluster(name)
     val key = GraftTableRegistry.lookupKey(name).toSeq
+    // an appended row whose key an earlier DELETE left in a deletion
+    // vector must show: the commit resurrects it by the key
+    val resurrect = key.headOption.filter(_ => !overwrite)
     if (cluster.nonEmpty)
       store.commitClustered(view, df, cluster, overwrite = overwrite,
-        statsCols = key, expectedBase = expectedBase, filesExtra = filesExtra)
+        statsCols = key, expectedBase = expectedBase, filesExtra = filesExtra,
+        resurrectKey = resurrect)
     else store.commit(view, df, overwrite = overwrite,
-      expectedBase = expectedBase, statsCols = key, filesExtra = filesExtra)
+      expectedBase = expectedBase, statsCols = key, filesExtra = filesExtra,
+      resurrectKey = resurrect)
   }
 
   /** The snapshot rows a DELETE/UPDATE predicate matches. A SUBQUERY

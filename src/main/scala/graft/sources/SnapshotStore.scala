@@ -2,8 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, NumericType, StructType}
-import org.json4s.{JArray, JInt, JLong, JObject, JString, JValue, jvalue2monadic}
+import org.apache.spark.sql.types.{DataType, NumericType, StructField, StructType}
+import org.json4s.{JArray, JBool, JInt, JLong, JObject, JString, JValue, jvalue2monadic}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -78,10 +78,18 @@ import scala.jdk.CollectionConverters._
   *    diff is consistent even under concurrent commits).
   *  - '''deletion vectors''' ([[deleteWhere]]): row-level DELETE with zero
   *    data-file rewrite — the matching keys publish as a small parquet
-  *    vector the readers anti-join (broadcast); MERGE subtracts
-  *    re-inserted keys (upsert-after-delete resurrects), OPTIMIZE/
-  *    compaction materializes, time travel and restore see each
-  *    version's own vector set.
+  *    vector the readers anti-join (broadcast); MERGE and keyed INSERT
+  *    subtract re-inserted keys (upsert- and insert-after-delete
+  *    resurrect), OPTIMIZE/compaction materializes, time travel and
+  *    restore see each version's own vector set. A point delete (key
+  *    literals only) and the subtractions and folds of its vectors
+  *    stay within a few thousand keys, so they are HELD ON THE DRIVER
+  *    instead: the vector dir holds a key file, not parquet (Delta's
+  *    inline vector idea), and a snapshot whose vectors are all held
+  *    reads through a `NOT key IN (…)` filter with no vector job, while
+  *    MERGE probes and subtracts them on the driver. Both forms sit
+  *    under the same dir names, `dels` list and `delSchema`, and every
+  *    vector read goes through one [[readVectors]].
   *
   * Each manifest records its snapshot's physical schema (`schema`, the
   * Delta `metaData.schemaString` idea): an append that adds a column
@@ -281,9 +289,9 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     hits.maxBy(_._1)._1
   }
 
-  /** The DELETION-VECTOR dirs of snapshot `v`: parquet key lists under
-    * the data root that readers ANTI-JOIN against the snapshot's data
-    * dirs — row-level deletes with zero data-file rewrite (the Delta
+  /** The DELETION-VECTOR dirs of snapshot `v`: key lists under the data
+    * root (parquet, or a key file held on the driver) whose keys
+    * readers drop from the snapshot's data dirs — row-level deletes with zero data-file rewrite (the Delta
     * deletion-vector / Iceberg equality-delete idea, keyed). Absent in
     * pre-DV manifests ⇒ empty. Public so specs/queries can pin the
     * no-rewrite structure.
@@ -744,7 +752,11 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * and mergeInto/replaceWhere align types for you; raw commit trusts
     * its input, the schema-DEFINING primitive).
     * `statsCols` records per-dir min/max for [[readPruned]] /
-    * [[mergeInto]] data skipping. Returns the committed version. Throws
+    * [[mergeInto]] data skipping. `resurrectKey` (the table's row key,
+    * for an INSERT): an appended row whose key a carried deletion
+    * vector holds is made visible in the same commit
+    * ([[publishNewDirs]]) instead of staying suppressed.
+    * Returns the committed version. Throws
     * [[SnapshotConflict]] if `expectedBase` is stale (another writer
     * advanced the table since this writer read it — pinned commits keep
     * strict version semantics). An UNPINNED commit that loses the
@@ -761,14 +773,16 @@ class SnapshotStore(spark: SparkSession, val root: String) {
              txn: Option[Long] = None,
              bloomCols: Seq[String] = Nil,
              txnsExtra: Set[Long] = Set.empty,
-             filesExtra: Set[Long] = Set.empty): Long = {
+             filesExtra: Set[Long] = Set.empty,
+             resurrectKey: Option[String] = None): Long = {
     val vs = versions(view)
     val base = if (vs.isEmpty) 0L else vs.max
     requirePin(view, expectedBase, base)
     val dataDir = newDirName(base + 1, txn)
     writeData(view, df, dataDir, statsCols, bloomCols)
     publishNewDirs(view, base, Seq(dataDir), df.schema, overwrite,
-      pinned = expectedBase.nonEmpty, txn.toSet ++ txnsExtra, filesExtra)
+      pinned = expectedBase.nonEmpty, txn.toSet ++ txnsExtra, filesExtra,
+      resurrectKey.map(k => (k, df, statsCols)))
   }
 
   /** The publish half [[commit]] and [[commitClustered]] share: the
@@ -785,11 +799,36 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * version semantics and still throws; an interleaved commit that
     * already applied one of `txns` / `files` surfaces as a conflict so
     * the exactly-once wrapper re-checks instead of double-applying.
+    * `resurrect` = (row key, written frame, stats columns) of an
+    * append whose rows must show even where a carried deletion vector
+    * holds their key: such keys publish through [[publishRevived]].
     */
   private def publishNewDirs(view: String, base: Long, newDirs: Seq[String],
                              schema: StructType, overwrite: Boolean,
                              pinned: Boolean, txns: Set[Long],
-                             files: Set[Long]): Long =
+                             files: Set[Long],
+                             resurrect: Option[(String, DataFrame, Seq[String])] = None)
+      : Long = {
+    val revived =
+      if (overwrite || base == 0L) None
+      else resurrect.flatMap { case (k, df, statsCols) =>
+        revivedKeys(view, base, k, df, newDirs, schema)
+          .map(res => (k, res, statsCols))
+      }
+    revived match {
+      case Some((k, res, statsCols)) =>
+        publishRevived(view, base, newDirs, schema, pinned, txns, files,
+          k, res, statsCols)
+      case None => publishAppended(view, base, newDirs, schema, overwrite,
+        pinned, txns, files)
+    }
+  }
+
+  /** The plain half of [[publishNewDirs]]: nothing to resurrect. */
+  private def publishAppended(view: String, base: Long, newDirs: Seq[String],
+                              schema: StructType, overwrite: Boolean,
+                              pinned: Boolean, txns: Set[Long],
+                              files: Set[Long]): Long =
     publishAtHead(view, base, pinned, txns, files)(anyShape) { at =>
       // an overwrite's written data defines the physical schema — the
       // dropped-column projection clears with the content it shadowed;
@@ -798,8 +837,9 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       // still recognizes its txn instead of double-appending.
       // deletion vectors: an OVERWRITE replaces content (deletes die
       // with it); an APPEND carries them — appended rows matching a
-      // live deleted key stay suppressed at read (re-insert through
-      // mergeInto, which subtracts re-inserted keys from the vector)
+      // live deleted key stay suppressed at read unless the commit
+      // named its row key (`resurrect`, the INSERT path) — re-insert
+      // through that or mergeInto, which subtract re-inserted keys
       val wipe = overwrite || at == 0L
       val dirs = if (wipe) newDirs else readManifest(view, at) ++ newDirs
       val prevTxns =
@@ -811,6 +851,79 @@ class SnapshotStore(spark: SparkSession, val root: String) {
         if (wipe) unionSchemas(Seq(schema)) else schemaOver(view, at, schema),
         if (wipe) None else vectorSchema(view, at))
     }
+
+  /** The keys of appended `df` (written as `newDirs` under `schema`)
+    * that `base`'s deletion vectors, keyed by `k`, carry — the keys an
+    * INSERT re-inserts after a delete; None when there are none. When
+    * every vector is held on the driver the check runs there: first
+    * against the written dirs' key stats, then against `df`'s keys
+    * when they sit on the driver. Otherwise the written dirs' keys
+    * semi-join the vectors, materialized once.
+    */
+  private def revivedKeys(view: String, base: Long, k: String, df: DataFrame,
+                          newDirs: Seq[String],
+                          schema: StructType): Option[DataFrame] = {
+    val dels = manifestDels(view, base)
+    if (dels.isEmpty || !vectorKey(view, base).contains(k)) return None
+    val vec = readVectors(view, base, dels)
+    def written = readDirs(newDirs, view, Some(schema)).select(col(k))
+    val res =
+      if (!SnapshotStore.isLocal(vec))
+        vec.distinct().join(written.distinct(), Seq(k), "left_semi")
+          .localCheckpoint()
+      else if (dirsHitByKeys(view, newDirs, k, vec)._1.isEmpty) return None
+      else SnapshotStore.localKeyFrame(df, k) match {
+        case Some(kf) =>
+          val ks = kf.collect().flatMap(r => Option(r.get(0))).distinct
+          vec.where(col(k).isin(ks.toIndexedSeq: _*))
+        case None => vec.join(written, Seq(k), "left_semi").localCheckpoint()
+      }
+    if (res.isEmpty) None else Some(res)
+  }
+
+  /** An append that re-inserts keys `res` the base's vectors carry, in
+    * ONE commit, by the resurrection rule [[replaceWhere]] and
+    * [[mergeInto]] follow: every base dir that may hold such a key
+    * (key stats) is rewritten with the vectors applied — the deleted
+    * old rows go — and only then are the keys subtracted from the
+    * vector, so the appended rows show and the old ones stay gone.
+    * Rebase: like [[replaceWhere]]'s, interleaved blind appends whose
+    * dirs provably miss `res`; any removal, vector or metadata change
+    * conflicts.
+    */
+  private def publishRevived(view: String, base: Long, newDirs: Seq[String],
+                             schema: StructType, pinned: Boolean,
+                             txns: Set[Long], files: Set[Long], k: String,
+                             res: DataFrame, statsCols: Seq[String]): Long = {
+    val next = base + 1
+    val snapshotSchema = read(view, Some(base)).schema
+    val (touched, _) = dirsHitByKeys(view, readManifest(view, base), k, res)
+    val keptDir =
+      if (touched.isEmpty) None
+      else {
+        val keep = liveRows(view, base, touched, snapshotSchema)
+        val d = s"b$next-rw" + java.util.UUID.randomUUID().toString.take(8)
+        writeData(view, sizedForBytes(keep, touched.map(dirBytes(view, _)).sum),
+          d, statsCols)
+        Some(d)
+      }
+    val baseDels = manifestDels(view, base)
+    val vec = readVectors(view, base, baseDels)
+    val newDels = writeVector(view, newDelName(next), minusKeys(vec, res, k),
+      bounded = SnapshotStore.isLocal(vec),
+      small = delBytes(view, baseDels) <= dvBroadcastMaxBytes).toSeq
+    val touchedSet = touched.toSet
+    publishAtHead(view, base, pinned, txns, files) { (from, head, e) =>
+      deleteRebaseGuard(view, interleavedDeltas(view, from, head),
+        Some(k -> res), allowDelAdds = false, e)
+    } { at =>
+      publish(view, at + 1,
+        readManifest(view, at).filterNot(touchedSet) ++ keptDir ++ newDirs,
+        manifestTxns(view, at) ++ txns, newDels, filesExtra = files)(
+        schemaOver(view, at, snapshotSchema, schema),
+        vectorSchema(view, base))
+    }
+  }
 
   /** The per-FILE idempotence fence COPY INTO records: a 64-bit
     * FNV-1a hash of the file's (absolute normalized path, size, mtime)
@@ -987,7 +1100,185 @@ class SnapshotStore(spark: SparkSession, val root: String) {
 
   /** Deletion-vector dirs `dels` of version `v` under its vector schema. */
   private def readVectors(view: String, v: Long, dels: Seq[String]): DataFrame =
-    readDirs(dels, view, vectorSchema(view, v))
+    vectorFrame(view, dels, vectorSchema(view, v))
+
+  /** The keys of vector dirs `dels` as one frame under `schema`: parquet
+    * dirs scan, and the keys of dirs held on the driver ([[heldKeys]])
+    * form one local relation. When every dir is held the frame IS that
+    * local relation ([[SnapshotStore.isLocal]]): reading it back, or a
+    * filter or projection over it, runs no job.
+    */
+  private def vectorFrame(view: String, dels: Seq[String],
+                          schema: Option[StructType]): DataFrame = {
+    val (held, files) = dels.partition(heldKeys(view, _).isDefined)
+    val local = heldUnion(view, held, schema.map(_.head)).map { case (f, ks) =>
+      org.apache.spark.sql.graftbridge.DatasetBridge.ofRows(spark,
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+          org.apache.spark.sql.catalyst.types.DataTypeUtils
+            .toAttributes(StructType(Seq(f))),
+          ks.map(k => org.apache.spark.sql.catalyst.InternalRow(k))))
+    }
+    val scanned =
+      if (files.isEmpty) None else Some(readDirs(files, view, schema))
+    (scanned ++ local).reduce(_.unionByName(_))
+  }
+
+  // ------------------------------------------------ driver-held vectors
+
+  /** The file a DRIVER-HELD deletion vector dir holds instead of
+    * parquet: its key column's one-field schema and its distinct
+    * non-NULL keys, each in Catalyst's internal form so it round-trips
+    * exactly (integral, date and timestamp keys as JSON numbers,
+    * decimals as plain strings, strings as base64 UTF-8 bytes, booleans
+    * as JSON booleans). The name has no `_` prefix on purpose: a
+    * parquet scan that ever reached a held dir fails on it instead of
+    * reading it as an empty vector.
+    */
+  private val KeysFile = "keys.json"
+
+  /** Most keys a driver-held vector carries (and a snapshot's held
+    * vectors filter by); a vector that would carry more is written as
+    * parquet. Set from the measured crossover of the two read plans: a
+    * 200k-row table read through a `NOT key IN (…)` filter against the
+    * same keys as a broadcast parquet vector (4 local cores, median
+    * lookup) took 80 vs 129 ms at 64 keys, 106 vs 129 ms at 1024, 137
+    * vs 127 ms at 2048 and 172 vs 143 ms at 3072 — the literal list
+    * every task plans and probes overtakes the vector's build job near
+    * 2k keys, so the bound sits at half that.
+    */
+  private val HeldMaxKeys = 1024
+
+  /** The keys of vector dir `d` when it is held on the driver, decoded
+    * once per dir: dirs are immutable, so the cached answer (held or
+    * not) never goes stale.
+    */
+  private def heldKeys(view: String, d: String): Option[SnapshotStore.HeldKeys] =
+    SnapshotStore.heldKeys(dirPath(view, d).toAbsolutePath)
+
+  /** Every key of `dels` under `field` (default: the first dir's own)
+    * when EVERY dir is held on the driver; None when any is parquet or
+    * `dels` is empty. Dirs written under a narrower type (before a key
+    * widening) cast their keys to `field`'s.
+    */
+  private def heldUnion(view: String, dels: Seq[String],
+                        field: Option[StructField])
+      : Option[(StructField, IndexedSeq[Any])] = {
+    val held = dels.flatMap(heldKeys(view, _))
+    if (dels.isEmpty || held.size < dels.size) None
+    else {
+      val f = field.getOrElse(held.head.field)
+      val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+      Some(f -> held.flatMap { h =>
+        if (h.field.dataType == f.dataType) h.keys
+        else h.keys.map(k => org.apache.spark.sql.catalyst.expressions.Cast(
+          org.apache.spark.sql.catalyst.expressions.Literal(k, h.field.dataType),
+          f.dataType, tz).eval())
+      }.distinct.toIndexedSeq)
+    }
+  }
+
+  /** Write `rows` (one key column, `field`) as the driver-held vector
+    * dir `dir`: NULL keys dropped (a NULL key matches no row), duplicates
+    * dropped. Returns the key count; 0 writes nothing.
+    */
+  private def writeHeld(view: String, dir: String,
+                        field: StructField,
+                        rows: Seq[org.apache.spark.sql.Row]): Int = {
+    val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(field.dataType)
+    val keys = rows.flatMap(r => Option(r.get(0))).map(toInternal).distinct
+    if (keys.nonEmpty) {
+      val path = dataRoot(view).resolve(dir)
+      Files.createDirectories(path)
+      Files.writeString(path.resolve(KeysFile),
+        SnapshotStore.encodeKeys(field, keys))
+    }
+    keys.size
+  }
+
+  /** Write the key frame `keys` as vector dir `dir`; None when it holds
+    * no key (nothing is left on disk). `bounded`: the frame derives from
+    * driver-held vectors only, so it collects (no job when it is still
+    * a local relation) and stays held while within [[HeldMaxKeys]] and
+    * of a by-value key type. Otherwise a parquet key list, distinct,
+    * written through one task when `small` and partitioned past it (a
+    * loop over a huge vector must not rewrite it through one task),
+    * with its count observed during the write.
+    */
+  private def writeVector(view: String, dir: String, keys: DataFrame,
+                          bounded: Boolean, small: Boolean): Option[String] = {
+    val field = keys.schema.head
+    val held =
+      if (!bounded || !SnapshotStore.byValueKey(field.dataType)) None
+      else {
+        val rows = keys.collect()
+        val distinct = rows.flatMap(r => Option(r.get(0))).distinct.length
+        if (distinct > HeldMaxKeys) None
+        else Some(writeHeld(view, dir, field, rows.toSeq))
+      }
+    held match {
+      case Some(n) => Some(dir).filter(_ => n > 0)
+      case None =>
+        val obs = org.apache.spark.sql.Observation()
+        val counted = keys.distinct().observe(obs, count(lit(1)).as("n"))
+        (if (small) counted.coalesce(1) else counted).write
+          .mode("overwrite").parquet(dataRoot(view).resolve(dir).toString)
+        if (obs.get("n").asInstanceOf[Long] > 0L) Some(dir)
+        else {
+          Scratch.deleteRecursively(dataRoot(view).resolve(dir).toFile)
+          None
+        }
+    }
+  }
+
+  /** The rows of key frame `vec` whose key `res` does not carry (a
+    * NULL key survives, as under the anti-join). A `res` already on the
+    * driver filters by its values, so a local `vec` stays local.
+    */
+  private def minusKeys(vec: DataFrame, res: DataFrame,
+                        keyCol: String): DataFrame =
+    if (SnapshotStore.isLocal(res)) {
+      val ks = res.collect().flatMap(r => Option(r.get(0))).distinct
+      if (ks.isEmpty) vec
+      else vec.where(col(keyCol).isNull || !col(keyCol).isin(ks.toIndexedSeq: _*))
+    } else vec.join(res, Seq(keyCol), "left_anti")
+
+  /** A new vector dir name for version `next`. */
+  private def newDelName(next: Long, tag: String = ""): String =
+    s"del$next-$tag" + java.util.UUID.randomUUID().toString.take(8)
+
+  /** How many key literals `pred` lists when it only matches the key
+    * column against literals: `k = lit`, `k IN (lit, …)`, or an OR of
+    * those. None for any other predicate.
+    */
+  private def keyLiterals(pred: Column, keyCol: String): Option[Int] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+    def isKey(e: Expression) = e match {
+      case a: UnresolvedAttribute => a.nameParts.last.equalsIgnoreCase(keyCol)
+      case a: AttributeReference => a.name.equalsIgnoreCase(keyCol)
+      case _ => false
+    }
+    def isLit(e: Expression) = e match {
+      case Literal(v, _) => v != null
+      case _ => false
+    }
+    def walk(e: Expression): Option[Int] = e match {
+      case EqualTo(l, r) if (isKey(l) && isLit(r)) || (isKey(r) && isLit(l)) => Some(1)
+      case In(v, list) if isKey(v) && list.nonEmpty && list.forall(isLit) =>
+        Some(list.size)
+      case Or(l, r) => for (a <- walk(l); b <- walk(r)) yield a + b
+      // Column-API predicates arrive as unresolved function calls
+      case f: UnresolvedFunction => (f.nameParts.last.toLowerCase, f.arguments) match {
+        case ("=" | "==", Seq(l, r)) => walk(EqualTo(l, r))
+        case ("in", v +: list) => walk(In(v, list))
+        case ("or", Seq(l, r)) => walk(Or(l, r))
+        case _ => None
+      }
+      case _ => None
+    }
+    walk(org.apache.spark.sql.graftbridge.ColumnBridge.expressionEager(pred))
+  }
 
   /** The schema a publish over `at` records when it keeps some of
     * `at`'s dirs and adds dirs written under `written`: the union of
@@ -1075,31 +1366,42 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     spark.conf.getOption("spark.graft.dv.broadcastMaxBytes")
       .map(_.toLong).getOrElse(64L << 20)
 
-  /** Anti-join `df` against snapshot `v`'s deletion vectors (each a
-    * one-column parquet key list): the read-time half of
-    * [[deleteWhere]]'s zero-rewrite deletes. No vectors ⇒ the frame
-    * passes through untouched (the common case costs nothing). A small
-    * vector set BROADCASTS (O(deleted keys) to each executor — at
-    * 100 TB the scan side never shuffles for a bounded delete); past
-    * `spark.graft.dv.broadcastMaxBytes` key-file bytes (default 64 MB
-    * — the autoBroadcastJoinThreshold analog, sized from the files on
-    * disk with zero jobs) the hint drops and the anti-join shuffles
-    * both sides instead of OOMing the driver on an unbounded key list.
-    * [[deleteWhere]] escalates to a copy-on-write rewrite before a
-    * vector ever gets that large on its own — this bound is the
-    * defense in depth for accumulated loops and raised thresholds.
+  /** Drop the rows of `df` whose key snapshot `v`'s deletion vectors
+    * carry: the read-time half of [[deleteWhere]]'s zero-rewrite
+    * deletes. No vectors ⇒ the frame passes through untouched (the
+    * common case costs nothing). When every vector is held on the
+    * driver ([[heldUnion]]) and together they carry at most
+    * [[HeldMaxKeys]] keys, the keys become a NULL-safe
+    * `key IS NULL OR NOT key IN (…)` filter: the read plans and runs
+    * with no job of its own. Otherwise the frame anti-joins the
+    * vectors' key frame. A small vector set BROADCASTS (O(deleted keys)
+    * to each executor — at 100 TB the scan side never shuffles for a
+    * bounded delete); past `spark.graft.dv.broadcastMaxBytes` key-file
+    * bytes (default 64 MB — the autoBroadcastJoinThreshold analog,
+    * sized from the files on disk with zero jobs) the hint drops and
+    * the anti-join shuffles both sides instead of OOMing the driver on
+    * an unbounded key list. [[deleteWhere]] escalates to a copy-on-write
+    * rewrite before a vector ever gets that large on its own — this
+    * bound is the defense in depth for accumulated loops and raised
+    * thresholds.
     */
   private def applyDels(df: DataFrame, view: String, v: Long): DataFrame = {
     val dels = manifestDels(view, v)
     if (dels.isEmpty) df
-    else {
-      val delKeys = readVectors(view, v, dels)
-      // a repeated build key cannot change an anti-join's result: only
-      // the shuffled branch dedups, to cut its exchange
-      val hinted =
-        if (delBytes(view, dels) <= dvBroadcastMaxBytes) broadcast(delKeys)
-        else delKeys.distinct()
-      df.join(hinted, Seq(delKeys.columns.head), "left_anti")
+    else heldUnion(view, dels, vectorSchema(view, v).map(_.head)) match {
+      case Some((f, keys)) if keys.size <= HeldMaxKeys =>
+        val k = col(f.name)
+        df.where(k.isNull || !k.isin(keys.map(x =>
+          org.apache.spark.sql.graftbridge.ColumnBridge.column(
+            org.apache.spark.sql.catalyst.expressions.Literal(x, f.dataType))): _*))
+      case None =>
+        val delKeys = readVectors(view, v, dels)
+        // a repeated build key cannot change an anti-join's result: only
+        // the shuffled branch dedups, to cut its exchange
+        val hinted =
+          if (delBytes(view, dels) <= dvBroadcastMaxBytes) broadcast(delKeys)
+          else delKeys.distinct()
+        df.join(hinted, Seq(delKeys.columns.head), "left_anti")
     }
   }
 
@@ -1513,6 +1815,12 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * keyed) and the new manifest references the SAME data dirs plus
     * the vector; readers anti-join it (broadcast while the key files
     * stay under `spark.graft.dv.broadcastMaxBytes`, shuffled past it).
+    * A point delete — `pred` only matches `keyCol` against at most
+    * [[HeldMaxKeys]] literals (`k = 1`, `k IN (1, 2)`, `k = 1 OR k = 2`)
+    * of a by-value key type — collects its matched keys on the same
+    * one-task scan instead and writes the vector as a key file held on
+    * the driver (Delta's inline-vector idea): one job, and reads filter
+    * the keys instead of joining a vector.
     * At 100 TB this is the difference between deleting 0.1% of a table
     * in seconds of metadata+key IO and rewriting every file the
     * predicate touches. A WIDE delete auto-escalates to the
@@ -1610,30 +1918,39 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // the read side distinct()s the vector union anyway, so even a
     // contract-violating caller only costs vector bytes, never rows
     val keys = matchedDirs
-      .map(md => alignedTo(applyRenames(
-        applyDels(readData(view, base, md), view, base), view, base),
-        read(view, Some(base)).schema))
+      .map(md => liveRows(view, base, md, read(view, Some(base)).schema))
       .getOrElse(read(view, Some(base)))
       .where(pred).select(col(keyCol))
-    val next = base + 1
-    val delDir = s"del$next-" + java.util.UUID.randomUUID().toString.take(8)
-    // key count observed DURING the vector write (one job, no re-read)
-    // — a compliance loop's per-delete cost is this job + the publish.
-    // When the probe ran, the known key count sizes the write (≈ 8M
-    // keys per file); the unprobed small-table path stays coalesce(1).
-    val nFiles =
-      if (probedMatched > 0L)
-        math.min(spark.sparkContext.defaultParallelism.toLong,
-          1L + probedMatched / (8L * 1024 * 1024)).toInt
-      else 1
-    val obs = org.apache.spark.sql.Observation()
-    keys.observe(obs, count(lit(1)).as("n")).coalesce(nFiles).write
-      .mode("overwrite").parquet(dataRoot(view).resolve(delDir).toString)
-    if (obs.get("n").asInstanceOf[Long] == 0L) {
-      Scratch.deleteRecursively(dataRoot(view).resolve(delDir).toFile)
-      return fenceOnly(view, base, txn)
-    }
-    publishVector(view, base, keyCol, Some(delDir -> keys.schema), txn)
+    val delDir = newDelName(base + 1)
+    // a predicate of key literals matches at most that many keys: the
+    // one-task key scan collects them and the vector is held on the
+    // driver (no parquet write, and no vector job for later reads)
+    val held = keyLiterals(pred, keyCol).exists(_ <= HeldMaxKeys) &&
+      SnapshotStore.byValueKey(keys.schema.head.dataType)
+    val nKeys =
+      if (held)
+        writeHeld(view, delDir, keys.schema.head, keys.coalesce(1).collect().toSeq)
+          .toLong
+      else {
+        // key count observed DURING the vector write (one job, no
+        // re-read) — a compliance loop's per-delete cost is this job +
+        // the publish. When the probe ran, the known key count sizes
+        // the write (≈ 8M keys per file); the unprobed small-table path
+        // stays coalesce(1).
+        val nFiles =
+          if (probedMatched > 0L)
+            math.min(spark.sparkContext.defaultParallelism.toLong,
+              1L + probedMatched / (8L * 1024 * 1024)).toInt
+          else 1
+        val obs = org.apache.spark.sql.Observation()
+        keys.observe(obs, count(lit(1)).as("n")).coalesce(nFiles).write
+          .mode("overwrite").parquet(dataRoot(view).resolve(delDir).toString)
+        val n = obs.get("n").asInstanceOf[Long]
+        if (n == 0L) Scratch.deleteRecursively(dataRoot(view).resolve(delDir).toFile)
+        n
+      }
+    if (nKeys == 0L) fenceOnly(view, base, txn)
+    else publishVector(view, base, keyCol, Some(delDir -> keys.schema), txn)
   }
 
   /** ONE vector key column per view: a delete keyed by another column
@@ -1666,7 +1983,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     publishAtHead(view, base, txns = txn.toSet) { (from, head, e) =>
       deleteRebaseGuard(view, interleavedDeltas(view, from, head),
         vector.map { case (d, sch) =>
-          keyCol -> readDirs(Seq(d), view, Some(sch)) },
+          keyCol -> vectorFrame(view, Seq(d), Some(sch)) },
         allowDelAdds = true, e)
     } { at =>
       val dels = manifestDels(view, at)
@@ -1698,9 +2015,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // rewrite): the predicate may reference a schema-evolved column
     // the touched dirs predate, and the rewritten dir must carry the
     // full-width rows the whole-table read would produce
-    val keep = alignedTo(applyRenames(
-      applyDels(readData(view, base, touched), view, base), view, base),
-      snapshotSchema)
+    val keep = liveRows(view, base, touched, snapshotSchema)
       .where(!coalesce(hit, lit(false)))
     val sized = sizedForBytes(keep, touched.map(dirBytes(view, _)).sum)
     val dataDir = newDirName(base + 1, txn)
@@ -1735,9 +2050,12 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * union, and a later fold-of-fold re-distincts. A fold whose input
     * exceeds `spark.graft.dv.broadcastMaxBytes` also writes
     * PARTITIONED (no coalesce(1)) — one task must not rewrite an
-    * unbounded key list. Superseded vector dirs stay on disk — older
-    * manifests still reference them for time travel; vacuum GCs them
-    * with their manifests (vectors are retention roots there already).
+    * unbounded key list. Vectors held on the driver weigh no parquet
+    * bytes: a set of only held vectors folds whole, on the driver, and
+    * stays held within [[HeldMaxKeys]]. Superseded vector dirs stay on
+    * disk — older manifests still reference them for time travel;
+    * vacuum GCs them with their manifests (vectors are retention roots
+    * there already).
     */
   private def foldDels(view: String, next: Long, dels: Seq[String],
                        schema: Option[StructType]): Seq[String] = {
@@ -1745,23 +2063,25 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       .map(_.toInt).getOrElse(8)
     if (dels.size <= maxV) dels
     else {
+      // total 0: every vector is held, and the whole set folds
       val sizes = dels.map(d => d -> dirBytes(view, d))
       val total = sizes.map(_._2).sum
       val (bigDir, bigBytes) = sizes.maxBy(_._2)
       // the tiered result is [carried, fold] = 2 dirs — only legal when
       // the threshold admits 2; maxVectors=1 always folds everything
       val toFold =
-        if (maxV >= 2 && bigBytes * 2 >= total) dels.filterNot(_ == bigDir)
+        if (maxV >= 2 && total > 0 && bigBytes * 2 >= total)
+          dels.filterNot(_ == bigDir)
         else dels
       val foldBytes = sizes.collect {
         case (d, b) if toFold.contains(d) => b
       }.sum
-      val dir = s"del$next-fold" + java.util.UUID.randomUUID().toString.take(8)
-      val out = readDirs(toFold, view, schema).distinct()
-      val sized = if (foldBytes <= dvBroadcastMaxBytes) out.coalesce(1) else out
-      sized.write.mode("overwrite")
-        .parquet(dataRoot(view).resolve(dir).toString)
-      if (toFold.size == dels.size) Seq(dir) else Seq(bigDir, dir)
+      // a fold of held vectors only stays held within the key bound
+      val out = vectorFrame(view, toFold, schema)
+      val fold = writeVector(view, newDelName(next, "fold"), out,
+        bounded = SnapshotStore.isLocal(out),
+        small = foldBytes <= dvBroadcastMaxBytes)
+      (if (toFold.size == dels.size) Nil else Seq(bigDir)) ++ fold
     }
   }
 
@@ -1795,7 +2115,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val n = obs.get("n").asInstanceOf[Long]
     if (n == 0L) return fenceOnly(view, base, txn)
     val next = base + 1
-    val delDir = s"del$next-" + java.util.UUID.randomUUID().toString.take(8)
+    val delDir = newDelName(next)
     val nFiles = math.min(spark.sparkContext.defaultParallelism.toLong,
       1L + n / (8L * 1024 * 1024)).toInt
     chk.coalesce(nFiles).write.mode("overwrite")
@@ -1902,9 +2222,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val keptDir =
       if (touched.isEmpty) None
       else {
-        val keep = alignedTo(applyRenames(
-          applyDels(readData(view, base, touched), view, base), view, base),
-          snapshotSchema)
+        val keep = liveRows(view, base, touched, snapshotSchema)
           .where(!coalesce(hit, lit(false)))
         val sized = sizedForBytes(keep, touched.map(dirBytes(view, _)).sum)
         val d = s"b$next-rw" + java.util.UUID.randomUUID().toString.take(8)
@@ -1921,23 +2239,10 @@ class SnapshotStore(spark: SparkSession, val root: String) {
         case None => prevDels
         case Some(res) =>
           val delKeys = readVectors(view, base, prevDels)
-          val remaining = delKeys.distinct()
-            .join(res, Seq(delKeys.columns.head), "left_anti")
-          val delDir = s"del$next-" +
-            java.util.UUID.randomUUID().toString.take(8)
-          val dObs = org.apache.spark.sql.Observation()
-          val counted = remaining.observe(dObs, count(lit(1)).as("n"))
-          val sizedDel =
-            if (delBytes(view, prevDels) <= dvBroadcastMaxBytes)
-              counted.coalesce(1)
-            else counted
-          sizedDel.write.mode("overwrite")
-            .parquet(dataRoot(view).resolve(delDir).toString)
-          if (dObs.get("n").asInstanceOf[Long] > 0L) Seq(delDir)
-          else {
-            Scratch.deleteRecursively(dataRoot(view).resolve(delDir).toFile)
-            Nil
-          }
+          writeVector(view, newDelName(next),
+            minusKeys(delKeys, res, delKeys.columns.head),
+            bounded = SnapshotStore.isLocal(delKeys),
+            small = delBytes(view, prevDels) <= dvBroadcastMaxBytes).toSeq
       }
     // region-swap rebase (UNPINNED callers only — the SQL tier's PK
     // probe pins expectedBase and keeps strict semantics): interleaved
@@ -1996,25 +2301,18 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     requireVectorKey(view, base, keyCol)
     val residual = applyRenames(readData(view, base, live), view, base)
       .where(col(c) < lit(cutoff))
-      .select(col(keyCol)).distinct()
-    val next = base + 1
-    val delDir = s"del$next-" + java.util.UUID.randomUUID().toString.take(8)
+      .select(col(keyCol))
     // residual count observed during the write (no re-read job)
-    val obs = org.apache.spark.sql.Observation()
-    residual.observe(obs, count(lit(1)).as("n")).coalesce(1).write
-      .mode("overwrite").parquet(dataRoot(view).resolve(delDir).toString)
-    val hasResidual = obs.get("n").asInstanceOf[Long] > 0L
-    if (!hasResidual)
-      Scratch.deleteRecursively(dataRoot(view).resolve(delDir).toFile)
-    if (dead.isEmpty && !hasResidual) return fenceOnly(view, base, txn)
+    val delDir = writeVector(view, newDelName(base + 1), residual,
+      bounded = false, small = true)
+    if (dead.isEmpty && delDir.isEmpty) return fenceOnly(view, base, txn)
     // retention-expiry rebase: the retention loop and the live stream
     // are THE canonical concurrent pair on a time-keyed table. Blind
     // appends carry verbatim (expire-then-append — late rows survive
     // until the next sweep) when the residual vector provably cannot
     // touch them (stats probe on the appended dirs); interleaved DV
     // additions commute (the rebase carries the head's vector list).
-    publishVector(view, base, keyCol,
-      Some(delDir -> residual.schema).filter(_ => hasResidual),
+    publishVector(view, base, keyCol, delDir.map(_ -> residual.schema),
       txn, dropped = dead.toSet)
   }
 
@@ -2081,6 +2379,16 @@ class SnapshotStore(spark: SparkSession, val root: String) {
         else col(f.name).cast(f.dataType).as(f.name)
       } else lit(null).cast(f.dataType).as(f.name)): _*)
 
+  /** The live rows of `dirs` of snapshot `base` — its deletion vectors
+    * applied and renames resolved — aligned to `schema`
+    * ([[alignedTo]]: a dir may predate a column other dirs carry): the
+    * read every dir-subset rewrite and key scan starts from.
+    */
+  private def liveRows(view: String, base: Long, dirs: Seq[String],
+                       schema: StructType): DataFrame =
+    alignedTo(applyRenames(applyDels(readData(view, base, dirs), view, base),
+      view, base), schema)
+
   /** Split `dirs` into (hit, miss) by whether SOME key in `keys` falls
     * inside the dir's recorded [min,max] for `keyCol` — the
     * copy-on-write skipping probe [[mergeInto]] and the delete-rewrite
@@ -2140,7 +2448,10 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * answers every key question there: its key set is read back with
     * no job, the dir skipping evaluates on the driver, the anti-join
     * becomes a NULL-safe `NOT key IN (…)` filter, and a carried vector
-    * holding none of its keys carries as it stands. Any other source
+    * holding none of its keys carries as it stands. When the base's
+    * vectors are all held on the driver too, the vector probe, the
+    * subtraction and the touched-dir read's vector filter all run there:
+    * the merge is its one write job. Any other source
     * keeps the distributed plans. A concurrent writer landing first is
     * CLASSIFIED, not blindly thrown: provably-disjoint interleaved commits (blind
     * appends / rewrites that touched none of this merge's read set,
@@ -2177,22 +2488,13 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // merged read surfaces the unscaled value
     val upserts = alignedTo(
       source.where(!isDelete).select(targetCols.map(col): _*), targetSchema)
-    // Schema evolution alignment: a touched dir may predate a column
-    // that exists only in other dirs; project such columns as typed
-    // NULLs (what the whole-table read would yield) before
-    // the anti-join/union instead of failing the select.
-    def aligned(df: DataFrame): DataFrame = alignedTo(df, targetSchema)
     // the source's non-NULL keys when they sit on the driver; a NULL
     // key matches no target row, and would make NOT IN answer NULL
     val localKeyFrame = SnapshotStore.localKeyFrame(source, keyCol)
     val localKeys = localKeyFrame.map(_.collect().flatMap(r => Option(r.get(0))).distinct)
-    // drop the rows of `df` whose key the source carries: a NULL key
-    // survives either way, as it does under the anti-join
-    def unshadowed(df: DataFrame): DataFrame = localKeys match {
-      case Some(ks) => df.where(col(keyCol).isNull || !col(keyCol).isin(ks: _*))
-      case None =>
-        df.join(source.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-    }
+    // drop the rows of `df` whose key the source carries
+    def unshadowed(df: DataFrame): DataFrame = minusKeys(df,
+      localKeyFrame.getOrElse(source.select(col(keyCol)).distinct()), keyCol)
     val (touched, untouched) = dirsHitByKeys(view, dirs, keyCol, source)
     // deletion vectors of the base snapshot: the touched-dir read must
     // honor them (a rewritten dir is BORN clean — resurrecting deleted
@@ -2203,8 +2505,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val rewritten =
       if (touched.isEmpty) upserts
       else
-        unshadowed(aligned(applyRenames(
-          applyDels(readData(view, base, touched), view, base), view, base)))
+        unshadowed(liveRows(view, base, touched, targetSchema))
           .unionByName(upserts)
     // Size the rewrite's file count from the touched dirs' bytes (the
     // dominant term — upserts are the small side of a merge): a keyed
@@ -2237,28 +2538,17 @@ class SnapshotStore(spark: SparkSession, val root: String) {
           delKeys.where(col(keyCol).isin(ks: _*)).limit(1).collect().nonEmpty)
         if (!vectorKey(view, base).contains(keyCol) || !holdsSourceKey) baseDels
         else {
-          val remaining = unshadowed(delKeys.distinct())
-          // write-then-check with an observed count: one execution of
-          // the subtraction plan instead of isEmpty-probe + write. The
-          // write parallelizes past the broadcast byte bound — a merge
-          // loop over a table carrying a huge vector must not rewrite
-          // the full key list through one task every batch (the same
-          // bound foldDels applies).
-          val delDir = s"del$next-" +
-            java.util.UUID.randomUUID().toString.take(8)
-          val obs = org.apache.spark.sql.Observation()
-          val counted = remaining.observe(obs, count(lit(1)).as("n"))
-          val sizedDel =
-            if (delBytes(view, baseDels) <= dvBroadcastMaxBytes)
-              counted.coalesce(1)
-            else counted
-          sizedDel.write
-            .mode("overwrite").parquet(dataRoot(view).resolve(delDir).toString)
-          if (obs.get("n").asInstanceOf[Long] > 0L) Seq(delDir)
-          else {
-            Scratch.deleteRecursively(dataRoot(view).resolve(delDir).toFile)
-            Nil
-          }
+          // write-then-check: one execution of the subtraction plan
+          // instead of isEmpty-probe + write. Subtracted from vectors
+          // held on the driver it stays held (no job when the source's
+          // keys sit on the driver too); a parquet write parallelizes
+          // past the broadcast byte bound — a merge loop over a table
+          // carrying a huge vector must not rewrite the full key list
+          // through one task every batch (the same bound foldDels
+          // applies).
+          writeVector(view, newDelName(next), unshadowed(delKeys),
+            bounded = SnapshotStore.isLocal(delKeys),
+            small = delBytes(view, baseDels) <= dvBroadcastMaxBytes).toSeq
         }
       }
     // Logical conflict detection at publish (Delta ConflictChecker
@@ -2985,9 +3275,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val touched = dirs.filter(dirMayMatch(view, _, bounds))
     if (touched.isEmpty) return base
     val snapshotSchema = read(view, Some(base)).schema
-    val data = alignedTo(applyRenames(
-      applyDels(readData(view, base, touched), view, base), view, base),
-      snapshotSchema)
+    val data = liveRows(view, base, touched, snapshotSchema)
     val next = base + 1
     val newDirs =
       if (clusterCols.nonEmpty) {
@@ -3129,7 +3417,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
                       txn: Option[Long] = None,
                       expectedBase: Option[Long] = None,
                       txnsExtra: Set[Long] = Set.empty,
-                      filesExtra: Set[Long] = Set.empty): Long = {
+                      filesExtra: Set[Long] = Set.empty,
+                      resurrectKey: Option[String] = None): Long = {
     require(clusterCols.nonEmpty, s"$view: commitClustered needs cluster columns")
     val code =
       if (clusterCols.size == 1) col(clusterCols.head).cast("long")
@@ -3144,7 +3433,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // sink never loses a micro-batch to a concurrent batch DML, and
     // never re-runs the range write either
     publishNewDirs(view, base, dirNames, df.schema, overwrite,
-      pinned = expectedBase.nonEmpty, txn.toSet ++ txnsExtra, filesExtra)
+      pinned = expectedBase.nonEmpty, txn.toSet ++ txnsExtra, filesExtra,
+      resurrectKey.map(k => (k, df, allStats)))
   }
 
   /** DESCRIBE HISTORY: one row per retained version — (version, n_dirs,
@@ -3617,21 +3907,115 @@ object SnapshotStore {
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
   /** `df`'s `keyCol` as a one-column frame whose rows sit on the
-    * driver, when [[isLocal]] holds and the key's value equality on
-    * the driver is SQL's: integral, decimal, boolean, date, timestamp
-    * or plain string keys. Floating keys (SQL equates -0.0 and 0.0),
-    * binary, collated and nested keys get None, as does any other
-    * source: the caller keeps its distributed plan.
+    * driver, when [[isLocal]] holds and the key is [[byValueKey]].
+    * An observed local frame (a LocalRelation under the CollectMetrics
+    * an INSERT payload counts its rows with) yields the key column of
+    * its rows without the observation, which stays with the write.
+    * Floating, binary, collated and nested keys get None, as does any
+    * other source: the caller keeps its distributed plan.
     */
   def localKeyFrame(df: DataFrame, keyCol: String): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LocalRelation}
+    val rows = df.queryExecution.optimizedPlan match {
+      case CollectMetrics(_, _, child: LocalRelation, _) =>
+        org.apache.spark.sql.graftbridge.DatasetBridge.ofRows(df.sparkSession, child)
+      case _ => df
+    }
+    val keys = rows.select(col(keyCol))
+    if (byValueKey(keys.schema.head.dataType) && isLocal(keys)) Some(keys)
+    else None
+  }
+
+  /** Whether driver-side value equality of `dt` keys is SQL's:
+    * integral, decimal, boolean, date, timestamp or plain string keys.
+    * Floating keys are not (SQL equates -0.0 and 0.0), nor are binary,
+    * collated or nested ones.
+    */
+  def byValueKey(dt: DataType): Boolean = {
     import org.apache.spark.sql.types._
-    val keys = df.select(col(keyCol))
-    val byValue = keys.schema.head.dataType match {
+    dt match {
       case FloatType | DoubleType => false
       case _: NumericType | BooleanType | DateType | TimestampType |
            TimestampNTZType => true
       case t => t == StringType
     }
-    if (byValue && isLocal(keys)) Some(keys) else None
+  }
+
+  /** A driver-held deletion vector: its key column and its distinct
+    * non-NULL keys in Catalyst's internal form.
+    */
+  private[sources] final case class HeldKeys(field: StructField,
+                                             keys: IndexedSeq[Any])
+
+  // decoded key files by absolute vector dir path (None: a parquet
+  // vector). Vector dirs are immutable and attempt-unique, so an entry
+  // never goes stale; the bound keeps a long-running process flat.
+  private val heldCache =
+    new java.util.LinkedHashMap[Path, Option[HeldKeys]](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Path, Option[HeldKeys]]): Boolean = size > 1024
+    }
+
+  /** The keys of the vector dir at `dir` when it holds a key file. */
+  private[sources] def heldKeys(dir: Path): Option[HeldKeys] =
+    heldCache.synchronized(Option(heldCache.get(dir))).getOrElse {
+      val f = dir.resolve("keys.json")
+      val h = if (!Files.exists(f)) None else Some(decodeKeys(Files.readString(f)))
+      heldCache.synchronized(heldCache.put(dir, h))
+      h
+    }
+
+  /** The key file of `keys` (internal values of `field`'s type). */
+  private[sources] def encodeKeys(field: StructField, keys: Seq[Any]): String = {
+    import org.apache.spark.sql.types._
+    val enc: Any => JValue = field.dataType match {
+      case _: DecimalType => k =>
+        JString(k.asInstanceOf[org.apache.spark.sql.types.Decimal]
+          .toJavaBigDecimal.toPlainString)
+      case StringType => k => JString(java.util.Base64.getEncoder.encodeToString(
+        k.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes))
+      case BooleanType => k => JBool(k.asInstanceOf[Boolean])
+      case _ => k => JLong(k.asInstanceOf[Number].longValue)
+    }
+    org.json4s.jackson.JsonMethods.compact(JObject(
+      "schema" -> JString(StructType(Seq(field)).json),
+      "keys" -> JArray(keys.map(enc).toList)))
+  }
+
+  private def decodeKeys(text: String): HeldKeys = {
+    import org.apache.spark.sql.types._
+    val j = org.json4s.jackson.JsonMethods.parse(text)
+    val JString(schema) = j \ "schema": @unchecked
+    val field = DataType.fromJson(schema).asInstanceOf[StructType].head
+    def long(v: JValue): Long = v match {
+      case JInt(n) => n.toLong
+      case JLong(n) => n
+      case other => throw new IllegalStateException(s"bad vector key $other")
+    }
+    val dec: JValue => Any = field.dataType match {
+      case d: DecimalType => {
+        case JString(x) => org.apache.spark.sql.types.Decimal(
+          BigDecimal(new java.math.BigDecimal(x)), d.precision, d.scale)
+        case other => throw new IllegalStateException(s"bad vector key $other")
+      }
+      case StringType => {
+        case JString(x) => org.apache.spark.unsafe.types.UTF8String.fromBytes(
+          java.util.Base64.getDecoder.decode(x))
+        case other => throw new IllegalStateException(s"bad vector key $other")
+      }
+      case BooleanType => {
+        case JBool(b) => b
+        case other => throw new IllegalStateException(s"bad vector key $other")
+      }
+      case ByteType => v => long(v).toByte
+      case ShortType => v => long(v).toShort
+      case IntegerType | DateType => v => long(v).toInt
+      case _ => v => long(v)
+    }
+    val keys = j \ "keys" match {
+      case JArray(xs) => xs.map(dec).toIndexedSeq
+      case _ => IndexedSeq.empty
+    }
+    HeldKeys(field, keys)
   }
 }
