@@ -801,7 +801,11 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * the exactly-once wrapper re-checks instead of double-applying.
     * `resurrect` = (row key, written frame, stats columns) of an
     * append whose rows must show even where a carried deletion vector
-    * holds their key: such keys publish through [[publishRevived]].
+    * holds their key ([[revivedKeys]]): the same commit rewrites the old
+    * rows of those keys away and subtracts the keys from the vector
+    * ([[resurrection]]), and its rebase becomes [[replaceWhere]]'s —
+    * interleaved blind appends whose dirs provably miss the keys; any
+    * removal, vector or metadata change conflicts.
     */
   private def publishNewDirs(view: String, base: Long, newDirs: Seq[String],
                              schema: StructType, overwrite: Boolean,
@@ -809,27 +813,24 @@ class SnapshotStore(spark: SparkSession, val root: String) {
                              files: Set[Long],
                              resurrect: Option[(String, DataFrame, Seq[String])] = None)
       : Long = {
+    // (key, revived keys, rewritten dirs, kept dir, vector dirs, base schema)
     val revived =
       if (overwrite || base == 0L) None
       else resurrect.flatMap { case (k, df, statsCols) =>
-        revivedKeys(view, base, k, df, newDirs, schema)
-          .map(res => (k, res, statsCols))
+        revivedKeys(view, base, k, newDirs, schema, df).map { res =>
+          val snapshotSchema = read(view, Some(base)).schema
+          val (touched, keptDir, newDels) = resurrection(view, base, Nil,
+            Some(k -> res), snapshotSchema, statsCols)(identity)
+          (k, res, touched.toSet, keptDir, newDels, snapshotSchema)
+        }
       }
-    revived match {
-      case Some((k, res, statsCols)) =>
-        publishRevived(view, base, newDirs, schema, pinned, txns, files,
-          k, res, statsCols)
-      case None => publishAppended(view, base, newDirs, schema, overwrite,
-        pinned, txns, files)
+    val rebase: (Long, Long, SnapshotConflict) => Unit = revived match {
+      case None => anyShape
+      case Some((k, res, _, _, _, _)) => (from, head, e) =>
+        deleteRebaseGuard(view, interleavedDeltas(view, from, head),
+          Some(k -> res), allowDelAdds = false, e)
     }
-  }
-
-  /** The plain half of [[publishNewDirs]]: nothing to resurrect. */
-  private def publishAppended(view: String, base: Long, newDirs: Seq[String],
-                              schema: StructType, overwrite: Boolean,
-                              pinned: Boolean, txns: Set[Long],
-                              files: Set[Long]): Long =
-    publishAtHead(view, base, pinned, txns, files)(anyShape) { at =>
+    publishAtHead(view, base, pinned, txns, files)(rebase) { at =>
       // an overwrite's written data defines the physical schema — the
       // dropped-column projection clears with the content it shadowed;
       // txn history is carried across ALL commit kinds — including
@@ -841,88 +842,107 @@ class SnapshotStore(spark: SparkSession, val root: String) {
       // named its row key (`resurrect`, the INSERT path) — re-insert
       // through that or mergeInto, which subtract re-inserted keys
       val wipe = overwrite || at == 0L
-      val dirs = if (wipe) newDirs else readManifest(view, at) ++ newDirs
+      val (dirs, dels, written) =
+        if (wipe) (newDirs, Nil, Seq(schema))
+        else revived match {
+          case None =>
+            (readManifest(view, at) ++ newDirs, manifestDels(view, at), Seq(schema))
+          case Some((_, _, touched, keptDir, newDels, baseSchema)) =>
+            (readManifest(view, at).filterNot(touched) ++ keptDir ++ newDirs,
+              newDels, Seq(baseSchema, schema))
+        }
       val prevTxns =
         if (at == 0L) Set.empty[Long] else manifestTxns(view, at)
-      publish(view, at + 1, dirs, prevTxns ++ txns,
-        if (wipe) Nil else manifestDels(view, at),
-        filesExtra = files,
+      publish(view, at + 1, dirs, prevTxns ++ txns, dels, filesExtra = files,
         drops = if (wipe) Some(Nil) else None)(
-        if (wipe) unionSchemas(Seq(schema)) else schemaOver(view, at, schema),
+        if (wipe) unionSchemas(written) else schemaOver(view, at, written: _*),
         if (wipe) None else vectorSchema(view, at))
     }
+  }
 
-  /** The keys of appended `df` (written as `newDirs` under `schema`)
-    * that `base`'s deletion vectors, keyed by `k`, carry — the keys an
-    * INSERT re-inserts after a delete; None when there are none. When
-    * every vector is held on the driver the check runs there: first
-    * against the written dirs' key stats, then against `df`'s keys
-    * when they sit on the driver. Otherwise the written dirs' keys
-    * semi-join the vectors, materialized once.
+  /** The keys of `base`'s deletion vectors (keyed by `k`) that rows
+    * written as `newDirs` (under `schema`, from the frame `df`)
+    * re-insert, materialized once; None when there are none. Vectors
+    * held on the driver that no written dir's key stats can hold answer
+    * None there. `df`'s keys filter the vectors when they sit on the
+    * driver (no job when the vectors do too); otherwise the written
+    * keys semi-join them.
     */
-  private def revivedKeys(view: String, base: Long, k: String, df: DataFrame,
-                          newDirs: Seq[String],
-                          schema: StructType): Option[DataFrame] = {
+  private def revivedKeys(view: String, base: Long, k: String,
+                          newDirs: Seq[String], schema: StructType,
+                          df: DataFrame): Option[DataFrame] = {
     val dels = manifestDels(view, base)
     if (dels.isEmpty || !vectorKey(view, base).contains(k)) return None
     val vec = readVectors(view, base, dels)
-    def written = readDirs(newDirs, view, Some(schema)).select(col(k))
-    val res =
-      if (!SnapshotStore.isLocal(vec))
-        vec.distinct().join(written.distinct(), Seq(k), "left_semi")
-          .localCheckpoint()
-      else if (dirsHitByKeys(view, newDirs, k, vec)._1.isEmpty) return None
-      else SnapshotStore.localKeyFrame(df, k) match {
-        case Some(kf) =>
-          val ks = kf.collect().flatMap(r => Option(r.get(0))).distinct
-          vec.where(col(k).isin(ks.toIndexedSeq: _*))
-        case None => vec.join(written, Seq(k), "left_semi").localCheckpoint()
-      }
-    if (res.isEmpty) None else Some(res)
+    if (SnapshotStore.isLocal(vec) &&
+        dirsHitByKeys(view, newDirs, k, vec)._1.isEmpty) return None
+    val res = SnapshotStore.localKeyFrame(df, k) match {
+      case Some(kf) =>
+        val ks = kf.collect().flatMap(r => Option(r.get(0))).distinct
+        vec.where(col(k).isin(ks.toIndexedSeq: _*))
+      case None => vec.join(
+        readDirs(newDirs, view, Some(schema)).select(col(k)), Seq(k), "left_semi")
+    }
+    val fixed = if (SnapshotStore.isLocal(res)) res else res.localCheckpoint()
+    if (fixed.isEmpty) None else Some(fixed)
   }
 
-  /** An append that re-inserts keys `res` the base's vectors carry, in
-    * ONE commit, by the resurrection rule [[replaceWhere]] and
-    * [[mergeInto]] follow: every base dir that may hold such a key
-    * (key stats) is rewritten with the vectors applied — the deleted
-    * old rows go — and only then are the keys subtracted from the
-    * vector, so the appended rows show and the old ones stay gone.
-    * Rebase: like [[replaceWhere]]'s, interleaved blind appends whose
-    * dirs provably miss `res`; any removal, vector or metadata change
-    * conflicts.
+  /** The resurrection rule an INSERT, [[replaceWhere]] and (through
+    * [[subtractVector]]) [[mergeInto]] share, for a commit that writes
+    * rows under keys `res` (key column, keys) that `base`'s vectors
+    * carry: subtracting a key from the vector is only legal once EVERY
+    * physical old row with that key has been rewritten away, or the
+    * deleted old row would show again beside the new one. So the
+    * `forced` dirs and every
+    * other base dir whose key stats may hold a key of `res`
+    * ([[dirsHitByKeys]]) are rewritten once, as one dir of their live
+    * rows (vectors applied — rewritten dirs are born clean) that `keep`
+    * keeps, and then `res` is subtracted from the vector. A commit that
+    * rewrites every base dir drops the vectors with the dirs they
+    * indexed; `res` None carries them as they stand.
+    * @return (rewritten dirs, kept dir, vector dirs to publish)
     */
-  private def publishRevived(view: String, base: Long, newDirs: Seq[String],
-                             schema: StructType, pinned: Boolean,
-                             txns: Set[Long], files: Set[Long], k: String,
-                             res: DataFrame, statsCols: Seq[String]): Long = {
-    val next = base + 1
-    val snapshotSchema = read(view, Some(base)).schema
-    val (touched, _) = dirsHitByKeys(view, readManifest(view, base), k, res)
+  private def resurrection(view: String, base: Long, forced: Seq[String],
+                           res: Option[(String, DataFrame)],
+                           schema: StructType, statsCols: Seq[String])
+                          (keep: DataFrame => DataFrame)
+      : (Seq[String], Option[String], Seq[String]) = {
+    val dirs = readManifest(view, base)
+    val rest = dirs.filterNot(forced.toSet)
+    val touched = forced ++ res.fold(Seq.empty[String]) { case (k, r) =>
+      if (rest.isEmpty) Nil else dirsHitByKeys(view, rest, k, r)._1
+    }
     val keptDir =
       if (touched.isEmpty) None
       else {
-        val keep = liveRows(view, base, touched, snapshotSchema)
-        val d = s"b$next-rw" + java.util.UUID.randomUUID().toString.take(8)
-        writeData(view, sizedForBytes(keep, touched.map(dirBytes(view, _)).sum),
+        val live = keep(liveRows(view, base, touched, schema))
+        val d = s"b${base + 1}-rw" + java.util.UUID.randomUUID().toString.take(8)
+        writeData(view, sizedForBytes(live, touched.map(dirBytes(view, _)).sum),
           d, statsCols)
         Some(d)
       }
     val baseDels = manifestDels(view, base)
-    val vec = readVectors(view, base, baseDels)
-    val newDels = writeVector(view, newDelName(next), minusKeys(vec, res, k),
+    val newDels =
+      if (baseDels.isEmpty || touched.size == dirs.size) Nil
+      else res.fold(baseDels) { case (k, r) => subtractVector(view, base, r, k) }
+    (touched, keptDir, newDels)
+  }
+
+  /** `base`'s vectors minus the keys of `res` (key `k`), written as one
+    * new vector dir (none when no key is left). Subtracted from vectors
+    * held on the driver it stays held ([[writeVector]]; no job when
+    * `res` sits on the driver too); a parquet write parallelizes past
+    * the broadcast byte bound — a loop over a table carrying a huge
+    * vector must not rewrite the full key list through one task every
+    * batch (the same bound [[foldDels]] applies).
+    */
+  private def subtractVector(view: String, base: Long, res: DataFrame,
+                             k: String): Seq[String] = {
+    val dels = manifestDels(view, base)
+    val vec = readVectors(view, base, dels)
+    writeVector(view, newDelName(base + 1), minusKeys(vec, res, k),
       bounded = SnapshotStore.isLocal(vec),
-      small = delBytes(view, baseDels) <= dvBroadcastMaxBytes).toSeq
-    val touchedSet = touched.toSet
-    publishAtHead(view, base, pinned, txns, files) { (from, head, e) =>
-      deleteRebaseGuard(view, interleavedDeltas(view, from, head),
-        Some(k -> res), allowDelAdds = false, e)
-    } { at =>
-      publish(view, at + 1,
-        readManifest(view, at).filterNot(touchedSet) ++ keptDir ++ newDirs,
-        manifestTxns(view, at) ++ txns, newDels, filesExtra = files)(
-        schemaOver(view, at, snapshotSchema, schema),
-        vectorSchema(view, base))
-    }
+      small = delBytes(view, dels) <= dvBroadcastMaxBytes).toSeq
   }
 
   /** The per-FILE idempotence fence COPY INTO records: a 64-bit
@@ -1110,8 +1130,9 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     */
   private def vectorFrame(view: String, dels: Seq[String],
                           schema: Option[StructType]): DataFrame = {
-    val (held, files) = dels.partition(heldKeys(view, _).isDefined)
-    val local = heldUnion(view, held, schema.map(_.head)).map { case (f, ks) =>
+    val decoded = dels.map(d => d -> heldKeys(view, d))
+    val files = decoded.collect { case (d, None) => d }
+    val local = heldUnion(decoded.flatMap(_._2), schema.map(_.head)).map { case (f, ks) =>
       org.apache.spark.sql.graftbridge.DatasetBridge.ofRows(spark,
         org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
           org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -1148,34 +1169,28 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     */
   private val HeldMaxKeys = 1024
 
-  /** The keys of vector dir `d` when it is held on the driver, decoded
-    * once per dir: dirs are immutable, so the cached answer (held or
-    * not) never goes stale.
-    */
+  /** The keys of vector dir `d` when it is held on the driver. */
   private def heldKeys(view: String, d: String): Option[SnapshotStore.HeldKeys] =
     SnapshotStore.heldKeys(dirPath(view, d).toAbsolutePath)
 
-  /** Every key of `dels` under `field` (default: the first dir's own)
-    * when EVERY dir is held on the driver; None when any is parquet or
-    * `dels` is empty. Dirs written under a narrower type (before a key
-    * widening) cast their keys to `field`'s.
+  /** Every key of the held vectors `held` under `field` (default: the
+    * first one's own); None when `held` is empty. Vectors written under
+    * a narrower type (before a key widening) cast their keys to
+    * `field`'s.
     */
-  private def heldUnion(view: String, dels: Seq[String],
+  private def heldUnion(held: Seq[SnapshotStore.HeldKeys],
                         field: Option[StructField])
-      : Option[(StructField, IndexedSeq[Any])] = {
-    val held = dels.flatMap(heldKeys(view, _))
-    if (dels.isEmpty || held.size < dels.size) None
-    else {
-      val f = field.getOrElse(held.head.field)
+      : Option[(StructField, IndexedSeq[Any])] =
+    held.headOption.map { first =>
+      val f = field.getOrElse(first.field)
       val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
-      Some(f -> held.flatMap { h =>
+      f -> held.flatMap { h =>
         if (h.field.dataType == f.dataType) h.keys
         else h.keys.map(k => org.apache.spark.sql.catalyst.expressions.Cast(
           org.apache.spark.sql.catalyst.expressions.Literal(k, h.field.dataType),
           f.dataType, tz).eval())
-      }.distinct.toIndexedSeq)
+      }.distinct.toIndexedSeq
     }
-  }
 
   /** Write `rows` (one key column, `field`) as the driver-held vector
     * dir `dir`: NULL keys dropped (a NULL key matches no row), duplicates
@@ -1370,15 +1385,17 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * carry: the read-time half of [[deleteWhere]]'s zero-rewrite
     * deletes. No vectors ⇒ the frame passes through untouched (the
     * common case costs nothing). When every vector is held on the
-    * driver ([[heldUnion]]) and together they carry at most
+    * driver ([[heldKeys]]) and together they carry at most
     * [[HeldMaxKeys]] keys, the keys become a NULL-safe
     * `key IS NULL OR NOT key IN (…)` filter: the read plans and runs
-    * with no job of its own. Otherwise the frame anti-joins the
-    * vectors' key frame. A small vector set BROADCASTS (O(deleted keys)
-    * to each executor — at 100 TB the scan side never shuffles for a
-    * bounded delete); past `spark.graft.dv.broadcastMaxBytes` key-file
-    * bytes (default 64 MB — the autoBroadcastJoinThreshold analog,
-    * sized from the files on disk with zero jobs) the hint drops and
+    * with no job of its own. Otherwise (a parquet vector, or held
+    * vectors that each stay within the bound but together pass it) the
+    * frame anti-joins the vectors' key frame. A small vector set
+    * BROADCASTS (O(deleted keys) to each executor — at 100 TB the scan
+    * side never shuffles for a bounded delete); past
+    * `spark.graft.dv.broadcastMaxBytes` key-file bytes (default 64 MB —
+    * the autoBroadcastJoinThreshold analog, sized from the files on
+    * disk with zero jobs) the hint drops and
     * the anti-join shuffles both sides instead of OOMing the driver on
     * an unbounded key list. [[deleteWhere]] escalates to a copy-on-write
     * rewrite before a vector ever gets that large on its own — this
@@ -1387,14 +1404,15 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     */
   private def applyDels(df: DataFrame, view: String, v: Long): DataFrame = {
     val dels = manifestDels(view, v)
+    val held = dels.flatMap(heldKeys(view, _))
     if (dels.isEmpty) df
-    else heldUnion(view, dels, vectorSchema(view, v).map(_.head)) match {
-      case Some((f, keys)) if keys.size <= HeldMaxKeys =>
+    else heldUnion(held, vectorSchema(view, v).map(_.head)) match {
+      case Some((f, keys)) if held.size == dels.size && keys.size <= HeldMaxKeys =>
         val k = col(f.name)
         df.where(k.isNull || !k.isin(keys.map(x =>
           org.apache.spark.sql.graftbridge.ColumnBridge.column(
             org.apache.spark.sql.catalyst.expressions.Literal(x, f.dataType))): _*))
-      case None =>
+      case _ =>
         val delKeys = readVectors(view, v, dels)
         // a repeated build key cannot change an anti-join's result: only
         // the shuffled branch dedups, to cut its exchange
@@ -2148,8 +2166,10 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     * vectors: when untouched dirs remain, the carried vector SUBTRACTS
     * the payload's keys first (mergeInto's resurrect contract — a
     * replaced-in row must be visible, not suppressed by a stale
-    * vector; the subtraction reads the just-written payload dir, so
-    * the payload lineage runs once); dropped with the last touched dir
+    * vector; the subtraction reads the payload's keys on the driver
+    * when they sit there and the just-written payload dir otherwise, so
+    * the payload lineage runs once — [[resurrection]], the rule an
+    * INSERT shares); dropped with the last touched dir
     * otherwise. A CLUSTER BY layout is not re-derived for the new dir
     * — the next OPTIMIZE re-clusters, like every engine's
     * partition-overwrite. Same OCC as every commit. Returns the
@@ -2168,7 +2188,6 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // un-probed swap
     requirePin(view, expectedBase, base)
     val dirs = readManifest(view, base)
-    val prevDels = manifestDels(view, base)
     val snapshotSchema = read(view, Some(base)).schema
     val hit = pred.cast("boolean")
     val bounds = predBounds(pred)
@@ -2186,64 +2205,21 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val dataDir = newDirName(next, txn)
     writeData(view, guarded, dataDir, statsCols)
     // RESURRECTION set = payload keys present in the carried vector
-    // (read from the just-written dir — never a payload recompute).
-    // Subtracting a key from the vector is only legal once EVERY
-    // physical old row with that key has been rewritten away — and the
-    // old row may live in a dir the PREDICATE provably misses (pred on
-    // a non-key column): a blind subtraction would resurrect the
-    // deleted old row alongside the payload, a silent duplicate key
-    // and an undone delete. So the key-stat probe ([[dirsHitByKeys]],
-    // mergeInto's discipline) widens the rewrite set to every
-    // untouched dir that may hold a resurrected key; only then is the
-    // subtraction sound.
+    // (read from the payload's driver keys or the just-written dir —
+    // never a payload recompute). The old row of such a key may live in
+    // a dir the PREDICATE provably misses (pred on a non-key column), so
+    // [[resurrection]] widens the rewrite set by the key-stat probe
+    // before it subtracts the keys. Rows of the key-widened dirs never
+    // match the predicate by construction, so the NOT-pred filter keeps
+    // them all. An orthogonally-keyed vector carries verbatim.
     val preUntouched = dirs.filterNot(predTouched.toSet)
-    val (resurrectDirs, resKeys) =
-      if (prevDels.isEmpty || preUntouched.isEmpty) (Seq.empty[String], None)
-      else {
-        val delKeys = readVectors(view, base, prevDels)
-        val vKey = delKeys.columns.head
-        if (!snapshotSchema.fieldNames.contains(vKey))
-          (Seq.empty[String], None) // orthogonally-keyed: carry verbatim
-        else {
-          val written = readDirs(Seq(dataDir), view, Some(guarded.schema))
-          val res = delKeys.distinct()
-            .join(written.select(col(vKey)).distinct(), Seq(vKey),
-              "left_semi").localCheckpoint()
-          if (res.isEmpty) (Seq.empty[String], None)
-          else (dirsHitByKeys(view, preUntouched, vKey, res)._1, Some(res))
-        }
-      }
-    val touched = predTouched ++ resurrectDirs
-    val untouched = dirs.filterNot(touched.toSet)
-    // the kept remainder of the touched dirs, rewritten once (base
-    // vectors applied — rewritten dirs are born clean; rows of the
-    // key-widened dirs never match the predicate by construction, so
-    // the NOT-pred filter keeps them all)
-    val keptDir =
-      if (touched.isEmpty) None
-      else {
-        val keep = liveRows(view, base, touched, snapshotSchema)
-          .where(!coalesce(hit, lit(false)))
-        val sized = sizedForBytes(keep, touched.map(dirBytes(view, _)).sum)
-        val d = s"b$next-rw" + java.util.UUID.randomUUID().toString.take(8)
-        writeData(view, sized, d, statsCols)
-        Some(d)
-      }
-    // carried vector = base vector minus the RESURRECTED keys (all
-    // their physical copies were just rewritten away) — mergeInto's
-    // resurrect contract. All-touched replaces drop the vectors with
-    // the dirs they indexed; no resurrected keys carries verbatim.
-    val newDels =
-      if (prevDels.isEmpty || untouched.isEmpty) Nil
-      else resKeys match {
-        case None => prevDels
-        case Some(res) =>
-          val delKeys = readVectors(view, base, prevDels)
-          writeVector(view, newDelName(next),
-            minusKeys(delKeys, res, delKeys.columns.head),
-            bounded = SnapshotStore.isLocal(delKeys),
-            small = delBytes(view, prevDels) <= dvBroadcastMaxBytes).toSeq
-      }
+    val resKeys =
+      if (preUntouched.isEmpty) None
+      else vectorKey(view, base).filter(snapshotSchema.fieldNames.contains)
+        .flatMap(k => revivedKeys(view, base, k, Seq(dataDir), guarded.schema,
+          alignedTo(df, snapshotSchema)).map(k -> _))
+    val (touched, keptDir, newDels) = resurrection(view, base, predTouched,
+      resKeys, snapshotSchema, statsCols)(_.where(!coalesce(hit, lit(false))))
     // region-swap rebase (UNPINNED callers only — the SQL tier's PK
     // probe pins expectedBase and keeps strict semantics): interleaved
     // blind appends rebase when their dirs' stats PROVE they miss the
@@ -2255,9 +2231,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     publishAtHead(view, base, pinned = expectedBase.nonEmpty,
         txns = txn.toSet) { (from, head, e) =>
       val deltas = interleavedDeltas(view, from, head)
-      deleteRebaseGuard(view, deltas,
-        resKeys.map(r => vectorKey(view, base).get -> r),
-        allowDelAdds = false, e)
+      deleteRebaseGuard(view, deltas, resKeys, allowDelAdds = false, e)
       if (deltas.flatMap(_.added).exists(dirMayMatch(view, _, bounds)))
         throw e
     } { at =>
@@ -2492,9 +2466,8 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // key matches no target row, and would make NOT IN answer NULL
     val localKeyFrame = SnapshotStore.localKeyFrame(source, keyCol)
     val localKeys = localKeyFrame.map(_.collect().flatMap(r => Option(r.get(0))).distinct)
-    // drop the rows of `df` whose key the source carries
-    def unshadowed(df: DataFrame): DataFrame = minusKeys(df,
-      localKeyFrame.getOrElse(source.select(col(keyCol)).distinct()), keyCol)
+    // the keys whose rows the source shadows
+    val srcKeys = localKeyFrame.getOrElse(source.select(col(keyCol)).distinct())
     val (touched, untouched) = dirsHitByKeys(view, dirs, keyCol, source)
     // deletion vectors of the base snapshot: the touched-dir read must
     // honor them (a rewritten dir is BORN clean — resurrecting deleted
@@ -2505,7 +2478,7 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val rewritten =
       if (touched.isEmpty) upserts
       else
-        unshadowed(liveRows(view, base, touched, targetSchema))
+        minusKeys(liveRows(view, base, touched, targetSchema), srcKeys, keyCol)
           .unionByName(upserts)
     // Size the rewrite's file count from the touched dirs' bytes (the
     // dominant term — upserts are the small side of a merge): a keyed
@@ -2527,29 +2500,20 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     // carried vector = base vector minus re-inserted keys (when the
     // vector is keyed by this merge's key — an orthogonal-keyed vector
     // carries verbatim); dropping to NOTHING drops the vector files
-    // from the manifest entirely
+    // from the manifest entirely. Every dir that may hold a source key
+    // was rewritten above, so the subtraction is sound ([[resurrection]])
     val newDels =
       if (baseDels.isEmpty) Nil
       else {
-        val delKeys = readVectors(view, base, baseDels)
         // driver-held keys probe the vector first: when it holds none
         // of them, it carries as it stands, with nothing rewritten
         def holdsSourceKey = localKeys.forall(ks => ks.nonEmpty &&
-          delKeys.where(col(keyCol).isin(ks: _*)).limit(1).collect().nonEmpty)
+          readVectors(view, base, baseDels).where(col(keyCol).isin(ks: _*))
+            .limit(1).collect().nonEmpty)
         if (!vectorKey(view, base).contains(keyCol) || !holdsSourceKey) baseDels
-        else {
-          // write-then-check: one execution of the subtraction plan
-          // instead of isEmpty-probe + write. Subtracted from vectors
-          // held on the driver it stays held (no job when the source's
-          // keys sit on the driver too); a parquet write parallelizes
-          // past the broadcast byte bound — a merge loop over a table
-          // carrying a huge vector must not rewrite the full key list
-          // through one task every batch (the same bound foldDels
-          // applies).
-          writeVector(view, newDelName(next), unshadowed(delKeys),
-            bounded = SnapshotStore.isLocal(delKeys),
-            small = delBytes(view, baseDels) <= dvBroadcastMaxBytes).toSeq
-        }
+        // write-then-check: one execution of the subtraction plan
+        // instead of isEmpty-probe + write
+        else subtractVector(view, base, srcKeys, keyCol)
       }
     // Logical conflict detection at publish (Delta ConflictChecker
     // shape): losing the version race classifies the interleaved
@@ -3947,23 +3911,16 @@ object SnapshotStore {
   private[sources] final case class HeldKeys(field: StructField,
                                              keys: IndexedSeq[Any])
 
-  // decoded key files by absolute vector dir path (None: a parquet
-  // vector). Vector dirs are immutable and attempt-unique, so an entry
-  // never goes stale; the bound keeps a long-running process flat.
-  private val heldCache =
-    new java.util.LinkedHashMap[Path, Option[HeldKeys]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Path, Option[HeldKeys]]): Boolean = size > 1024
-    }
-
-  /** The keys of the vector dir at `dir` when it holds a key file. */
-  private[sources] def heldKeys(dir: Path): Option[HeldKeys] =
-    heldCache.synchronized(Option(heldCache.get(dir))).getOrElse {
-      val f = dir.resolve("keys.json")
-      val h = if (!Files.exists(f)) None else Some(decodeKeys(Files.readString(f)))
-      heldCache.synchronized(heldCache.put(dir, h))
-      h
-    }
+  /** The keys of the vector dir at `dir` when it holds a key file,
+    * decoded on every call: a 1024-key file decodes in about 90 µs and
+    * a one-key file in about 20 µs (4 cores), against 8-30 ms to plan
+    * the read that filters by them, so caching them bought no
+    * measurable read time.
+    */
+  private[sources] def heldKeys(dir: Path): Option[HeldKeys] = {
+    val f = dir.resolve("keys.json")
+    if (!Files.exists(f)) None else Some(decodeKeys(Files.readString(f)))
+  }
 
   /** The key file of `keys` (internal values of `field`'s type). */
   private[sources] def encodeKeys(field: StructField, keys: Seq[Any]): String = {

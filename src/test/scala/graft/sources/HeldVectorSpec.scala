@@ -125,6 +125,44 @@ class HeldVectorSpec extends SparkSpec {
     assert(rows(a.read("t")) == atHead)
   }
 
+  test("held vectors that together pass the key bound read like parquet vectors") {
+    val (a, rootA) = freshStore() // point deletes: held vectors
+    val (b, rootB) = freshStore() // the same deletes as ranges: parquet
+    Seq(a, b).foreach(st => Seq(0, 500, 1000).zipWithIndex.foreach { case (lo, i) =>
+      st.commit("t", (lo until lo + 500).map(k => (k.toLong, s"v$k")).toDF("k", "v"),
+        overwrite = i == 0, statsCols = Seq("k"))
+    })
+    // two deletes of 600 keys each: each vector stays held, their union
+    // of 1200 keys is past the bound a held read filters by
+    def del(lo: Long, hi: Long): Unit = {
+      a.deleteWhere("t", "k", col("k").isin((lo to hi): _*))
+      b.deleteWhere("t", "k", col("k") >= lo && col("k") <= hi)
+    }
+    def both(f: SnapshotStore => Any): Unit = Seq(a, b).foreach(f)
+    def same(f: SnapshotStore => DataFrame): Unit = assert(rows(f(a)) == rows(f(b)))
+    del(0L, 599L)
+    del(900L, 1499L)
+    val v = a.versions("t").max
+    assert(heldFlags(a, rootA, v) == Seq(true, true))
+    assert(heldFlags(b, rootB, v) == Seq(false, false))
+    same(_.read("t"))
+    assert(a.read("t").count() == 300L)
+    same(_.read("t").where(col("k") === 650L))
+    assert(a.read("t").where(col("k") === 5L).isEmpty)
+    // a third point delete probes the live rows, MERGE and REPLACE
+    // WHERE re-insert deleted keys, and the deltas agree
+    del(700L, 701L)
+    both(_.mergeInto("t", Seq((5L, "m5"), (650L, "m650"), (2000L, "m2000"))
+      .toDF("k", "v"), "k", statsCols = Seq("k")))
+    same(_.read("t"))
+    both(_.replaceWhere("t", col("k").between(1000L, 1010L),
+      Seq((1000L, "r1000"), (1010L, "r1010")).toDF("k", "v"), statsCols = Seq("k")))
+    same(_.read("t"))
+    assert(a.read("t").where(col("k").isin(5L, 1000L, 1010L)).count() == 3L)
+    same(_.signedDelta("t", v, a.versions("t").max).get)
+    same(_.read("t", Some(v)))
+  }
+
   test("each by-value key type round-trips exactly through a held vector") {
     val d = (s: String) => java.sql.Date.valueOf(s)
     val ts = (s: String) => java.sql.Timestamp.valueOf(s)
