@@ -22,17 +22,22 @@ import org.apache.spark.sql.functions._
   * so a restarted JVM refreshes yesterday's views by name.
   *
   * Maintenance strategy: AFFECTED-GROUP RECOMPUTE, not delta
-  * arithmetic. The source's changed rows since the last refresh come
-  * from [[graft.sources.SnapshotStore.affectedRows]] (added/removed
-  * dirs + new deletion-vector keys — O(delta), never a full-snapshot
-  * scan); the distinct group tuples touched by those rows are
-  * recomputed FROM THE CURRENT SNAPSHOT restricted to exactly those
+  * arithmetic. Each refresh reads the source's changed rows since the
+  * last refresh once, as [[graft.sources.SnapshotStore.signedDelta]]
+  * (the pre- and post-images of every row whose visibility changed:
+  * added/removed dirs + deletion-vector keys — O(delta), never a
+  * full-snapshot scan); the distinct group tuples touched by those rows
+  * are recomputed FROM THE CURRENT SNAPSHOT restricted to exactly those
   * groups, and groups that vanish are tombstoned. Recompute-based
   * maintenance is exact for EVERY aggregate the defining SQL can spell
   * (min/max/avg/count(DISTINCT …)/HAVING — not just the additive
   * family), and it is IDEMPOTENT: a refresh that crashes after the MV
   * commit but before the synced-version bump simply re-applies the
-  * same window next time and converges, no ledger needed.
+  * same window next time and converges, no ledger needed. Additive
+  * aggregates fold the same delta's signs instead (the additive path
+  * below); a delta the store refuses (vacuumed base, a schema-era
+  * change, vectors keyed by two columns across a window that removed
+  * vectors) recomputes the whole view.
   *
   * Three shapes, classified from the defining SQL:
   *  - `agg`  — `SELECT … FROM <one graft table> [WHERE …] GROUP BY …
@@ -408,28 +413,46 @@ object MaterializedView {
       return Seq(Row(name, "noop", effSynced, toV, 0L,
         mvStore.versions(mvView).lastOption.getOrElse(0L)))
     }
+    // the window's one delta read: the additive fold consumes its
+    // signs, the group and key recomputes its rows (pre- and
+    // post-images of every row whose visibility changed)
+    val delta = srcStore.signedDelta(srcView, effSynced, toV)
+      .getOrElse(return fullRecompute("full"))
     shape match {
       case a: AggShape =>
         additiveRefresh(spark, name, mvStore, mvView, srcStore, srcView,
-          a, effSynced, toV, bumpSynced) match {
+          a, delta, effSynced, toV, bumpSynced) match {
           case Some(rows) => return rows
           case None => // not additive-maintainable — group recompute
         }
       case _ =>
     }
-    val affOpt = srcStore.affectedRows(srcView, effSynced, toV)
-    if (affOpt.isEmpty) return fullRecompute("full")
-    val aff = affOpt.get
     val tmp = tmpName(name)
 
     shape match {
       case AggShape(sel, src, alias, whereSql, groupSql, havingSql, groups) =>
-        // distinct group tuples of every possibly-affected row — the
-        // WHERE is deliberately NOT applied (an update moving a row out
-        // of the filter must still dirty its group); materialized once
-        val affected = aff.select(groups.map { case (e, n) =>
+        // distinct group tuples of every changed row — the WHERE is
+        // deliberately NOT applied (an update moving a row out of the
+        // filter must still dirty its group); materialized once
+        val affected = delta.select(groups.map { case (e, n) =>
           expr(e).as(n) }: _*).distinct().localCheckpoint()
-        val nAff = affected.count()
+        // tighten the recompute scan BEFORE the semi-join: a semi-join
+        // alone pushes nothing into the parquet reader, so for
+        // bare-column group keys a min/max range predicate rides down
+        // as a pushable filter; with a CLUSTER BY layout the group
+        // re-scan then prunes row groups instead of decoding the table.
+        // NULL group values keep an IS NULL arm (NULL never matches
+        // BETWEEN); expression-valued groups skip (nothing pushable).
+        // Purely a superset filter — the semi-join stays the exact
+        // restriction. One probe job over the checkpointed groups reads
+        // everything the branches need: the group count, those ranges
+        // and the NULL-group test the merge-vs-overwrite choice reads.
+        val bare = groups.filter(_._1.trim.matches("""\w+"""))
+        val gname = groups.head._2
+        val probeAggs = Seq(count(lit(1)), count(when(col(gname).isNull, 1))) ++
+          bare.flatMap { case (_, n) => Seq(min(col(n)), max(col(n))) }
+        val pr = affected.agg(probeAggs.head, probeAggs.tail: _*).head()
+        val nAff = pr.getLong(0)
         if (nAff == 0) { // metadata-only commits (fences, syncpoints)
           bumpSynced(toV)
           return Seq(Row(name, "incremental_agg", effSynced, toV, 0L,
@@ -443,32 +466,11 @@ object MaterializedView {
         // make the condition ambiguous)
         val probe = affected.select(groups.map { case (_, n) =>
           col(n).as(s"_mv_g_$n") }: _*)
-        // tighten the recompute scan BEFORE the semi-join: a semi-join
-        // alone pushes nothing into the parquet reader, so for
-        // bare-column group keys a min/max range predicate (collected
-        // from the bounded, already-checkpointed affected set — one
-        // tiny agg) rides down as a pushable filter; with a CLUSTER BY
-        // layout the group re-scan then prunes row groups instead of
-        // decoding the table. NULL group values keep an IS NULL arm
-        // (NULL never matches BETWEEN); expression-valued groups skip
-        // (nothing pushable). Purely a superset filter — the semi-join
-        // stays the exact restriction.
-        val bare = groups.filter(_._1.trim.matches("""\w+"""))
-        val rangePred = if (bare.isEmpty) lit(true) else {
-          val mm = affected.agg(
-            bare.flatMap { case (_, n) =>
-              Seq(min(col(n)).as(s"lo_$n"), max(col(n)).as(s"hi_$n")) }
-              .head,
-            bare.flatMap { case (_, n) =>
-              Seq(min(col(n)).as(s"lo_$n"), max(col(n)).as(s"hi_$n")) }
-              .tail: _*).head()
-          bare.zipWithIndex.map { case ((e, n), i) =>
-            val (lo, hi) = (mm.get(2 * i), mm.get(2 * i + 1))
-            if (lo == null) col(e).isNull
-            else col(e).isNull ||
-              col(e).between(lit(lo), lit(hi))
-          }.reduce(_ && _)
-        }
+        val rangePred = bare.zipWithIndex.map { case ((e, _), i) =>
+          val (lo, hi) = (pr.get(2 + 2 * i), pr.get(3 + 2 * i))
+          if (lo == null) col(e).isNull
+          else col(e).isNull || col(e).between(lit(lo), lit(hi))
+        }.reduceOption(_ && _).getOrElse(lit(true))
         val srcDf = srcStore.read(srcView, Some(toV)).where(rangePred)
         val cond = groups.map { case (e, n) =>
           expr(e) <=> probe(s"_mv_g_$n") }.reduce(_ && _)
@@ -478,9 +480,7 @@ object MaterializedView {
           val recomputed = spark.sql(reassemble(sel, tmp, src, alias,
             whereSql, Some(groupSql), havingSql)).localCheckpoint()
           val mvSchema = mvStore.read(mvView).schema
-          val gname = groups.head._2
-          val singleKeyable = groups.size == 1 &&
-            affected.where(col(gname).isNull).isEmpty
+          val singleKeyable = groups.size == 1 && pr.getLong(1) == 0
           val v =
             if (singleKeyable) {
               // keyed path: upserts + tombstones through the
@@ -516,7 +516,7 @@ object MaterializedView {
         } finally spark.catalog.dropTempView(tmp)
 
       case SpjShape(sel, src, alias, whereSql, key) =>
-        val dirty = aff.select(col(key)).distinct().localCheckpoint()
+        val dirty = delta.select(col(key)).distinct().localCheckpoint()
         val nKeys = dirty.count()
         if (nKeys == 0) {
           bumpSynced(toV)
@@ -561,7 +561,8 @@ object MaterializedView {
   /** The ADDITIVE fast path: when every aggregate is `count(*)` /
     * `count(expr)` / `sum(expr)` / `min(expr)` / `max(expr)` (no
     * HAVING), the refresh folds the source's EXACT signed row delta
-    * ([[graft.sources.SnapshotStore.signedDelta]]) straight into the
+    * (`delta`, [[graft.sources.SnapshotStore.signedDelta]] over the
+    * window — the frame [[refresh]] reads once) straight into the
     * stored aggregates — ZERO base-table reads, not even the affected
     * groups' re-scan. Returns None (→ the group-recompute path) when
     * the shape, the delta, or a type rules it out.
@@ -594,7 +595,7 @@ object MaterializedView {
   private def additiveRefresh(spark: SparkSession, name: String,
       mvStore: graft.sources.SnapshotStore, mvView: String,
       srcStore: graft.sources.SnapshotStore, srcView: String,
-      shape: AggShape, fromV: Long, toV: Long,
+      shape: AggShape, delta: DataFrame, fromV: Long, toV: Long,
       bumpSynced: Long => Unit): Option[Seq[Row]] = {
     val AggShape(sel, src, alias, whereSql, groupSql, havingSql, groups) =
       shape
@@ -649,12 +650,10 @@ object MaterializedView {
     }
     val nCol = kinds.collectFirst { case (n, NStar) => n }
       .getOrElse(return None) // liveness column required
-    val d0 = srcStore.signedDelta(srcView, fromV, toV)
-      .getOrElse(return None)
     // the defining WHERE commutes with the signed multiset — apply it
     // to the delta rows themselves; resolution failures demote
     val d = scala.util.Try(
-      whereSql.map(w => d0.where(expr(w))).getOrElse(d0))
+      whereSql.map(w => delta.where(expr(w))).getOrElse(delta))
       .getOrElse(return None)
     val sign = col("_graft_sign")
     val hasMinMax = kinds.exists(k =>

@@ -2845,8 +2845,8 @@ object CurationQueries {
     // layer of the reference's lambda architecture as ONE SQL object:
     // CREATE classifies the defining query (`agg`), REFRESH maintains
     // it from the source's commit delta (affected-group recompute over
-    // SnapshotStore.affectedRows — added/removed dirs + new DV keys,
-    // never a full-snapshot diff), and a second REFRESH is a no-op.
+    // SnapshotStore.signedDelta — added/removed dirs + DV keys, never a
+    // full-snapshot diff), and a second REFRESH is a no-op.
     // The mixed DML deliberately includes min() — the aggregate delta
     // arithmetic cannot maintain under deletes, but group recompute
     // can. In-query requires pin the incremental mode, the bounded
@@ -2938,7 +2938,7 @@ object CurationQueries {
     // exactly-once micro-batches on the fact table, and ONE
     // REFRESH MATERIALIZED VIEW maintains the batch view incrementally
     // from those commits — blind appends are pure added-dirs in
-    // affectedRows, so the refresh reads the two streamed dirs plus
+    // signedDelta, so the refresh reads the two streamed dirs plus
     // the dirty groups' recompute, never the seeded table. In-query
     // requires pin both stream fences, the incremental mode, the
     // bounded affected-group count, and the MV's exact version chain.

@@ -2622,110 +2622,18 @@ class SnapshotStore(spark: SparkSession, val root: String) {
         payload.map(c => col("_post").getField(c).as(s"${c}_post")): _*)
   }
 
-  /** A SUPERSET of the rows whose snapshot membership changed between
-    * two retained versions — the O(delta) input incremental
-    * view-maintenance needs, computed WITHOUT scanning either full
-    * snapshot (unlike [[diff]], which full-outer-joins the two):
-    *
-    *  - dirs REMOVED between the versions hold every rewritten or
-    *    rewrite-deleted row's pre-image (copy-on-write: a merge/delete
-    *    rewrites whole dirs, so unchanged co-resident rows ride along
-    *    — that over-report is the "superset" and is harmless to a
-    *    recompute-style consumer, which is idempotent per key/group);
-    *  - dirs ADDED hold every inserted/updated row's post-image (plus
-    *    the carried-along unchanged rows, same superset);
-    *  - deletion-vector entries added between the versions suppress
-    *    rows whose dir never moved — their pre-images are read from
-    *    only the `fromV` dirs whose recorded key range can hold a
-    *    vectored key ([[dirsHitByKeys]], the merge path's own probe);
-    *  - deletion vectors REMOVED between the versions (RESTORE rolling
-    *    a delete back; [[foldDels]] replacing vector files) RESURRECT
-    *    any key no `toV` vector still carries — those rows are read
-    *    from the stats-probed KEPT dirs; keys a replacement vector
-    *    re-carries (the fold case) net nothing and are anti-joined
-    *    away.
-    *
-    * Total cost: O(changed dirs + vectored-key dirs) reads — at 100 TB
-    * a refresh after a bounded merge reads the handful of rewritten
-    * dirs, never the table. All subsets surface under the `toV`-era
-    * projection (renames/drops/widens applied), so the output schema
-    * is the [[read]] schema; a column born between the versions is
-    * NULL on pre-era rows, exactly as the merged read would surface it.
-    *
-    * None (caller should fall back to a full recompute) when `fromV`
-    * is no longer retained (vacuumed history — its dirs may be gone)
-    * or when the drops/renames/widens metadata CHANGED between the
-    * versions (the two eras' rows were addressed under different
-    * projections; a recompute from the head is the honest answer).
-    */
-  def affectedRows(view: String, fromV: Long, toV: Long)
-      : Option[DataFrame] = {
-    val vs = versions(view)
-    require(vs.contains(toV), s"$view: v$toV is not a retained version")
-    if (!vs.contains(fromV)) return None
-    if (manifestDrops(view, fromV) != manifestDrops(view, toV) ||
-        manifestRenames(view, fromV) != manifestRenames(view, toV) ||
-        manifestWidens(view, fromV) != manifestWidens(view, toV))
-      return None
-    val pre = readManifest(view, fromV)
-    val post = readManifest(view, toV)
-    val removed = pre.filterNot(post.toSet)
-    val added = post.filterNot(pre.toSet)
-    val delsPre = manifestDels(view, fromV)
-    val delsPost = manifestDels(view, toV)
-    val newDels = delsPost.filterNot(delsPre.toSet)
-    val remDels = delsPre.filterNot(delsPost.toSet)
-    // era projection + FULL-schema padding: a changed-dir subset may
-    // physically lack a column other eras carry (schema evolution by
-    // empty-carrier append) — pad to the toV read schema so consumers
-    // can evaluate any live-column expression, exactly as the merged
-    // full read would surface it
-    val outSchema = read(view, Some(toV)).schema
-    def era(df: DataFrame) =
-      alignedTo(applyDrops(df, view, toV), outSchema)
-    // each version's vectors share one key column, but the column may
-    // differ between the two versions — probe each side by its own key
-    val delParts = vectorKey(view, toV).filter(_ => newDels.nonEmpty)
-      .flatMap { keyCol =>
-        val keys = readVectors(view, toV, newDels).distinct()
-        val (hit, _) = dirsHitByKeys(view, pre, keyCol, keys)
-        if (hit.isEmpty) None
-        else {
-          val hinted =
-            if (delBytes(view, newDels) <= dvBroadcastMaxBytes) broadcast(keys)
-            else keys
-          Some(era(readData(view, fromV, hit))
-            .join(hinted, Seq(keyCol), "left_semi"))
-        }
-      }
-    // vectors REMOVED in the window with their dirs KEPT (RESTORE rolls
-    // a delete back; foldDels replaces vector files on a later delete):
-    // keys suppressed at fromV but by NO toV vector of the same column
-    // are RESURRECTED — their rows are visible again and must surface
-    // here. Keys still suppressed (the fold case: the replacement
-    // vector re-carries them) net nothing and are anti-joined away.
-    val kept = pre.filter(post.toSet)
-    val resurrectParts = resurrected(view, fromV, toV, remDels, kept)
-      .map { case (keyCol, hit, back) =>
-        era(readData(view, toV, hit)).join(back, Seq(keyCol), "left_semi")
-      }
-    val parts =
-      (if (removed.nonEmpty) Seq(era(readData(view, fromV, removed)))
-       else Nil) ++
-        (if (added.nonEmpty) Seq(era(readData(view, toV, added))) else Nil) ++
-        delParts ++ resurrectParts
-    Some(parts.reduceOption(_.unionByName(_))
-      .getOrElse(read(view, Some(toV)).where(lit(false))))
-  }
-
-  /** The EXACT signed multiset delta between two retained versions:
-    * every row visible at `toV` but not `fromV` carries
-    * `_graft_sign = +1`, every row visible at `fromV` but not `toV`
-    * carries `-1` — `visible(toV) = visible(fromV) ⊎ delta` as
-    * multisets, which is precisely what additive-aggregate view
+  /** The EXACT signed multiset delta between two retained versions —
+    * the one O(delta) input incremental view maintenance reads,
+    * computed WITHOUT scanning either full snapshot (unlike [[diff]],
+    * which full-outer-joins the two). Every row visible at `toV` but
+    * not `fromV` carries `_graft_sign = +1`, every row visible at
+    * `fromV` but not `toV` carries `-1` — `visible(toV) = visible(fromV)
+    * ⊎ delta` as multisets, which is what additive-aggregate
     * maintenance folds (a rewritten-but-unchanged row appears on both
-    * sides and cancels). Unlike [[affectedRows]] (a superset), each
-    * leg applies its own version's deletion vectors so suppressed rows
+    * sides and cancels). Without the sign the frame holds the pre-image
+    * and the post-image of every row whose visibility changed: the
+    * groups and keys a recompute-style consumer must re-derive. Each leg
+    * applies its own version's deletion vectors, so suppressed rows
     * never contribute:
     *
     *  - removed dirs, minus `fromV`'s vectors → −1 (their visible
@@ -2733,20 +2641,36 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     *  - added dirs, minus `toV`'s vectors → +1 (a row inserted and
     *    vectored within the window nets zero);
     *  - vector entries ADDED in the window whose keys survive in KEPT
-    *    dirs → −1, read from only the stats-probed kept dirs; keys
-    *    already suppressed at `fromV` are anti-joined away (a
-    *    re-suppression must not double-negate), and removed dirs are
+    *    dirs → −1, read from only the kept dirs whose recorded key
+    *    range can hold such a key ([[dirsHitByKeys]], the merge path's
+    *    own probe); keys already suppressed at `fromV` are subtracted
+    *    (a re-suppression must not double-negate), and removed dirs are
     *    excluded (their leg already negated);
     *  - vector entries REMOVED in the window (RESTORE rolling a delete
     *    back; [[foldDels]] replacing vector files) whose keys no `toV`
     *    vector still carries → +1 from KEPT dirs (resurrection); keys
     *    a replacement vector re-carries net nothing.
     *
-    * Cost: O(changed dirs + vectored-key dirs), like [[affectedRows]].
-    * Same refusals (None): a vacuumed `fromV`, drops/renames/widens
-    * metadata that changed between the versions, or (exactness, not
-    * correctness) vector files keyed by more than one column across a
-    * window that removed vectors.
+    * When the vectors a key leg reads are all held on the driver
+    * ([[heldKeys]]), its key frame stays a local relation: the
+    * subtraction, the dir probe and the key match (a `key IN (…)`
+    * filter) run there, and the leg costs its one scan of the hit dirs.
+    *
+    * Cost: O(changed dirs + vectored-key dirs) — at 100 TB a refresh
+    * after a bounded merge reads the handful of rewritten dirs, never
+    * the table. Every leg surfaces under the `toV`-era projection
+    * (renames/drops/widens applied), so the output is the [[read]]
+    * schema plus `_graft_sign`; a column born between the versions is
+    * NULL on pre-era rows, exactly as the merged read would surface it.
+    *
+    * None (the caller recomputes from the head) when `fromV` is no
+    * longer retained (vacuumed history — its dirs may be gone), when the
+    * drops/renames/widens metadata CHANGED between the versions (the
+    * two eras' rows were addressed under different projections), or
+    * when the window removed vectors while vector files keyed by
+    * different columns coexist across it (the resurrection leg leans on
+    * the one-key-column-per-table write invariant and refuses rather
+    * than reason about cross-column suppression).
     */
   def signedDelta(view: String, fromV: Long, toV: Long)
       : Option[DataFrame] = {
@@ -2766,14 +2690,12 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val delsPost = manifestDels(view, toV)
     val newDels = delsPost.filterNot(delsPre.toSet)
     val remDels = delsPre.filterNot(delsPost.toSet)
-    // vectors REMOVED in the window need a resurrection leg (below);
-    // its exactness leans on the store's one-key-column-per-table
-    // write invariant — if vector files keyed by DIFFERENT columns
-    // somehow coexist across the window, refuse rather than reason
-    // about cross-column suppression
     if (remDels.nonEmpty &&
         (vectorKey(view, fromV).toSeq ++ vectorKey(view, toV)).distinct.size > 1)
       return None
+    // era projection + FULL-schema padding: a changed-dir subset may
+    // physically lack a column other eras carry (schema evolution by
+    // empty-carrier append) — pad to the toV read schema
     val outSchema = read(view, Some(toV)).schema
     def era(df: DataFrame, sign: Int) =
       alignedTo(applyDrops(df, view, toV), outSchema)
@@ -2784,71 +2706,47 @@ class SnapshotStore(spark: SparkSession, val root: String) {
     val posAdded =
       if (added.isEmpty) None
       else Some(era(applyDels(readData(view, toV, added), view, toV), 1))
-    val negVectored = vectorKey(view, toV).filter(_ => newDels.nonEmpty)
-      .flatMap { keyCol =>
-        val preKeyed =
-          if (vectorKey(view, fromV).contains(keyCol)) delsPre else Nil
-        val fresh0 = readVectors(view, toV, newDels).distinct()
-        // a key already suppressed at fromV cannot go invisible twice
-        val fresh =
-          if (preKeyed.isEmpty) fresh0
-          else fresh0.join(readVectors(view, fromV, preKeyed).distinct(),
+    // the rows of the KEPT dirs whose key vectors `dels` of version `v`
+    // carry and no vector of the other version `w` on the same key
+    // column does: the newly suppressed (v = toV, −1) or the
+    // resurrected (v = fromV, +1) rows. Rows of such keys in removed or
+    // added dirs are already right: those legs apply each version's
+    // own vectors.
+    def keyedRows(v: Long, dels: Seq[String], w: Long, sign: Int) =
+      vectorKey(view, v).filter(_ => dels.nonEmpty).flatMap { keyCol =>
+        val others =
+          if (vectorKey(view, w).contains(keyCol)) manifestDels(view, w) else Nil
+        val carried = readVectors(view, v, dels)
+        val held = SnapshotStore.isLocal(carried) // heldUnion deduped it
+        val distinct = if (held) carried else carried.distinct()
+        val keys =
+          if (others.isEmpty) distinct
+          else if (held) minusKeys(distinct, readVectors(view, w, others), keyCol)
+          else distinct.join(readVectors(view, w, others).distinct(),
             Seq(keyCol), "left_anti")
-        val (hit, _) = dirsHitByKeys(view, kept, keyCol, fresh)
-        if (hit.isEmpty) None
-        else {
-          val hinted =
-            if (delBytes(view, newDels ++ preKeyed) <= dvBroadcastMaxBytes)
-              broadcast(fresh)
-            else fresh
-          Some(era(readData(view, toV, hit).join(hinted, Seq(keyCol),
-            "left_semi"), -1))
-        }
+        val (hit, _) = dirsHitByKeys(view, kept, keyCol, keys)
+        val matched =
+          if (hit.isEmpty) None
+          else if (SnapshotStore.isLocal(keys)) {
+            val ks = keys.collect().flatMap(r => Option(r.get(0)))
+            if (ks.isEmpty) None
+            else Some(readData(view, toV, hit)
+              .where(col(keyCol).isin(ks.toIndexedSeq: _*)))
+          } else {
+            val hinted =
+              if (delBytes(view, dels ++ others) <= dvBroadcastMaxBytes)
+                broadcast(keys)
+              else keys
+            Some(readData(view, toV, hit).join(hinted, Seq(keyCol), "left_semi"))
+          }
+        matched.map(era(_, sign))
       }
-    // vectors REMOVED in the window with their dirs KEPT (RESTORE rolls
-    // a delete back; foldDels replaces vector files): keys suppressed at
-    // fromV but by NO toV vector become visible again → +1 from kept
-    // dirs. Keys the replacement vector re-carries (the fold case) are
-    // anti-joined away — suppressed on both sides, no delta. Rows of
-    // resurrected keys in removed dirs contributed nothing at fromV
-    // (delsPre applied) and rows in added dirs already count +1.
-    val posResurrected = resurrected(view, fromV, toV, remDels, kept)
-      .map { case (keyCol, hit, back) =>
-        era(readData(view, toV, hit).join(back, Seq(keyCol), "left_semi"), 1)
-      }
-    val parts = negRemoved.toSeq ++ posAdded.toSeq ++ negVectored ++
-      posResurrected
+    val parts = negRemoved.toSeq ++ posAdded ++ keyedRows(toV, newDels, fromV, -1) ++
+      keyedRows(fromV, remDels, toV, 1)
     Some(parts.reduceOption(_.unionByName(_))
       .getOrElse(read(view, Some(toV)).where(lit(false))
         .withColumn("_graft_sign", lit(1))))
   }
-
-  /** The resurrection leg [[affectedRows]] and [[signedDelta]] share:
-    * the keys of `fromV`'s vectors that `toV` no longer lists
-    * (`remDels`) and that no `toV` vector on the same key column still
-    * carries. Returns that key column, the `kept` dirs whose key stats
-    * may hold such a key, and the (broadcast-hinted) key frame; None
-    * when no kept dir can hold one.
-    */
-  private def resurrected(view: String, fromV: Long, toV: Long,
-                          remDels: Seq[String], kept: Seq[String])
-      : Option[(String, Seq[String], DataFrame)] =
-    vectorKey(view, fromV).filter(_ => remDels.nonEmpty).flatMap { keyCol =>
-      val postSame =
-        if (vectorKey(view, toV).contains(keyCol)) manifestDels(view, toV)
-        else Nil
-      val back0 = readVectors(view, fromV, remDels).distinct()
-      val back =
-        if (postSame.isEmpty) back0
-        else back0.join(readVectors(view, toV, postSame).distinct(),
-          Seq(keyCol), "left_anti")
-      val (hit, _) = dirsHitByKeys(view, kept, keyCol, back)
-      if (hit.isEmpty) None
-      else Some((keyCol, hit,
-        if (delBytes(view, remDels ++ postSame) <= dvBroadcastMaxBytes)
-          broadcast(back)
-        else back))
-    }
 
   // ------------------------------------------------------- maintenance
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.Row
 /** Round-17: declarative MATERIALIZED VIEWs — CREATE seeds and
   * classifies, REFRESH maintains incrementally from the source's
   * commit delta (affected-group recompute over
-  * [[graft.sources.SnapshotStore.affectedRows]]), and every refresh
+  * [[graft.sources.SnapshotStore.signedDelta]]), and every refresh
   * result must equal the from-scratch recompute of the defining query
   * (the maintenance-invisibility contract, same as q154's Scala tier).
   */
@@ -64,7 +64,7 @@ class MaterializedViewSpec extends SparkSpec {
       assert(r.getString(1) == "incremental_agg", r.toString)
       // bounded by the group space (the 200-row seed is ONE dir, so
       // copy-on-write dirties every co-resident group — the O(delta)
-      // multi-dir evidence is the affectedRows test below)
+      // multi-dir evidence is the signedDelta test below)
       assert(r.getLong(4) > 0 && r.getLong(4) <= 7, r.toString)
       assertFresh("mvs_daily", defining)
 
@@ -207,7 +207,7 @@ class MaterializedViewSpec extends SparkSpec {
         "SELECT g, count(*) AS n, min(p) AS mp FROM mvs_src8 GROUP BY g"
       spark.sql(s"CREATE MATERIALIZED VIEW mvs_dv AS $defining")
       // keyed delete through the store API lands a deletion VECTOR —
-      // no data dir moves, the affectedRows DV leg must catch it
+      // no data dir moves, the signedDelta vector leg must catch it
       val (st, view) = GraftTableRegistry.lookup("mvs_src8").get
       val dirsBefore = st.manifestDirs(view).toSet
       import spark.implicits._
@@ -218,6 +218,50 @@ class MaterializedViewSpec extends SparkSpec {
       assert(r.getString(1) == "incremental_agg" && r.getLong(4) >= 1,
         r.toString)
       assertFresh("mvs_dv", defining)
+    }
+  }
+
+  test("held point-delete vectors plus a VALUES MERGE re-inserting a " +
+      "deleted key: agg and spj refreshes equal REFRESH FULL") {
+    val root = freshRoot()
+    withRoot(root) {
+      seedSrc("mvs_src_hv")
+      spark.sql("INSERT INTO mvs_src_hv SELECT id, concat('g', id % 5), " +
+        "id % 3, CAST(id AS DOUBLE) FROM range(200, 400)")
+      // count(*) + sum(DOUBLE) is not additive-maintainable: the group
+      // recompute path; the spj MV drops h = 1 rows through its WHERE
+      val aggDef =
+        "SELECT g, count(*) AS n, sum(p) AS sp FROM mvs_src_hv GROUP BY g"
+      val spjDef = "SELECT k, g, p FROM mvs_src_hv WHERE h <> 1"
+      spark.sql(s"CREATE MATERIALIZED VIEW mvs_hv_agg AS $aggDef")
+      spark.sql(s"CREATE MATERIALIZED VIEW mvs_hv_spj AS $spjDef")
+      val (st, view) = GraftTableRegistry.lookup("mvs_src_hv").get
+      spark.sql("DELETE FROM mvs_src_hv WHERE k = 7")
+      spark.sql("DELETE FROM mvs_src_hv WHERE k IN (250, 251)")
+      val held = st.manifestDels(view, st.versions(view).max).map(d =>
+        java.nio.file.Files.exists(java.nio.file.Paths.get(st.root, view,
+          "data", d, "keys.json")))
+      assert(held.nonEmpty && held.forall(identity),
+        s"precondition: the point deletes must hold their vectors: $held")
+      spark.sql("CREATE OR REPLACE TEMPORARY VIEW mvs_hv_msrc AS SELECT * " +
+        "FROM VALUES (7L, 'g4', 2L, 70.5D), (12L, 'g9', 0L, 1.5D), " +
+        "(900L, 'g1', 1L, 9.0D) AS s(k, g, h, p)")
+      spark.sql("MERGE INTO mvs_src_hv AS t USING mvs_hv_msrc AS s " +
+        "ON t.k = s.k WHEN MATCHED THEN UPDATE SET * " +
+        "WHEN NOT MATCHED THEN INSERT *")
+      assert(spark.sql("SELECT g FROM mvs_src_hv WHERE k = 7").head()
+        .getString(0) == "g4", "precondition: key 7 is back")
+      Seq("mvs_hv_agg" -> ("incremental_agg", aggDef),
+          "mvs_hv_spj" -> ("incremental_spj", spjDef)).foreach {
+        case (mv, (mode, defining)) =>
+          val r = spark.sql(s"REFRESH MATERIALIZED VIEW $mv").head()
+          assert(r.getString(1) == mode, r.toString)
+          val incremental = sortedRows(s"SELECT * FROM $mv")
+          assert(spark.sql(s"REFRESH MATERIALIZED VIEW $mv FULL").head()
+            .getString(1) == "full_forced")
+          assert(incremental == sortedRows(s"SELECT * FROM $mv"), mv)
+          assertFresh(mv, defining)
+      }
     }
   }
 
@@ -239,7 +283,7 @@ class MaterializedViewSpec extends SparkSpec {
     }
   }
 
-  test("affectedRows is O(delta): a bounded merge surfaces far fewer " +
+  test("signedDelta is O(delta): a bounded merge surfaces far fewer " +
       "rows than the table, and metadata eras refuse") {
     val root = freshRoot()
     withRoot(root) {
@@ -255,19 +299,19 @@ class MaterializedViewSpec extends SparkSpec {
       val v1 = st.versions(view).max
       spark.sql("UPDATE mvs_src10 SET p = 0 WHERE k = 7")
       val v2 = st.versions(view).max
-      val aff = st.affectedRows(view, v1, v2).get
+      val aff = st.signedDelta(view, v1, v2).get
       val nAff = aff.count()
       val total = st.read(view).count()
       assert(nAff < total, s"affected $nAff of $total — not a delta")
       assert(aff.where(org.apache.spark.sql.functions.col("k") === 7)
         .count() >= 1, "the changed key's pre/post rows must surface")
       // a rename between the versions changes the projection era —
-      // affectedRows refuses and the caller recomputes fully
+      // signedDelta refuses and the caller recomputes fully
       spark.sql("ALTER TABLE mvs_src10 RENAME COLUMN p TO price")
       val v3 = st.versions(view).max
-      assert(st.affectedRows(view, v1, v3).isEmpty)
+      assert(st.signedDelta(view, v1, v3).isEmpty)
       // a same-era span (both endpoints after the rename) still serves
-      assert(st.affectedRows(view, v3, v3).nonEmpty)
+      assert(st.signedDelta(view, v3, v3).nonEmpty)
     }
   }
 
@@ -538,7 +582,7 @@ class MaterializedViewSpec extends SparkSpec {
       val addDef =
         "SELECT g, count(*) AS n, sum(v) AS sv FROM mvs_add4 GROUP BY g"
       // avg is NOT in the additive family, so this MV pins the GROUP
-      // RECOMPUTE path (affectedRows) across the restore
+      // RECOMPUTE path (its groups from signedDelta) across the restore
       val avgDef =
         "SELECT g, count(*) AS n, avg(v) AS av FROM mvs_add4 GROUP BY g"
       spark.sql(s"CREATE MATERIALIZED VIEW mvs_res_a AS $addDef")

@@ -125,6 +125,31 @@ class HeldVectorSpec extends SparkSpec {
     assert(rows(a.read("t")) == atHead)
   }
 
+  test("signedDelta over held vectors probes, subtracts and matches keys on the driver: " +
+      "1 job per window") {
+    val (st, root) = freshStore()
+    seed(st)
+    val v1 = st.versions("t").max
+    def delta(from: Long, to: Long): Seq[(Long, Int)] = {
+      var got: Array[org.apache.spark.sql.Row] = null
+      val jobs = jobsIn { got = st.signedDelta("t", from, to).get.collect() }
+      assert(jobs == 1, s"v$from -> v$to: $jobs jobs")
+      got.map(r => (r.getAs[Long]("k"), r.getAs[Int]("_graft_sign"))).toSeq.sorted
+    }
+    // a window that only added one held vector: the newly deleted rows
+    val v2 = st.deleteWhere("t", "k", col("k").isin(150L, 151L))
+    assert(heldFlags(st, root, v2) == Seq(true))
+    assert(delta(v1, v2) == Seq((150L, -1), (151L, -1)))
+    // a second held vector beside the first: the keys suppressed at the
+    // window's base are subtracted before the probe
+    val v3 = st.deleteWhere("t", "k", col("k").isin(151L, 250L, 251L))
+    assert(heldFlags(st, root, v3) == Seq(true, true))
+    assert(delta(v2, v3) == Seq((250L, -1), (251L, -1)))
+    // RESTORE drops both vectors: their rows resurrect
+    val v4 = st.restore("t", v1)
+    assert(delta(v3, v4) == Seq((150L, 1), (151L, 1), (250L, 1), (251L, 1)))
+  }
+
   test("held vectors that together pass the key bound read like parquet vectors") {
     val (a, rootA) = freshStore() // point deletes: held vectors
     val (b, rootB) = freshStore() // the same deletes as ranges: parquet

@@ -110,7 +110,7 @@ class SignedDeltaSpec extends SparkSpec {
       "the intra-window insert+delete must cancel, not appear ±1")
   }
 
-  test("refusals mirror affectedRows: unretained base and a " +
+  test("refusals: unretained base and a " +
       "renamed-column era change") {
     val st = freshStore("refuse")
     val view = "t"
