@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * `local[cores]` with shuffle partitions = cores, UTC session time,
   * UI off, WARN logging, the engine's rules and strategies from
   * [[graft.plans.GraftExtensions]] (their only registration), and the
-  * optimizer exclusions of [[Tuning]]. AQE is Spark's default and left
+  * session confs of [[Tuning]]. AQE is Spark's default and left
   * alone. `cores` defaults to `SPARK_GRAFT_CPUS` (32 when unset).
   *
   * Sessions that need their own confs take `Session(n).newSession()`
@@ -21,7 +21,7 @@ object Session {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", Tuning.ExcludedRules)
+      .config(Tuning.Confs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -23,7 +23,11 @@ import org.apache.hadoop.fs.permission.FsPermission
   *
   * Wired in build.sbt (`-Dspark.hadoop.fs.file.impl=...`) so every
   * forked entry point (Bench, Verify, tests) sees it before the
-  * process-wide FileSystem cache first resolves `file://`.
+  * process-wide FileSystem cache first resolves `file://`. That covers
+  * the `FileSystem` API only. Structured Streaming checkpoints reach it
+  * through [[graft.Tuning]]'s checkpoint-manager setting; without that
+  * setting they go through `FileContext`, which resolves `file://` to
+  * Hadoop's own checksummed `LocalFs`, never to this class.
   */
 class FastLocalFileSystem extends LocalFileSystem(new NioPermissionsFileSystem) {
   override def initialize(name: URI, conf: Configuration): Unit = {
